@@ -54,7 +54,7 @@ def _jit_warmup(spark, sf_dir: str) -> None:
     / join keys than any headline query (ADVICE r5: warming on q01's exact
     groupBy(l_returnflag) shape flattered the headline number); per-query
     cold numbers are still recorded by the timed loop. Measured evidence:
-    scripts/bench_warmup_sweep.py."""
+    scripts/bench_warmup_sweep.py at commit 597de90."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import confs as confs_mod
 from . import constraints as constraints_mod
 from . import enums as enums_mod
 from . import macros as macros_mod
@@ -428,6 +429,9 @@ class Compiler:
         # macros/sequences) bumps the epoch and flushes the cache.
         self._plan_cache: "collections.OrderedDict[tuple, DataFrame]" = collections.OrderedDict()
         self._catalog_epoch = 0
+        # spark.psql.* snapshot of the statement being compiled
+        # (confs.read); compile_statement refreshes it once per statement
+        self.confs = dict(confs_mod.PSQL)
         self.last_count_dist_fold = False
         self.last_distinct_elim = False
         self.last_keyed_groupby_elim = False
@@ -463,6 +467,7 @@ class Compiler:
         # compilation mutates per-statement state (_pending_views); one
         # statement at a time per compiler
         text = strip_comments(text)
+        self.confs = confs_mod.read(self.spark)
         self._tune_for_statement_sources(text)
         with self._lock:
             cache_key = self._plan_cache_key(text)
@@ -475,10 +480,7 @@ class Compiler:
                     # statement's pins here is safe — without it, a run
                     # of cache hits after a persist-heavy statement
                     # retains those executor blocks indefinitely.
-                    # SPARK_GRAFT_NO_PINRELEASE_ON_HIT=1 is the A/B
-                    # off-switch for the round-9 change.
-                    if os.environ.get("SPARK_GRAFT_NO_PINRELEASE_ON_HIT") != "1":
-                        self._release_persisted_state()
+                    self._release_persisted_state()
                     return hit
             self._release_persisted_state()
             self.resolver.named_source_hit = False
@@ -538,13 +540,10 @@ class Compiler:
           ``from docs |> select regex… |> order by`` keep their
           parallel scan + range sort).
 
-        Off-switch: spark.psql.localSortSmall=false /
-        SPARK_GRAFT_NO_LOCAL_SORT=1.
+        Off-switch: spark.psql.localSortSmall=false.
         """
         try:
-            if os.environ.get("SPARK_GRAFT_NO_LOCAL_SORT") == "1":
-                return df
-            if self._conf_or_blank("spark.psql.localSortSmall") == "false":
+            if not self.confs["spark.psql.localSortSmall"]:
                 return df
             from .session import STMT_SMALL_BYTES
 
@@ -594,21 +593,6 @@ class Compiler:
                 pass
         self._persisted_views.clear()
 
-    def _conf_or_blank(self, key: str) -> str:
-        # Cheap-path rules: spark.sql.* confs are registered with
-        # defaults (a bare get never throws); spark.psql.* are untyped,
-        # so a "" default skips both the NoSuchElement exception AND the
-        # typed-default validation (RuntimeConfig type-checks defaults
-        # for REGISTERED confs — a "" default on a bytes conf throws).
-        # Exception marshaling through py4j costs ~15ms per miss, which
-        # at 10 unset keys per statement would eat the cache's entire win.
-        try:
-            if key.startswith("spark.psql."):
-                return self.spark.conf.get(key, "") or ""
-            return self.spark.conf.get(key)
-        except Exception:  # noqa: BLE001 — unset or type-gated
-            return ""
-
     def _plan_cache_key(self, text: str) -> tuple | None:
         """Cache key for a pure-query statement, or None if ineligible.
 
@@ -617,51 +601,17 @@ class Compiler:
         stale values), cache not disabled. The key folds in the catalog
         epoch and each literal source path's (size, mtime) so both
         engine-visible DDL/DML and on-disk data changes invalidate."""
-        if os.environ.get("SPARK_GRAFT_NO_PLAN_CACHE") == "1":
+        if not self.confs["spark.psql.planCache"]:
             return None
-        try:
-            if self.spark.conf.get("spark.psql.planCache", "true") == "false":
-                return None
-        except Exception:  # noqa: BLE001
-            pass
         toks = tokenize(text)
         if not toks:
             return None
         kw = toks[0].lower if toks[0].kind == "word" else ""
         if kw not in ("select", "from", "with", "values", "table"):
             return None
-        # physical planning binds to the DataFrame at first action, so
-        # confs that steer compile OR planning must be part of the key
-        # (tests legitimately flip the broadcast threshold and expect a
-        # different plan for the same text)
-        confs = tuple(
-            self._conf_or_blank(k)
-            for k in (
-                "spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.shuffle.partitions",
-                "spark.sql.adaptive.enabled",
-                "spark.sql.files.maxPartitionBytes",
-                "spark.psql.scanReuse.maxBytes",
-                "spark.psql.scanReuse.minBytes",
-                "spark.psql.scanReuse.copartition",
-                "spark.psql.scanReuse.copartitionMinBytes",
-                "spark.psql.blockPersist.minBytes",
-                "spark.psql.eagerAgg",
-                "spark.psql.deferDimJoins",
-                "spark.psql.decorrelateExists",
-                "spark.psql.deferDimJoins.smallBytes",
-                "spark.psql.deferDimJoins.bigBytes",
-                "spark.psql.broadcastHint.maxBytes",
-                "spark.psql.bucketedTwins",
-                "spark.psql.cluster.buckets",
-                "spark.psql.keyJoinElimination",
-                "spark.psql.existsWindowRewrite",
-                "spark.psql.alignExistsProbes",
-                "spark.psql.countDistFold",
-                "spark.psql.distinctElimination",
-                "spark.psql.keyedGroupByElimination",
-            )
-        )
+        # every conf that steers compile (the whole snapshot) or
+        # physical planning, which binds to the DataFrame at first action
+        confs = (tuple(self.confs.values()), confs_mod.planning(self.spark))
         paths = []
         for t in toks:
             if t.kind == "word" and (
@@ -722,7 +672,8 @@ class Compiler:
                 sum(_path_bytes(p) for p in paths) if paths else -1
             )
             if paths:
-                tune_for_statement(self.spark, self._stmt_source_bytes)
+                if self.confs["spark.psql.stmtTune"]:
+                    tune_for_statement(self.spark, self._stmt_source_bytes)
             else:
                 # no path literals — the statement's real inputs (views,
                 # catalog tables, attached names) are invisible to this
@@ -1185,10 +1136,7 @@ class Compiler:
             return df
         if not self.resolver.bucketed_twins and not self.resolver.table_twins:
             return df
-        if (
-            self.spark.conf.get("spark.psql.bucketedTwins", "true").lower()
-            == "false"
-        ):
+        if not self.confs["spark.psql.bucketedTwins"]:
             return df
         toks = tokenize(stmt)
         paths = {
@@ -1299,24 +1247,10 @@ class Compiler:
         """
         if self._in_scan_reuse or df.isStreaming:
             return df
-        try:
-            max_bytes = int(
-                self.spark.conf.get("spark.psql.scanReuse.maxBytes", str(4 * 1024**3))
-            )
-        except ValueError:
-            return df
+        max_bytes = self.confs["spark.psql.scanReuse.maxBytes"]
         if max_bytes <= 0:
             return df
-        from .session import TINY_INPUT_BYTES  # circular at module load
-
-        try:
-            lo_bytes = int(
-                self.spark.conf.get(
-                    "spark.psql.scanReuse.minBytes", str(TINY_INPUT_BYTES)
-                )
-            )
-        except ValueError:
-            lo_bytes = TINY_INPUT_BYTES
+        lo_bytes = self.confs["spark.psql.scanReuse.minBytes"]
         counts = collections.Counter(
             t.text[1:-1] for t in tokenize(stmt) if t.kind == "string"
         )
@@ -1369,20 +1303,10 @@ class Compiler:
             # cost outweighs the balance win (sf0.1 interleaved A/B: on
             # 1.11-2.03s vs off 1.04-1.20s; at sf10 on wins 2x), so tiny
             # inputs keep the plain persist.
-            try:
-                min_bytes = int(
-                    self.spark.conf.get(
-                        "spark.psql.scanReuse.copartitionMinBytes",
-                        str(256 * 1024 * 1024),
-                    )
-                )
-            except ValueError:
-                min_bytes = 256 * 1024 * 1024
             if (
-                self.spark.conf.get(
-                    "spark.psql.scanReuse.copartition", "true"
-                ).lower() != "false"
-                and _path_bytes(p) >= min_bytes
+                self.confs["spark.psql.scanReuse.copartition"]
+                and _path_bytes(p)
+                >= self.confs["spark.psql.scanReuse.copartitionMinBytes"]
                 and not _order_sensitive_stmt(stmt)
             ):
                 part_col = _repeated_exchange_col(plan, list(ov.columns))
@@ -1440,7 +1364,7 @@ class Compiler:
                 >= 3
                 and not (
                     0 <= getattr(self, "_stmt_source_bytes", -1)
-                    < _block_persist_min_bytes(self.spark)
+                    < self.confs["spark.psql.blockPersist.minBytes"]
                 )
             ):
                 # name appears in its `<name> as` binding plus ≥2 uses →
@@ -2736,14 +2660,7 @@ class Compiler:
             # it: spark.psql.insertView.maxRows (default 50M, 0 disables)
             # turns a silent cluster-memory pin into a clear error telling
             # the user to INSERT into a real table instead.
-            try:
-                max_rows = int(
-                    self.spark.conf.get(
-                        "spark.psql.insertView.maxRows", str(50_000_000)
-                    )
-                )
-            except ValueError:
-                max_rows = 50_000_000
+            max_rows = self.confs["spark.psql.insertView.maxRows"]
             if max_rows and n > max_rows:
                 pinned.unpersist()
                 raise PsqlCompileError(
@@ -3045,8 +2962,7 @@ class Compiler:
         # ("Can't acquire 536870912 bytes"). A pay-once layout decision
         # must derive from the DATA, not an ephemeral runtime conf.
         buckets: int | None = None
-        explicit = kv.get("buckets", self.spark.conf.get(
-            "spark.psql.cluster.buckets", None))
+        explicit = kv.get("buckets", self.confs["spark.psql.cluster.buckets"])
         if explicit is not None:
             try:
                 buckets = int(explicit)
@@ -3055,10 +2971,7 @@ class Compiler:
                     f"cluster declared keys: bad buckets= value {explicit!r}"
                 )
         raw_minbytes = kv.get(
-            "minbytes",
-            self.spark.conf.get(
-                "spark.psql.cluster.minBytes", str(64 * 1024 * 1024)
-            ),
+            "minbytes", self.confs["spark.psql.cluster.minBytes"]
         )
         try:
             min_bytes = int(raw_minbytes)
@@ -3153,17 +3066,8 @@ class Compiler:
             # multiple of cores so the one-file-per-bucket write runs in
             # full waves, and cap via maxBuckets against runaway file
             # counts (a 100 TB deployment pins buckets= explicitly).
-            try:
-                target = int(self.spark.conf.get(
-                    "spark.psql.cluster.bucketTargetBytes",
-                    str(32 * 1024 * 1024)))
-                maxb = int(self.spark.conf.get(
-                    "spark.psql.cluster.maxBuckets", "65536"))
-            except ValueError as exc:
-                raise PsqlCompileError(
-                    f"cluster declared keys: bad sizing conf ({exc}); "
-                    "bucketTargetBytes/maxBuckets must be plain integers"
-                )
+            target = self.confs["spark.psql.cluster.bucketTargetBytes"]
+            maxb = self.confs["spark.psql.cluster.maxBuckets"]
             cores = max(self.spark.sparkContext.defaultParallelism, 1)
             biggest = max(eligible_bytes, default=0)
             buckets = max(cores, 8, -(-biggest // max(target, 1)))
@@ -3176,7 +3080,7 @@ class Compiler:
         # tasks (BENCH_TWIN_WRITE_ANATOMY_sf10_r14.json: 3-twin total
         # 36.5/32.5 s sequential-snappy → 31.4/29.3 s; registration stays
         # on this thread, in todo order, after all writes land).
-        codec = self.spark.conf.get("spark.psql.cluster.codec", "zstd")
+        codec = self.confs["spark.psql.cluster.codec"]
         if codec.lower() in ("", "none", "default"):
             codec = None
 
@@ -3209,11 +3113,7 @@ class Compiler:
         if prepared:
             from concurrent.futures import ThreadPoolExecutor
 
-            seq = (
-                self.spark.conf.get(
-                    "spark.psql.cluster.parallelWrites", "true"
-                ).lower() == "false"
-            )
+            seq = not self.confs["spark.psql.cluster.parallelWrites"]
             # Per-job failure capture: twins that DID materialize must
             # still register even when a sibling write dies (disk full,
             # task failure) — otherwise the finished tables sit orphaned
@@ -3636,14 +3536,7 @@ class Compiler:
         step_txt = body[btoks[split_at].end :]
         if not re.search(rf"(?i)\b{re.escape(name)}\b", step_txt):
             return None  # not actually self-referencing
-        try:
-            max_iter = int(
-                self.spark.conf.get(
-                    "spark.psql.recursiveCte.maxIterations", "1000"
-                )
-            )
-        except ValueError:
-            max_iter = 1000
+        max_iter = self.confs["spark.psql.recursiveCte.maxIterations"]
 
         def _named(df: DataFrame) -> DataFrame:
             if cte_cols:
@@ -4007,16 +3900,11 @@ class Compiler:
         whose output is bit-identical to its input rows). DuckDB does
         the same elimination from its own declared PRIMARY KEYs; file
         scans can't carry DDL, hence the session-level DECLARE surface.
-        Off: spark.psql.keyJoinElimination=false /
-        SPARK_GRAFT_NO_KEY_ELIM=1."""
+        Off: spark.psql.keyJoinElimination=false."""
         self.last_eliminated_joins = []
         if not self.constraints.fks:
             return
-        if (
-            self.spark.conf.get("spark.psql.keyJoinElimination", "true")
-            != "true"
-            or os.environ.get("SPARK_GRAFT_NO_KEY_ELIM") == "1"
-        ):
+        if not self.confs["spark.psql.keyJoinElimination"]:
             return
         try:
             head = parse_head(head_text)
@@ -4250,19 +4138,14 @@ class Compiler:
         elimination uses), and a declared key is unique AND non-null
         (VERIFY checks both), so NULL-key duplicate rows cannot exist.
         DISTINCT ON is a different operator and is never touched. Off:
-        spark.psql.distinctElimination=false /
-        SPARK_GRAFT_NO_DISTINCT_ELIM=1."""
+        spark.psql.distinctElimination=false."""
         self.last_distinct_elim = False
         if not self.constraints.uniques:
             return
-        dist_on = (
-            self.spark.conf.get("spark.psql.distinctElimination", "true")
-            == "true"
-            and os.environ.get("SPARK_GRAFT_NO_DISTINCT_ELIM") != "1"
-        )
+        dist_on = self.confs["spark.psql.distinctElimination"]
         # the walk also feeds the keyed GROUP-BY elimination's stage
         # annotations, so it runs when EITHER pass is on
-        if not dist_on and not self._keyed_groupby_on():
+        if not dist_on and not self.confs["spark.psql.keyedGroupByElimination"]:
             return
         try:
             head = parse_head(head_text)
@@ -4350,13 +4233,6 @@ class Compiler:
             if not prov:
                 return
 
-    def _keyed_groupby_on(self) -> bool:
-        return (
-            self.spark.conf.get("spark.psql.keyedGroupByElimination", "true")
-            == "true"
-            and os.environ.get("SPARK_GRAFT_NO_KEYED_GROUPBY") != "1"
-        )
-
     # aggregate → single-row expression, by function (x = the raw arg
     # text; every rewrite is exact over a ONE-row group)
     _KEYED_AGG_FNS = frozenset(
@@ -4380,13 +4256,12 @@ class Compiler:
         or FILTER inside an aggregate argument we can't prove single-row
         equivalent (DISTINCT over one row IS that row, so a bare
         `distinct ` prefix strips), any unrecognized select item. Off:
-        spark.psql.keyedGroupByElimination=false /
-        SPARK_GRAFT_NO_KEYED_GROUPBY=1."""
+        spark.psql.keyedGroupByElimination=false."""
         if st.select is None or st.group_by is None or st.joins is not None:
             return None
         if not getattr(st, "_unique_after_join", False):
             return None
-        if not self._keyed_groupby_on():
+        if not self.confs["spark.psql.keyedGroupByElimination"]:
             return None
         if any(
             [st.having, st.qualify, st.window, st.sample, st.pivot,
@@ -4665,14 +4540,11 @@ class Compiler:
         zero-member buckets are filtered (the original emits no row for
         an empty group). Downstream stages see stage 3's projection
         barrier, so no further observer check is needed. Off:
-        spark.psql.countDistFold=false / SPARK_GRAFT_NO_COUNT_FOLD=1."""
+        spark.psql.countDistFold=false."""
         self.last_count_dist_fold = False
         if len(parsed) < 3 or not self.constraints.fks:
             return None
-        if (
-            self.spark.conf.get("spark.psql.countDistFold", "true") != "true"
-            or os.environ.get("SPARK_GRAFT_NO_COUNT_FOLD") == "1"
-        ):
+        if not self.confs["spark.psql.countDistFold"]:
             return None
         try:
             head = parse_head(head_text)
@@ -5076,16 +4948,9 @@ class Compiler:
         EXISTS false, as in SQL. Replaces two fact self-joins with ONE
         window shuffle of the prefix relation — measured on q21
         (BENCH_EXISTS_WINDOW_AB_*.json). Off:
-        spark.psql.existsWindowRewrite=false /
-        SPARK_GRAFT_NO_EXISTS_WINDOW=1."""
+        spark.psql.existsWindowRewrite=false."""
         self.last_window_rewrites: list[str] = []
-        if (
-            self.spark.conf.get("spark.psql.existsWindowRewrite", "true")
-            != "true"
-            or os.environ.get("SPARK_GRAFT_NO_EXISTS_WINDOW") == "1"
-            or self.spark.conf.get("spark.psql.decorrelateExists", "false")
-            == "true"
-        ):
+        if not self.confs["spark.psql.existsWindowRewrite"]:
             return
         if not any(
             "exists" in w.lower() for st in parsed for w in (st.where or [])
@@ -5611,18 +5476,8 @@ class Compiler:
         FLOOR_ANALYSIS round-10). Applies within runs of consecutive
         pure-WHERE stages (conjuncts of one filter over one relation,
         where the identity holds regardless of evaluation order).
-        Off: spark.psql.alignExistsProbes=false / env
-        SPARK_GRAFT_NO_ALIGN_EXISTS=1."""
-        if (
-            self.spark.conf.get("spark.psql.alignExistsProbes", "true")
-            != "true"
-            or os.environ.get("SPARK_GRAFT_NO_ALIGN_EXISTS") == "1"
-            # the opt-in EXISTS decorrelation targets the same probe
-            # shape; narrowing first would hide the pattern from it —
-            # explicit user intent wins
-            or self.spark.conf.get("spark.psql.decorrelateExists", "false")
-            == "true"
-        ):
+        Off: spark.psql.alignExistsProbes=false."""
+        if not self.confs["spark.psql.alignExistsProbes"]:
             return
 
         def pure_where(st) -> bool:
@@ -5691,27 +5546,12 @@ class Compiler:
 
     def _defer_conf(self) -> tuple[int, int]:
         """(small_max, big_min) byte gates; (0, _) disables."""
-        if (
-            self.spark.conf.get("spark.psql.deferDimJoins", "true") != "true"
-            or os.environ.get("SPARK_GRAFT_NO_DEFER_DIMS") == "1"
-        ):
+        if not self.confs["spark.psql.deferDimJoins"]:
             return 0, 0
-        try:
-            small = int(
-                self.spark.conf.get(
-                    "spark.psql.deferDimJoins.smallBytes",
-                    str(32 * 1024 * 1024),
-                )
-            )
-            big = int(
-                self.spark.conf.get(
-                    "spark.psql.deferDimJoins.bigBytes",
-                    str(256 * 1024 * 1024),
-                )
-            )
-        except ValueError:
-            return 0, 0
-        return small, big
+        return (
+            self.confs["spark.psql.deferDimJoins.smallBytes"],
+            self.confs["spark.psql.deferDimJoins.bigBytes"],
+        )
 
     @staticmethod
     def _pure_inner_join_stage(st: Stage, spec: "_JoinSpec | None") -> bool:
@@ -5904,15 +5744,7 @@ class Compiler:
         while deferred:
             d = deferred.pop()
             dims = d.dims
-            try:
-                hint_max = int(
-                    self.spark.conf.get(
-                        "spark.psql.broadcastHint.maxBytes",
-                        str(20 * 1024 * 1024),
-                    )
-                )
-            except ValueError:
-                hint_max = 0
+            hint_max = self.confs["spark.psql.broadcastHint.maxBytes"]
             if d.dims_bytes and 0 < d.dims_bytes <= hint_max:
                 dims = F.broadcast(dims)
             params: dict = {"__pipe": df, "__dims": dims}
@@ -5943,16 +5775,13 @@ class Compiler:
         the join's build/shuffle input shrinks from |R| rows to
         |distinct fk| rows before any exchange (TPC-H Q13 shape: 16× at
         sf1). Conservative pattern match; any analysis surprise falls
-        back to the normal stage-by-stage compile. Off-switches:
-        spark.psql.eagerAgg=false / SPARK_GRAFT_NO_EAGER_AGG=1."""
+        back to the normal stage-by-stage compile. Off-switch:
+        spark.psql.eagerAgg=false."""
         if nxt is None or st.joins is None or nxt.select is None:
             return None
         if nxt.group_by is None:
             return None
-        if (
-            self.spark.conf.get("spark.psql.eagerAgg", "true") != "true"
-            or os.environ.get("SPARK_GRAFT_NO_EAGER_AGG") == "1"
-        ):
+        if not self.confs["spark.psql.eagerAgg"]:
             return None
         from .operators.eager_agg import match_eager_agg
 
@@ -6371,24 +6200,15 @@ class Compiler:
             # the profile keeps per-task builds at the sizes the planner
             # budgeted for). Floor of 8 keeps tiny-profile sessions
             # (1 reduce partition) from degenerate single-bucket tables.
-            try:
-                default_buckets = int(
-                    self.spark.conf.get(
-                        "spark.psql.cluster.buckets",
-                        str(
-                            max(
-                                int(
-                                    self.spark.conf.get(
-                                        "spark.sql.shuffle.partitions", "32"
-                                    )
-                                ),
-                                8,
-                            )
-                        ),
+            default_buckets = self.confs["spark.psql.cluster.buckets"]
+            if default_buckets is None:
+                try:
+                    default_buckets = max(
+                        int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")),
+                        8,
                     )
-                )
-            except ValueError:
-                default_buckets = 32
+                except ValueError:
+                    default_buckets = 32
             buckets = int(kv.get("buckets", default_buckets))
             src_path = self.resolver.path_of(df)
             name = kv.get("name")
@@ -6402,7 +6222,7 @@ class Compiler:
             ] or None
             # same codec policy as CLUSTER DECLARED KEYS (round 14):
             # both twin-writing flows must produce the same layout
-            codec = self.spark.conf.get("spark.psql.cluster.codec", "zstd")
+            codec = self.confs["spark.psql.cluster.codec"]
             if codec.lower() in ("", "none", "default"):
                 codec = None
             out = write_bucketed(
@@ -6795,30 +6615,6 @@ class Compiler:
                 )
                 params[jname] = right
 
-        if (
-            st.where
-            and df is not None
-            and any("exists" in w.lower() for w in st.where)
-            and self._conf_or_blank("spark.psql.decorrelateExists") == "true"
-        ):
-            # OPT-IN (measured negative result, round 9): at sf10 the
-            # decorrelated form is a 2x LOSS (10.6-11.0 s vs 5.3-6.9 s
-            # interleaved) — the native LeftSemi/LeftAnti path rides the
-            # scan-reuse persist (one pruned cached lineitem feeds all
-            # three branches) while each collect_list agg re-shuffles
-            # 60 M rows with list payloads; at sf0.1 it is a wash
-            # (0.77-0.84 s both). Kept as a conf-gated alternative for
-            # shapes where the subquery table is NOT the outer table
-            # (no scan reuse to ride) and keys are low-duplication.
-            import dataclasses as _dc
-
-            new_where = []
-            for w in st.where:
-                w2, suffix = self._try_decorrelate_exists(w, params, dedup_drop)
-                new_where.append(w2)
-                from_clause += suffix
-            st = _dc.replace(st, where=new_where)
-
         if st.pivot is not None:
             spec = st.pivot.strip()
             if spec.lower().startswith("on "):
@@ -7015,197 +6811,6 @@ class Compiler:
 
     # -- join helpers -------------------------------------------------
 
-    def _try_decorrelate_exists(
-        self, pred: str, params: dict, dedup_drop: list
-    ) -> tuple[str, str]:
-        """Decorrelate ``[NOT] EXISTS (SELECT … FROM <one source> <a>
-        WHERE <a.k = outer-expr> AND <extra preds>)`` into one
-        aggregation + one left join + an array ``exists()`` lambda.
-
-        Spark compiles the correlated form as a LeftSemi/LeftAnti join
-        whose build side is the ENTIRE subquery table — q21's two
-        EXISTS branches each broadcast-build (tiny SF) or exchange
-        (large SF) the full 600 k/60 M-row lineitem. The rewrite
-        replaces each with ``T.groupBy(k).agg(collect_list(struct(
-        needed cols)))`` left-joined on the correlation key, evaluating
-        the residual predicate per element with a higher-order
-        ``exists()`` — T is scanned and exchanged ONCE per subquery,
-        the joined side shrinks to one row per distinct key, and (the
-        part the r4-rejected window formulation needed a functional
-        dependency for) outer-column references stay row-local inside
-        the lambda, so the rewrite is sound with NO semantic
-        assumptions. NULL semantics match SQL EXISTS: a NULL outer key
-        or empty/NULL match list coalesces to FALSE (NOT EXISTS →
-        TRUE); 3-valued residuals that are never TRUE count as no
-        match.
-
-        100 TB judgment: replaces two full-table probe exchanges with
-        one agg exchange whose combiner runs map-side; per-key
-        collect_list carries only the residual's columns — the
-        executor-memory ceiling is rows-per-key (same collected-shim
-        class as mad/entropy, adversarially tested to 10M elements).
-        OPT-IN via spark.psql.decorrelateExists=true — the measured
-        default answer is Spark's native correlated plan riding the
-        scan-reuse persist (gate comment at the call site has the
-        round-9 A/B). Conservative gates: single source,
-        conjunctive WHERE, exactly one alias-qualified equality to a
-        subquery column, every other subquery reference alias-
-        qualified; anything else keeps Spark's native correlated plan.
-        """
-        out_pred, suffix = pred, ""
-        for _ in range(4):  # several EXISTS in one predicate
-            toks = tokenize(out_pred)
-            n = len(toks)
-            hit = None
-            for i, t in enumerate(toks):
-                if (
-                    t.kind == "word"
-                    and t.lower == "exists"
-                    and i + 1 < n
-                    and toks[i + 1].kind == "lparen"
-                ):
-                    hit = i
-                    break
-            if hit is None:
-                return out_pred, suffix
-            close = _match_paren(toks, hit + 1)
-            inner = out_pred[toks[hit + 1].end : toks[close].start]
-            parsed = self._parse_exists_subquery(inner)
-            if parsed is None:
-                return out_pred, suffix
-            src_df, key_col, outer_expr, residual, needed = parsed
-            nid = next(self._ids)
-            rows_col, key_alias, pname = (
-                f"__ex_rows{nid}",
-                f"__ex_k{nid}",
-                f"__ex{nid}",
-            )
-            struct_cols = needed or [key_col]
-            agg = src_df.groupBy(
-                F.col(key_col).alias(key_alias)
-            ).agg(
-                F.collect_list(F.struct(*[F.col(c) for c in struct_cols])).alias(
-                    rows_col
-                )
-            )
-            params[pname] = agg
-            suffix += (
-                f" LEFT JOIN {{{pname}}} ON"
-                f" ({self._frag(outer_expr, params)}) = {key_alias}"
-            )
-            lam = residual or "true"
-            repl = f"coalesce(exists({rows_col}, __r -> ({lam})), false)"
-            out_pred = (
-                out_pred[: toks[hit].start] + repl + out_pred[toks[close].end :]
-            )
-            dedup_drop.extend([rows_col, key_alias])
-        return out_pred, suffix
-
-    def _parse_exists_subquery(
-        self, inner: str
-    ) -> tuple[DataFrame, str, str, str, list[str]] | None:
-        """Parse an EXISTS body into (source df, key col, outer expr,
-        residual lambda-pred over __r, needed cols) — None if the shape
-        is outside the conservative gate."""
-        toks = tokenize(inner)
-        n = len(toks)
-        if not (n > 3 and toks[0].kind == "word" and toks[0].lower == "select"):
-            return None
-        depth = 0
-        from_i = None
-        for i in range(1, n):
-            k = toks[i].kind
-            if k in ("lparen", "block_open"):
-                depth += 1
-            elif k in ("rparen", "block_close"):
-                depth -= 1
-            elif depth == 0 and k == "word" and toks[i].lower == "from":
-                from_i = i
-                break
-        if from_i is None or from_i + 1 >= n:
-            return None
-        si = from_i + 1
-        src_t = toks[si]
-        try:
-            if src_t.kind == "string":
-                src_df = self.resolver.resolve(
-                    src_t.text[1:-1].replace("''", "'")
-                )
-            elif src_t.kind in ("word", "qident"):
-                src_df = self.resolver.table(src_t.text.strip('"`'))
-            else:
-                return None
-        except Exception:  # noqa: BLE001 — unresolvable → native path
-            return None
-        j = si + 1
-        if j < n and toks[j].kind == "word" and toks[j].lower == "as":
-            j += 1
-        if not (j < n and toks[j].kind == "word" and toks[j].lower != "where"):
-            return None  # alias required: unqualified refs are ambiguous
-        alias = toks[j].text
-        j += 1
-        if not (j < n and toks[j].kind == "word" and toks[j].lower == "where"):
-            return None
-        body = inner[toks[j].end :]
-        low = body.lower()
-        if any(
-            re.search(rf"\b{kw}\b", low)
-            for kw in ("select", "exists", "group", "order", "limit", "union", "join")
-        ):
-            return None
-        preds = _split_top_and(body)
-        if not preds:
-            return None
-        al = re.escape(alias)
-        key_col = outer_expr = None
-        residual_preds: list[str] = []
-        src_cols_lower = {c.lower() for c in src_df.columns}
-        for p in preds:
-            ps = p.strip()
-            if key_col is None:
-                mA = re.match(rf"(?is)^{al}\.(\w+)\s*=\s*(.+)$", ps)
-                mB = re.match(rf"(?is)^(.+?)\s*=\s*{al}\.(\w+)\s*$", ps)
-                if (
-                    mA
-                    and mA.group(1).lower() in src_cols_lower
-                    and not re.search(rf"(?i)\b{al}\.", mA.group(2))
-                ):
-                    key_col, outer_expr = mA.group(1), mA.group(2)
-                    continue
-                if (
-                    mB
-                    and mB.group(2).lower() in src_cols_lower
-                    and not re.search(rf"(?i)\b{al}\.", mB.group(1))
-                ):
-                    key_col, outer_expr = mB.group(2), mB.group(1)
-                    continue
-            residual_preds.append(ps)
-        if key_col is None:
-            return None
-        needed: list[str] = []
-        for p in residual_preds:
-            # every subquery-table reference must be alias-qualified: a
-            # bare token that names a T column is ambiguous → bail
-            for t in tokenize(p):
-                if (
-                    t.kind == "word"
-                    and t.lower in src_cols_lower
-                    and not _preceded_by_dot(p, t)
-                ):
-                    return None
-            needed.extend(
-                m.group(1) for m in re.finditer(rf"(?i)\b{al}\.(\w+)", p)
-            )
-        case_map = {c.lower(): c for c in src_df.columns}
-        needed = sorted(
-            {case_map[c.lower()] for c in needed if c.lower() in case_map}
-        )
-        alias_dot = re.compile(rf"(?i)\b{al}\.")
-        residual = " AND ".join(
-            "(" + alias_dot.sub("__r.", p) + ")" for p in residual_preds
-        )
-        return src_df, case_map[key_col.lower()], outer_expr, residual, needed
-
     def _maybe_broadcast_hint(
         self,
         df: DataFrame | None,
@@ -7235,15 +6840,7 @@ class Compiler:
         Returns (right, df) with hints applied, and updates
         ``_pipe_bytes`` to the post-join estimate (None when either
         side is unknown)."""
-        try:
-            hint_max = int(
-                self.spark.conf.get(
-                    "spark.psql.broadcastHint.maxBytes",
-                    str(20 * 1024 * 1024),
-                )
-            )
-        except ValueError:
-            hint_max = 0
+        hint_max = self.confs["spark.psql.broadcastHint.maxBytes"]
         left_bytes = self._pipe_bytes
         right_bytes = (
             _path_bytes(spec.source_text)
@@ -7266,12 +6863,8 @@ class Compiler:
         # 2x keeps the comparable-sides band (where either choice is
         # fine) unhinted while letting the engine's real byte knowledge
         # overrule Catalyst's multiplied estimate everywhere it is
-        # directionally sure. SPARK_GRAFT_BCAST_ASYM overrides the
-        # margin (A/B off-switch: 4 reverts to the round-8 guard).
-        try:
-            asym = float(os.environ.get("SPARK_GRAFT_BCAST_ASYM", "2"))
-        except ValueError:
-            asym = 2.0
+        # directionally sure.
+        asym = 2.0
         left_ok = df is not None and (
             how in ("join", "inner join") or how.startswith("right")
         )
@@ -8131,22 +7724,6 @@ def _path_bytes(path: str) -> int:
         return 0
 
 
-def _block_persist_min_bytes(spark: SparkSession) -> int:
-    """Statement-source floor below which repeated CTE blocks are NOT
-    persisted (see _substitute_blocks). Shares TINY_INPUT_BYTES with the
-    scan-reuse tiny gate — same evidence class (r5 q21 sf0.1
-    regression)."""
-    from .session import TINY_INPUT_BYTES
-
-    try:
-        v = spark.conf.get("spark.psql.blockPersist.minBytes", "")
-        if v:
-            return int(v)
-    except Exception:  # noqa: BLE001
-        pass
-    return TINY_INPUT_BYTES
-
-
 def _scan_read_schemas(plan: str, path: str) -> list[set[str] | None]:
     """Per-FileScan pruned column sets for ``path`` in a physical-plan string.
 
@@ -8224,13 +7801,6 @@ def _split_top_and(text: str) -> list[str]:
                 return [text]
     parts.append(text[start:])
     return [p for p in parts if p.strip()]
-
-
-def _preceded_by_dot(text: str, t: Token) -> bool:
-    k = t.start - 1
-    while k >= 0 and text[k].isspace():
-        k -= 1
-    return k >= 0 and text[k] == "."
 
 
 def _match_paren(tokens: list[Token], open_i: int) -> int:

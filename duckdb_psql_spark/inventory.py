@@ -65,6 +65,7 @@ def _tune_tables(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     here. Same bands as session.tune_for_statement."""
     import os as _os
 
+    from .confs import read as read_confs
     from .session import tune_for_statement
 
     total = 0
@@ -80,7 +81,8 @@ def _tune_tables(spark: SparkSession, sf_dir: str, *tables: str) -> None:
                 total += _os.path.getsize(p)
         except OSError:
             pass
-    tune_for_statement(spark, total)
+    if read_confs(spark)["spark.psql.stmtTune"]:
+        tune_for_statement(spark, total)
 
 
 def _pipe(template: str) -> Callable[[SparkSession, str], DataFrame]:

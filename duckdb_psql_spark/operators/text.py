@@ -37,95 +37,8 @@ def _count_of(text: Column, chars: str) -> Column:
     return F.length(text) - F.length(F.translate(text, chars, ""))
 
 
-_STATS_COLS = [
-    "n_chars_calc", "n_words", "n_unique_words", "lexical_diversity",
-    "alpha_ratio", "digit_ratio", "punct_ratio", "space_ratio",
-    "avg_word_len",
-]
-
-
-def _arrow_stats_enabled() -> bool:
-    """Opt-IN switch for the Arrow text-stats kernel.
-
-    Round-14 measured it and REFUTED it as the default
-    (BENCH_ARROW_TEXT_STATS_AB_r14.json): ~equal at sf10 (3.7/3.8 vs
-    4.0/3.3 s warm ABAB) but consistently slower at sf0.1 (0.52-0.82 vs
-    0.47-0.61 s) — unlike the minhash case there is no interpreted-HOF
-    cost to delete, the JVM translate/array_distinct path is fully
-    codegen'd, and mapInArrow must round-trip every passthrough column
-    (the pipe's pruning cannot see through an opaque operator, guide
-    §4.2 caveat). Kept opt-in for corpora where per-row text dominates
-    the boundary cost; value parity is exact and test-pinned either way."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_ARROW_TEXT_STATS") == "1"
-
-
-def _with_text_stats_arrow(
-    df: DataFrame, text_col: str, with_score: bool
-) -> DataFrame:
-    """Guide §4.2: all of with_text_stats (+ the quality score) in ONE
-    Arrow batch pass — replaces two translate passes, the split +
-    array_distinct, and the per-row ratio expression tree (1.79 s + of
-    the 3.86 s x_text_quality total at sf10,
-    BENCH_XOPS_ANATOMY_sf10_r13.json). Value parity is exact: counts are
-    integers, and the ratio/score doubles are computed with the same
-    IEEE-754 operations in the same order as the JVM expressions
-    (arrowhash.text_stats_batch). Row-wise append — no grouping, so no
-    semantic caveats; input columns pass through unchanged."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    from .arrowhash import text_stats_batch
-
-    # the lowered text ships as an extra column computed in the JVM
-    # (Unicode SpecialCasing parity — see arrowhash._tokenize) and is
-    # dropped again by the kernel's output
-    low_name = "__psql_low"
-    src = df.withColumn(low_name, F.lower(F.col(text_col)))
-    names = list(df.columns)
-    ti = names.index(text_col)
-    li = len(names)  # __psql_low is appended last
-    stat_fields = [
-        StructField("n_chars_calc", IntegerType()),
-        StructField("n_words", IntegerType()),
-        StructField("n_unique_words", IntegerType()),
-        StructField("lexical_diversity", DoubleType()),
-        StructField("alpha_ratio", DoubleType()),
-        StructField("digit_ratio", DoubleType()),
-        StructField("punct_ratio", DoubleType()),
-        StructField("space_ratio", DoubleType()),
-        StructField("avg_word_len", DoubleType()),
-    ]
-    if with_score:
-        stat_fields.append(StructField("quality_score", DoubleType()))
-    out_schema = StructType(list(df.schema.fields) + stat_fields)
-    cols = _STATS_COLS + (["quality_score"] if with_score else [])
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            stats, nulls = text_stats_batch(
-                batch.column(ti), batch.column(li), with_score
-            )
-            arrs = list(batch.columns)[:li]  # drop __psql_low
-            mask = nulls if nulls.any() else None
-            for c in cols:
-                v = stats[c]
-                typ = pa.int32() if v.dtype == np.int64 and c in (
-                    "n_chars_calc", "n_words", "n_unique_words"
-                ) else pa.float64()
-                arrs.append(pa.array(v, type=typ, mask=mask))
-            yield pa.RecordBatch.from_arrays(arrs, names=names + cols)
-
-    return src.mapInArrow(gen, out_schema)
-
-
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring features: lengths, ratios, entropy-ish signals."""
-    if _arrow_stats_enabled():
-        return _with_text_stats_arrow(df, text_col, with_score=False)
     t = F.col(text_col)
     toks = _tokens(t)
     n_chars = F.length(t)
@@ -162,9 +75,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     digit/punct-heavy content — the standard cheap pre-filter before
     expensive model-based scoring in a training-data pipeline.
     """
-    if _arrow_stats_enabled():
-        # one fused Arrow pass: stats + score (guide §4.2)
-        return _with_text_stats_arrow(df, text_col, with_score=True)
     stats = with_text_stats(df, text_col)
     length_ok = F.when(
         (F.col("n_words") >= 5) & (F.col("n_words") <= 100000), F.lit(1.0)

@@ -138,32 +138,6 @@ def test_dup_id_semantics_preserved(spark):
     assert len(rows) == 1  # merged — one signature for the duplicated id
 
 
-def test_arrow_text_stats_parity_optin(spark, monkeypatch):
-    """The opt-in Arrow text-stats kernel (refuted as default, kept for
-    heavy-text corpora) must stay value-identical to the JVM path."""
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_TEXT_STATS", raising=False)
-    from duckdb_psql_spark.operators import text as T
-
-    rows = [
-        (1, "The quick Brown fox 123 jumps!? over,, the lazy dog"),
-        (2, None),
-        (3, ""),
-        (4, "  padded   with   spaces  "),
-        (5, "word " * 200),
-        (6, "ΟΔΟΣ Straße İstanbul ΣΟΦΙΑΣ mixed ascii"),  # SpecialCasing
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = sorted(map(tuple, T.quality_score(df).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_TEXT_STATS", "1")
-    arrow = sorted(map(tuple, T.quality_score(df).collect()))
-    assert jvm == arrow
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_TEXT_STATS")
-    jvm2 = sorted(map(tuple, T.with_text_stats(df).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_TEXT_STATS", "1")
-    arrow2 = sorted(map(tuple, T.with_text_stats(df).collect()))
-    assert jvm2 == arrow2
-
-
 def test_non_ascii_lowercase_parity(spark):
     """Java toLowerCase applies Unicode SpecialCasing (Greek final sigma
     'ΟΔΟΣ'→'οδος') which Arrow's utf8_lower does not — the kernels must

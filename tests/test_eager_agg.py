@@ -68,6 +68,17 @@ def test_plan_prefolds_right_side(psql):
     assert "o_custkey" in plan[join_at:]
 
 
+def test_set_uppercase_true_keeps_rewrite(psql):
+    # Spark stores `SET k = TRUE` verbatim; booleans parse
+    # case-insensitively, so the pass stays on
+    psql.sql("SET spark.psql.eagerAgg = TRUE")
+    try:
+        plan = psql.sql(Q13)._jdf.queryExecution().executedPlan().toString()
+        assert "__ea_key" in plan
+    finally:
+        psql.spark.conf.unset("spark.psql.eagerAgg")
+
+
 def test_inner_join_count_star_sum_min_max(psql):
     stmt = (
         f"from '{CUST}' |> as c join '{ORD}' as o on c.c_custkey = o.o_custkey |> "

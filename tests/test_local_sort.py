@@ -10,8 +10,6 @@ to the unrewritten plan, narrow pipelines are left alone (scan
 parallelism preserved), and the off-switch works.
 """
 
-import os
-
 import pytest
 
 
@@ -23,6 +21,15 @@ def _fresh(psql, text):
     # bypass the plan cache so each compile re-evaluates the gates
     psql._compiler._plan_cache.clear()
     return psql.sql(text)
+
+
+def _off(psql, text):
+    """Compile ``text`` with the pass switched off."""
+    psql.spark.conf.set("spark.psql.localSortSmall", "false")
+    try:
+        return _fresh(psql, text)
+    finally:
+        psql.spark.conf.unset("spark.psql.localSortSmall")
 
 
 def test_agg_order_by_drops_range_exchange(psql, sf_dir):
@@ -45,11 +52,7 @@ def test_rewrite_values_identical(psql, sf_dir):
         "group by l_returnflag, l_linestatus |> "
         "order by l_returnflag, l_linestatus"
     )
-    os.environ["SPARK_GRAFT_NO_LOCAL_SORT"] = "1"
-    try:
-        expected = _fresh(psql, q).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_LOCAL_SORT", None)
+    expected = _off(psql, q).collect()
     got = _fresh(psql, q).collect()
     assert got == expected
 
@@ -83,12 +86,25 @@ def test_off_switch(psql, sf_dir):
         "select o_orderstatus, count() as n group by o_orderstatus |> "
         "order by n desc, o_orderstatus"
     )
-    os.environ["SPARK_GRAFT_NO_LOCAL_SORT"] = "1"
+    assert "rangepartitioning" in _plan(_off(psql, q))
+
+
+def test_conf_flip_after_cached_compose(psql, sf_dir):
+    # the plan-cache key carries the conf: turning the pass off after a
+    # cached compose must recompile, not return the local-sort plan
+    q = (
+        f"from '{sf_dir}/orders.parquet' |> "
+        "select o_orderpriority, count() as n group by o_orderpriority |> "
+        "order by n desc, o_orderpriority"
+    )
+    on = psql.sql(q)
+    assert psql.sql(q) is on
+    assert "rangepartitioning" not in _plan(on)
+    psql.spark.conf.set("spark.psql.localSortSmall", "false")
     try:
-        plan = _plan(_fresh(psql, q))
+        assert "rangepartitioning" in _plan(psql.sql(q))
     finally:
-        os.environ.pop("SPARK_GRAFT_NO_LOCAL_SORT", None)
-    assert "rangepartitioning" in plan
+        psql.spark.conf.unset("spark.psql.localSortSmall")
 
 
 def test_order_by_non_projected_column(psql, sf_dir):
@@ -100,10 +116,6 @@ def test_order_by_non_projected_column(psql, sf_dir):
         "select o_custkey, max(o_totalprice) as m group by o_custkey |> "
         "select o_custkey |> order by o_custkey"
     )
-    os.environ["SPARK_GRAFT_NO_LOCAL_SORT"] = "1"
-    try:
-        expected = _fresh(psql, q).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_LOCAL_SORT", None)
+    expected = _off(psql, q).collect()
     df = _fresh(psql, q)
     assert _fresh(psql, q).collect() == expected

@@ -50,15 +50,73 @@ def test_named_source_not_cached(psql):
     assert a is not b
 
 
-def test_planning_conf_change_misses(psql):
+# a second value for each Spark planning conf; the test picks whichever
+# differs from the session's current one
+_PLANNING_ALT = {
+    "spark.sql.autoBroadcastJoinThreshold": ("-1", "1048576"),
+    "spark.sql.shuffle.partitions": ("3", "5"),
+    "spark.sql.adaptive.enabled": ("true", "false"),
+    "spark.sql.files.maxPartitionBytes": ("3145728", "4194304"),
+}
+
+
+def _non_default(key: str, default) -> str:
+    if isinstance(default, bool):
+        return str(not default).lower()
+    if isinstance(default, int):
+        return str(default + 1)
+    if default is None:
+        return "16"
+    return "snappy"  # the one string conf is the twin codec
+
+
+def test_planning_conf_change_misses(psql, monkeypatch):
+    """Every conf in the table, flipped after a cached compose, must make
+    the next compose miss. The statement tuner is stubbed out so it
+    cannot reset the Spark planning confs the test sets."""
+    import duckdb_psql_spark.session as S
+    from duckdb_psql_spark import confs
+
+    monkeypatch.setattr(S, "tune_for_statement", lambda spark, n: None)
+    monkeypatch.setattr(S, "restore_dataset_profile", lambda spark: False)
     spark = psql.spark
-    a = psql.sql(Q)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    hits = []
+    for key, default in confs.PSQL.items():
+        a = psql.sql(Q)
+        assert psql.sql(Q) is a, key
+        spark.conf.set(key, _non_default(key, default))
+        try:
+            if psql.sql(Q) is a:
+                hits.append(key)
+        finally:
+            spark.conf.unset(key)
+    for key in confs.PLANNING:
+        a = psql.sql(Q)
+        old = spark.conf.get(key)
+        spark.conf.set(key, next(v for v in _PLANNING_ALT[key] if v != old))
+        try:
+            if psql.sql(Q) is a:
+                hits.append(key)
+        finally:
+            spark.conf.set(key, old)
+    assert hits == []
+    assert len(confs.PSQL) == 28 and len(confs.PLANNING) == 4
+
+
+def test_recursive_cte_cap_applies_after_cached_compose(psql):
+    from duckdb_psql_spark.errors import PsqlCompileError
+
+    q = (
+        "with recursive r(n) as (select 1 union select n+1 from r "
+        "where n < 5) select * from r"
+    )
+    assert sorted(r.n for r in psql.sql(q).collect()) == [1, 2, 3, 4, 5]
+    psql.spark.conf.set("spark.psql.recursiveCte.maxIterations", "2")
     try:
-        assert psql.sql(Q) is not a
+        with pytest.raises(PsqlCompileError, match="no fixpoint after 2"):
+            psql.sql(q)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        psql.spark.conf.unset("spark.psql.recursiveCte.maxIterations")
 
 
 def test_data_change_self_invalidates(psql, tmp_path):

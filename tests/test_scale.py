@@ -325,16 +325,12 @@ def test_defer_dims_skips_eager_agg_until_flush(psql, spark, sf_dir):
         spark.conf.unset("spark.psql.deferDimJoins.bigBytes")
 
 
-def test_stmt_band_env_defaults(spark, monkeypatch):
-    """Round-10 review find: a '0' string default is truthy, so the `or`
-    fallback never fired and the tiny band was silently disabled. Pin
-    the unset-env behavior: sub-cut statements take p=1/AQE-off, the
-    mid band divides splits by cores."""
+def test_stmt_band_env_defaults(spark):
+    """A '0' string default once silently disabled the tiny band (round
+    10). Pin the bands: sub-cut statements take p=1/AQE-off, the mid
+    band divides splits by cores."""
     import duckdb_psql_spark.session as S
 
-    monkeypatch.delenv("SPARK_GRAFT_STMT_TINY_BYTES", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STMT_SPLIT_DIV", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_NO_STMT_TUNE", raising=False)
     S.tune_for_statement(spark, 4 * 1024 * 1024)  # < 8MB cut
     assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
