@@ -48,26 +48,6 @@ from .errors import PsqlCompileError, PsqlParseError
 from .functions.shims import _NONDET_FNS, _match_paren_tok, _split_args, apply_shims
 from .lexer import Token, depth_map, strip_comments, tokenize
 
-# statement heads that cannot change what a cached pure query would
-# return: reads, introspection, and plan display. Everything else
-# (CREATE/INSERT/SET/COPY/MERGE/...) bumps the catalog epoch and
-# flushes the compose cache.
-_READONLY_STMT_KEYWORDS = frozenset(
-    {
-        "select",
-        "from",
-        "with",
-        "values",
-        "table",
-        "show",
-        "describe",
-        "desc",
-        "summarize",
-        "explain",
-        "pivot",
-        "unpivot",
-    }
-)
 from .scanner import find_blocks, first_statement, has_psql_tokens, split_stages
 from .sources.resolver import SourceResolver
 from .stages import Head, Stage, parse_head, parse_stage
@@ -418,17 +398,6 @@ class Compiler:
         # join stages dropped by _eliminate_fk_joins for the LAST
         # compiled pipeline (introspection for tests/EXPLAIN)
         self.last_eliminated_joins: list[str] = []
-        # compose/plan cache: statement text -> composed DataFrame.
-        # Compose cost is Python + ~400 py4j round-trips per statement
-        # (measured 2.0s of the 6.5s sf0.1 suite — 30%); repeated
-        # statements (dashboards, retries, benchmark reps) skip it
-        # entirely. Safety: only pure SELECT-shaped statements whose
-        # sources all resolved to path literals are cached; the key
-        # carries every source path's (size, mtime) so data changes
-        # self-invalidate; any state-mutating statement (DDL/DML/SET/
-        # macros/sequences) bumps the epoch and flushes the cache.
-        self._plan_cache: "collections.OrderedDict[tuple, DataFrame]" = collections.OrderedDict()
-        self._catalog_epoch = 0
         # spark.psql.* snapshot of the statement being compiled
         # (confs.read); compile_statement refreshes it once per statement
         self.confs = dict(confs_mod.PSQL)
@@ -470,42 +439,9 @@ class Compiler:
         self.confs = confs_mod.read(self.spark)
         self._tune_for_statement_sources(text)
         with self._lock:
-            cache_key = self._plan_cache_key(text)
-            if cache_key is not None:
-                hit = self._plan_cache.get(cache_key)
-                if hit is not None:
-                    self._plan_cache.move_to_end(cache_key)
-                    # cached statements never hold persisted state (the
-                    # store gate vetoes them), so releasing the PREVIOUS
-                    # statement's pins here is safe — without it, a run
-                    # of cache hits after a persist-heavy statement
-                    # retains those executor blocks indefinitely.
-                    self._release_persisted_state()
-                    return hit
             self._release_persisted_state()
-            self.resolver.named_source_hit = False
-            self.resolver.stmt_views = set()
             df = self._compile_statement_locked(text)
-            df = self._local_sort_small_result(df)
-            if (
-                cache_key is not None
-                and not self.resolver.named_source_hit
-                and not self._persisted_blocks
-                and not self._persisted_views
-            ):
-                self._plan_cache[cache_key] = df
-                while len(self._plan_cache) > 64:
-                    self._plan_cache.popitem(last=False)
-            elif cache_key is None:
-                # state-mutating statement classes flush everything: a
-                # cached SELECT over a temp view this DDL/DML just
-                # replaced must not survive
-                first = tokenize(first_statement(text) or "")
-                kw = first[0].lower if first and first[0].kind == "word" else ""
-                if kw not in _READONLY_STMT_KEYWORDS:
-                    self._catalog_epoch += 1
-                    self._plan_cache.clear()
-            return df
+            return self._local_sort_small_result(df)
 
     def _local_sort_small_result(self, df: DataFrame) -> DataFrame:
         """Terminal global ORDER BY over a reduced result → one-partition
@@ -592,61 +528,6 @@ class Compiler:
             except Exception:  # noqa: BLE001
                 pass
         self._persisted_views.clear()
-
-    def _plan_cache_key(self, text: str) -> tuple | None:
-        """Cache key for a pure-query statement, or None if ineligible.
-
-        Eligible: SELECT-shaped first keyword, no sequence access
-        (nextval/currval advance state per call — a cached plan splices
-        stale values), cache not disabled. The key folds in the catalog
-        epoch and each literal source path's (size, mtime) so both
-        engine-visible DDL/DML and on-disk data changes invalidate."""
-        if not self.confs["spark.psql.planCache"]:
-            return None
-        toks = tokenize(text)
-        if not toks:
-            return None
-        kw = toks[0].lower if toks[0].kind == "word" else ""
-        if kw not in ("select", "from", "with", "values", "table"):
-            return None
-        # every conf that steers compile (the whole snapshot) or
-        # physical planning, which binds to the DataFrame at first action
-        confs = (tuple(self.confs.values()), confs_mod.planning(self.spark))
-        paths = []
-        for t in toks:
-            if t.kind == "word" and (
-                t.lower in ("nextval", "currval", "glob", "cluster")
-                or t.lower in _NONDET_FNS
-            ):
-                # sequences mutate per call; glob() re-lists a directory
-                # whose contents can change without any literal path's
-                # stat changing; `cluster by` registers a bucketed twin
-                # (a side effect) despite its FROM-first spelling;
-                # nondeterministic fns (random/uuid/shuffle) must
-                # re-analyze per statement — Spark fixes rand/uuid seeds
-                # at analysis, so a cached plan would repeat values
-                return None
-            if t.kind == "string":
-                p = t.text[1:-1].replace("''", "'")
-                if ("/" in p or p.endswith(".parquet")) and any(
-                    c in p for c in "*?["
-                ):
-                    # a glob literal expands to a file LIST that can
-                    # change without any stat we could fold in changing
-                    return None
-                if ("/" in p or p.endswith(".parquet")) and os.path.exists(p):
-                    try:
-                        if os.path.isdir(p):
-                            # shallow stat misses a file replaced inside
-                            # a partition subdir — recursive fingerprint
-                            size, mt = self.resolver.path_fingerprint(p)
-                            paths.append((p, size, mt))
-                        else:
-                            st = os.stat(p)
-                            paths.append((p, st.st_size, st.st_mtime_ns))
-                    except OSError:
-                        return None
-        return (text, self._catalog_epoch, confs, tuple(sorted(paths)))
 
     def _tune_for_statement_sources(self, text: str) -> None:
         """Size session parallelism confs to THIS statement's inputs.
@@ -1373,14 +1254,11 @@ class Compiler:
                 # _blocks_to_persist). Tiny-input gate: below the
                 # threshold the OS page cache already holds the source
                 # and the persist job + pinned views cost more than the
-                # re-run saves — and an unpersisted statement stays
-                # eligible for the compose cache (q_asof sf0.1: 0.39 s
-                # compose per rep with persist, ~4 ms cached without).
+                # re-run saves.
                 self._blocks_to_persist.append(df)
             name = f"__psql_blk_{self._tag}_{next(self._ids)}"
             df.createOrReplaceTempView(name)
             self._pending_views.append(name)
-            self.resolver.stmt_views.add(name.lower())
             out.append(stmt[pos : blk.start])
             out.append(f"(select * from {name})")
             pos = blk.end
@@ -2794,9 +2672,7 @@ class Compiler:
         referential-completeness check eagerly and raises on violation;
         without it the declaration is trusted (the informational-
         constraint contract — a false declaration can change results).
-        Column existence is always checked against the source schema.
-        Registration bumps the catalog epoch: cached plans compiled
-        without the elimination must not survive a new declaration."""
+        Column existence is always checked against the source schema."""
         parsed = constraints_mod.parse_declare(stmt)
         if parsed is None:
             return None
@@ -2866,8 +2742,6 @@ class Compiler:
                         f"{'/'.join(cols)} in {src[1]!r} (no match in {ref[1]!r})"
                     )
             self.constraints.declare_fk(skey, cols, rkey, ref_cols)
-        self._catalog_epoch += 1
-        self._plan_cache.clear()
         return self.spark.range(0).select(F.lit("ok").alias("status"))
 
     _CLUSTER_DECLARED_RE = re.compile(
@@ -3119,26 +2993,26 @@ class Compiler:
             # task failure) — otherwise the finished tables sit orphaned
             # in the warehouse, later statements silently lose
             # co-location, and a re-run re-pays the completed writes.
-            # The first failure re-raises after the successes register.
-            errors: list[Exception] = []
-
+            # The first failure (in todo order) re-raises after the
+            # successes register, with a note naming every failed twin.
             def _safe(job):
                 try:
                     _materialize(job)
-                    return True
+                    return None
                 except Exception as exc:  # noqa: BLE001 — re-raised below
-                    errors.append(exc)
-                    return False
+                    return exc
 
             if seq:  # A/B control
-                ok = [_safe(job) for job in prepared]
+                errs = [_safe(job) for job in prepared]
             else:
                 with ThreadPoolExecutor(
                     max_workers=min(3, len(prepared))
                 ) as pool:
-                    ok = list(pool.map(_safe, prepared))
-            for done, (ep, keys, size, name, _df) in zip(ok, prepared):
-                if not done:
+                    errs = list(pool.map(_safe, prepared))
+            failed = []
+            for exc, (ep, keys, size, name, _df) in zip(errs, prepared):
+                if exc is not None:
+                    failed.append((name, exc))
                     continue
                 kind, ident = ep
                 if kind == "path":
@@ -3147,15 +3021,17 @@ class Compiler:
                     self.resolver.register_table_twin(ident, name, keys)
                 claimed.add((ep, keys))
                 made.append((ident, name, ",".join(keys), buckets, size))
-            if errors:
-                if made:
-                    self._catalog_epoch += 1
-                    self._plan_cache.clear()
-                raise errors[0]
-        if made:
-            # twins change how later statements over these paths plan
-            self._catalog_epoch += 1
-            self._plan_cache.clear()
+            if failed:
+                (name, first), *rest = failed
+                notes = [f"twin {name} failed to write"] + [
+                    f"twin {name} also failed: {type(exc).__name__}: {exc}"
+                    for name, exc in rest
+                ]
+                # PEP 678's attribute, set directly rather than through
+                # add_note (3.11+): 3.11+ tracebacks print it, 3.10
+                # callers can read it, and the exception type is kept
+                first.__notes__ = [*getattr(first, "__notes__", ()), *notes]
+                raise first
         return self.spark.createDataFrame(
             made, "source string, twin string, keys string, "
                   "buckets int, bytes long",
@@ -3462,7 +3338,6 @@ class Compiler:
             body_df.createOrReplaceTempView(name)
             # kept alive until the whole statement is compiled (see __init__)
             self._pending_views.append(name)
-            self.resolver.stmt_views.add(name.strip('"`').lower())
             i = close + 1
             if i < len(toks) and toks[i].kind == "comma":
                 i += 1
@@ -3552,7 +3427,6 @@ class Compiler:
             _named(self._compile_query_expr(base_txt)).dropDuplicates()
         )
         frontier = total
-        self.resolver.stmt_views.add(name.lower())
         for _ in range(max_iter):
             frontier.createOrReplaceTempView(name)
             step_df = _named(self._compile_query_expr(step_txt))
@@ -6231,12 +6105,6 @@ class Compiler:
             )
             if src_path is not None:
                 self.resolver.register_bucketed_twin(src_path, name, tuple(keys))
-                # a twin changes how LATER statements over src_path plan;
-                # cached pre-twin composes must not survive (the `cluster
-                # by` statement head is `from`, so the epoch heuristic
-                # alone would miss this mutation)
-                self._catalog_epoch += 1
-                self._plan_cache.clear()
             return out
         if verb == "contamination":
             # |> contamination '<probe source>' [id= text= probe_text=

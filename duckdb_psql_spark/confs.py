@@ -2,10 +2,8 @@
 
 Modelled on Catalyst's ``SQLConf`` (Spark SQL, SIGMOD 2015): each conf is
 declared once with its default, and all reads go through one accessor.
-``compile_statement`` takes a ``read`` snapshot once per statement; every
-pass gate and byte threshold of that statement reads the snapshot, and
-the plan-cache key folds in all of it, so a cached plan never outlives
-a conf change.
+``compile_statement`` takes a ``read`` snapshot once per statement, and
+every pass gate and byte threshold of that statement reads the snapshot.
 
 A conf's type follows its default: booleans parse case-insensitively
 (Spark stores ``SET k = TRUE`` verbatim), integers as plain integers,
@@ -22,8 +20,6 @@ from .errors import PsqlCompileError
 MB = 1024 * 1024
 
 PSQL: dict[str, bool | int | str | None] = {
-    # compose/plan cache of pure-query statements
-    "spark.psql.planCache": True,
     # per-statement parallelism bands (session.tune_for_statement)
     "spark.psql.stmtTune": True,
     # terminal ORDER BY over a reduced result → one-partition local sort
@@ -66,16 +62,6 @@ PSQL: dict[str, bool | int | str | None] = {
     "spark.psql.cluster.codec": "zstd",
     "spark.psql.cluster.parallelWrites": True,
 }
-
-# Spark's own planning confs. They bind when the first action plans a
-# DataFrame, so the plan-cache key carries them too; they are read after
-# the statement tuner has set them.
-PLANNING = (
-    "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.shuffle.partitions",
-    "spark.sql.adaptive.enabled",
-    "spark.sql.files.maxPartitionBytes",
-)
 
 _SEP = "\u0001"
 
@@ -121,9 +107,3 @@ def read(spark: SparkSession) -> dict[str, bool | int | str | None]:
         k: _parse(k, raw[k]) if k in raw else d for k, d in PSQL.items()
     }
 
-
-def planning(spark: SparkSession) -> tuple[str | None, ...]:
-    """The ``PLANNING`` confs as set on the session (None when unset,
-    i.e. Spark's default)."""
-    raw = _session_confs(spark)
-    return tuple(raw.get(k) for k in PLANNING)

@@ -2468,8 +2468,6 @@ def _q21_keyed_rewrite(spark: SparkSession, sf: str) -> DataFrame:
         comp.constraints.uniques.update(saved_u)
         comp.constraints.fks.clear()
         comp.constraints.fks.update(saved_f)
-        comp._catalog_epoch += 1
-        comp._plan_cache.clear()
 
 
 _q(
@@ -2505,8 +2503,6 @@ def _q05_keyed_elim(spark: SparkSession, sf: str) -> DataFrame:
         comp.constraints.uniques.update(saved_u)
         comp.constraints.fks.clear()
         comp.constraints.fks.update(saved_f)
-        comp._catalog_epoch += 1
-        comp._plan_cache.clear()
 
 
 _q(
@@ -2542,8 +2538,6 @@ def _q13_keyed_fold(spark: SparkSession, sf: str) -> DataFrame:
         comp.constraints.uniques.update(saved_u)
         comp.constraints.fks.clear()
         comp.constraints.fks.update(saved_f)
-        comp._catalog_epoch += 1
-        comp._plan_cache.clear()
 
 
 _q(
@@ -2583,8 +2577,6 @@ def _q_distinct_keyed_elim(spark: SparkSession, sf: str) -> DataFrame:
         comp.constraints.uniques.update(saved_u)
         comp.constraints.fks.clear()
         comp.constraints.fks.update(saved_f)
-        comp._catalog_epoch += 1
-        comp._plan_cache.clear()
 
 
 def _q_groupby_keyed_elim(spark: SparkSession, sf: str) -> DataFrame:
@@ -2619,8 +2611,6 @@ def _q_groupby_keyed_elim(spark: SparkSession, sf: str) -> DataFrame:
         comp.constraints.uniques.update(saved_u)
         comp.constraints.fks.clear()
         comp.constraints.fks.update(saved_f)
-        comp._catalog_epoch += 1
-        comp._plan_cache.clear()
 
 
 _q(

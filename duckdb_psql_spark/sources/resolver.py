@@ -35,12 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 class SourceResolver:
     def __init__(self, spark: SparkSession):
-        self.named_source_hit = False
-        # statement-scoped view names the COMPILER itself registered for
-        # the statement being compiled (CTE blocks, `(| |)` splits) —
-        # derived from the statement's own text, so they don't make it
-        # uncacheable the way a user-mutable named table does
-        self.stmt_views: set[str] = set()
         self.spark = spark
         self._cache: dict[str, DataFrame] = {}
         self._spool_dir: str | None = None
@@ -340,15 +334,7 @@ class SourceResolver:
         # statement-scoped by the compiler's twin pass, checked before
         # anything else (same contract as ``overrides`` for paths)
         if low in self.table_overrides:
-            self.named_source_hit = True
             return self.table_overrides[low]
-        # named tables/views can be replaced behind the engine's back
-        # (raw spark.createOrReplaceTempView); the compiler's plan cache
-        # checks this flag and refuses to cache statements that touched
-        # any named source — except the statement's own compiler-made
-        # CTE-block views, which exist only during this compile
-        if low not in self.stmt_views:
-            self.named_source_hit = True
         if low in ("information_schema.tables", "information_schema.columns"):
             return self._information_schema(low.split(".", 1)[1])
         if "." in low:
@@ -623,7 +609,14 @@ class SourceResolver:
             import pyarrow.dataset as pads
             import pyarrow.types as pat
 
-            schema = pads.dataset(path, format="parquet").schema
+            # INT96 (Spark's default timestamp encoding) would otherwise
+            # surface as ns, yet Spark reads it natively as a timestamp
+            fmt = pads.ParquetFileFormat(
+                read_options=pads.ParquetReadOptions(
+                    coerce_int96_timestamp_unit="us"
+                )
+            )
+            schema = pads.dataset(path, format=fmt).schema
             return [
                 f.name
                 for f in schema

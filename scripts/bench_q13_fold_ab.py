@@ -58,7 +58,7 @@ def main() -> None:
     def mk(fold: bool, check: bool = False):
         spark.conf.set("spark.psql.countDistFold", "true" if fold else "false")
         df = p.sql(Q13_PIPE.format(sf=SF))
-        if check:  # later compiles are plan-cache hits: flag is stale
+        if check:  # the flag describes the compose just made
             assert p._compiler.last_count_dist_fold is fold
         return df
 

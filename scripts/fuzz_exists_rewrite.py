@@ -129,12 +129,10 @@ def main() -> int:
         pipe, oracle = gen(rng, SF)
         want = con.execute(oracle).fetchone()
         spark.conf.set("spark.psql.existsWindowRewrite", "true")
-        comp._plan_cache.clear()
         on = tuple(psql.sql(pipe).collect()[0])
         n_rw = len(comp.last_window_rewrites)
         rewrote += 1 if n_rw else 0
         spark.conf.set("spark.psql.existsWindowRewrite", "false")
-        comp._plan_cache.clear()
         off = tuple(psql.sql(pipe).collect()[0])
         if not (tuple(want) == on == off):
             fails += 1

@@ -471,3 +471,55 @@ def test_relative_cluster_by_found_by_absolute_query(spark, sf_dir):
         spark.conf.unset("spark.psql.broadcastHint.maxBytes")
         for t in ("rel_li_twin", "rel_o_twin"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+class _NoAddNoteError(OSError):
+    """An error without ``add_note``, as every exception is on Python 3.10."""
+
+    def __getattribute__(self, name):
+        if name == "add_note":
+            raise AttributeError(name)
+        return super().__getattribute__(name)
+
+
+@pytest.mark.parametrize("error", [OSError, _NoAddNoteError])
+def test_failed_twin_writes_are_all_reported(spark, sf_dir, monkeypatch, error):
+    """Two of three twin writes fail: the twin that landed still
+    registers, and the raised error, of the type the write raised,
+    names both failed twins."""
+    from duckdb_psql_spark import PsqlSession
+    from duckdb_psql_spark.operators import scale
+
+    real = scale.write_bucketed
+
+    def flaky(df, name, **kw):
+        if name.startswith(("customer_", "supplier_")):
+            raise error("disk full")
+        return real(df, name, **kw)
+
+    monkeypatch.setattr(scale, "write_bucketed", flaky)
+    p = PsqlSession(spark)
+    nation = f"{sf_dir}/nation.parquet"
+    p.sql(f"declare primary key on '{nation}' (n_nationkey)")
+    for t, c in [("customer", "c_nationkey"), ("supplier", "s_nationkey")]:
+        p.sql(
+            f"declare foreign key on '{sf_dir}/{t}.parquet' ({c}) "
+            f"references '{nation}' (n_nationkey)"
+        )
+    res = p._compiler.resolver
+    try:
+        with pytest.raises(error, match="disk full") as ei:
+            p.sql("cluster declared keys minbytes=0 buckets=2")
+        assert type(ei.value) is error
+        assert [keys for _, keys in res.bucketed_twin_layouts(nation)] == [
+            ("n_nationkey",)
+        ]
+        notes = "\n".join(ei.value.__notes__)
+        assert re.search(r"twin customer_by_c_nationkey_\w+", notes)
+        assert re.search(r"twin supplier_by_s_nationkey_\w+", notes)
+        assert f"{error.__name__}: disk full" in notes
+    finally:
+        twins = [e[0] for layouts in res.bucketed_twins.values() for e in layouts]
+        res.bucketed_twins.clear()
+        for t in twins:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -79,4 +79,4 @@ def test_snapshot_reads_session_values(spark):
         spark.conf.unset("spark.psql.cluster.buckets")
     assert snap["spark.psql.cluster.codec"] == "snappy"
     assert snap["spark.psql.cluster.buckets"] == 12
-    assert snap["spark.psql.planCache"] is True
+    assert snap["spark.psql.stmtTune"] is True

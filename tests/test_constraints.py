@@ -39,8 +39,6 @@ def keyed(psql):
     yield psql
     psql._compiler.constraints.uniques.clear()
     psql._compiler.constraints.fks.clear()
-    psql._compiler._catalog_epoch += 1
-    psql._compiler._plan_cache.clear()
 
 
 def _plan(psql, q):
@@ -146,11 +144,9 @@ def test_filter_before_join_still_eliminates(psql, keyed):
 def test_off_switch(psql, keyed):
     psql.spark.conf.set("spark.psql.keyJoinElimination", "false")
     try:
-        psql._compiler._plan_cache.clear()
         assert "orders.parquet" in _plan(psql, Q05)
     finally:
         psql.spark.conf.set("spark.psql.keyJoinElimination", "true")
-        psql._compiler._plan_cache.clear()
 
 
 def test_verify_catches_violations(psql):
@@ -177,7 +173,7 @@ def test_verify_catches_violations(psql):
         psql.sql("declare primary key banana")
 
 
-def test_declaration_invalidates_plan_cache(psql):
+def test_declaration_applies_to_next_statement(psql):
     q = f"""
     from '{SF_DIR}/lineitem.parquet' |>
     as l join '{SF_DIR}/orders.parquet' as o on l.l_orderkey = o.o_orderkey |>
@@ -194,8 +190,6 @@ def test_declaration_invalidates_plan_cache(psql):
     finally:
         psql._compiler.constraints.uniques.clear()
         psql._compiler.constraints.fks.clear()
-        psql._compiler._catalog_epoch += 1
-        psql._compiler._plan_cache.clear()
 
 
 Q21 = f"""
@@ -247,8 +241,6 @@ def q21_keys(psql):
     yield psql
     psql._compiler.constraints.uniques.clear()
     psql._compiler.constraints.fks.clear()
-    psql._compiler._catalog_epoch += 1
-    psql._compiler._plan_cache.clear()
 
 
 def test_exists_window_rewrite_q21(psql, q21_keys):
@@ -299,12 +291,10 @@ def test_exists_window_rewrite_gates(psql, q21_keys):
     # off-switch
     psql.spark.conf.set("spark.psql.existsWindowRewrite", "false")
     try:
-        psql._compiler._plan_cache.clear()
         psql.sql(Q21)
         assert not psql._compiler.last_window_rewrites
     finally:
         psql.spark.conf.set("spark.psql.existsWindowRewrite", "true")
-        psql._compiler._plan_cache.clear()
 
 
 def test_exists_window_completeness_gate(psql, keyed):
@@ -411,6 +401,4 @@ def test_temp_table_pk_feeds_elimination(psql):
         assert got == want
     finally:
         psql._compiler.constraints.fks.clear()
-        psql._compiler._catalog_epoch += 1
-        psql._compiler._plan_cache.clear()
         psql.spark.catalog.dropTempView("dim_po")

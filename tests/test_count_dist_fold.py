@@ -18,15 +18,6 @@ import duckdb
 import pytest
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _no_plan_cache(spark):
-    """The fold-fired flag is per-compile; a plan-cache hit skips the
-    compile and leaves it stale, so this module compiles fresh."""
-    spark.conf.set("spark.psql.planCache", "false")
-    yield
-    spark.conf.set("spark.psql.planCache", "true")
-
-
 @pytest.fixture(scope="module")
 def fold_env(spark, tmp_path_factory):
     """Writes a small customer/orders pair with every edge the fold must

@@ -15,13 +15,6 @@ import duckdb
 import pytest
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _no_plan_cache(spark):
-    spark.conf.set("spark.psql.planCache", "false")
-    yield
-    spark.conf.set("spark.psql.planCache", "true")
-
-
 @pytest.fixture(scope="module")
 def kg_env(spark, tmp_path_factory):
     from duckdb_psql_spark import PsqlSession

@@ -17,17 +17,11 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _fresh(psql, text):
-    # bypass the plan cache so each compile re-evaluates the gates
-    psql._compiler._plan_cache.clear()
-    return psql.sql(text)
-
-
 def _off(psql, text):
     """Compile ``text`` with the pass switched off."""
     psql.spark.conf.set("spark.psql.localSortSmall", "false")
     try:
-        return _fresh(psql, text)
+        return psql.sql(text)
     finally:
         psql.spark.conf.unset("spark.psql.localSortSmall")
 
@@ -38,7 +32,7 @@ def test_agg_order_by_drops_range_exchange(psql, sf_dir):
         "select o_orderstatus, count() as n group by o_orderstatus |> "
         "order by n desc, o_orderstatus"
     )
-    df = _fresh(psql, q)
+    df = psql.sql(q)
     plan = _plan(df)
     assert "rangepartitioning" not in plan
     # the local sort sits over a 1-partition coalesce, not an exchange
@@ -53,7 +47,7 @@ def test_rewrite_values_identical(psql, sf_dir):
         "order by l_returnflag, l_linestatus"
     )
     expected = _off(psql, q).collect()
-    got = _fresh(psql, q).collect()
+    got = psql.sql(q).collect()
     assert got == expected
 
 
@@ -64,7 +58,7 @@ def test_narrow_pipeline_keeps_parallel_sort(psql, sf_dir):
         f"from '{sf_dir}/customer.parquet' |> "
         "select c_custkey, length(c_name) as n |> order by c_custkey"
     )
-    plan = _plan(_fresh(psql, q))
+    plan = _plan(psql.sql(q))
     assert "rangepartitioning" in plan
 
 
@@ -76,7 +70,7 @@ def test_order_by_limit_untouched(psql, sf_dir):
         "select o_orderstatus, count() as n group by o_orderstatus |> "
         "order by n desc |> limit 2"
     )
-    plan = _plan(_fresh(psql, q))
+    plan = _plan(psql.sql(q))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -90,15 +84,14 @@ def test_off_switch(psql, sf_dir):
 
 
 def test_conf_flip_after_cached_compose(psql, sf_dir):
-    # the plan-cache key carries the conf: turning the pass off after a
-    # cached compose must recompile, not return the local-sort plan
+    # turning the pass off after a compose it fired on must give the
+    # next compose of the same text the range-sort plan
     q = (
         f"from '{sf_dir}/orders.parquet' |> "
         "select o_orderpriority, count() as n group by o_orderpriority |> "
         "order by n desc, o_orderpriority"
     )
     on = psql.sql(q)
-    assert psql.sql(q) is on
     assert "rangepartitioning" not in _plan(on)
     psql.spark.conf.set("spark.psql.localSortSmall", "false")
     try:
@@ -117,5 +110,5 @@ def test_order_by_non_projected_column(psql, sf_dir):
         "select o_custkey |> order by o_custkey"
     )
     expected = _off(psql, q).collect()
-    df = _fresh(psql, q)
-    assert _fresh(psql, q).collect() == expected
+    df = psql.sql(q)
+    assert psql.sql(q).collect() == expected

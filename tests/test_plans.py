@@ -512,8 +512,7 @@ def test_align_exists_probes_reuses_exchange(psql, spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
     n_on = df.collect()[0].n
-    # the plan-cache key folds in every spark.psql.* conf, so the
-    # off-switch alone makes the second compose miss and recompile
+    # the off-switch applies from the next compose on
     psql.spark.conf.set("spark.psql.alignExistsProbes", "false")
     try:
         df_off = psql.sql(q)
