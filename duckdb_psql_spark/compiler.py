@@ -401,6 +401,10 @@ class Compiler:
         # spark.psql.* snapshot of the statement being compiled
         # (confs.read); compile_statement refreshes it once per statement
         self.confs = dict(confs_mod.PSQL)
+        # summed bytes of the statement's path literals, -1 when it has
+        # none (_statement_source_bytes); read by the local-sort and
+        # block-persist gates
+        self._stmt_source_bytes = -1
         self.last_count_dist_fold = False
         self.last_distinct_elim = False
         self.last_keyed_groupby_elim = False
@@ -436,9 +440,9 @@ class Compiler:
         # compilation mutates per-statement state (_pending_views); one
         # statement at a time per compiler
         text = strip_comments(text)
-        self.confs = confs_mod.read(self.spark)
-        self._tune_for_statement_sources(text)
         with self._lock:
+            self.confs = confs_mod.read(self.spark)
+            self._stmt_source_bytes = _statement_source_bytes(text)
             self._release_persisted_state()
             df = self._compile_statement_locked(text)
             return self._local_sort_small_result(df)
@@ -461,11 +465,9 @@ class Compiler:
         stage into one task.
 
         Gates (all must hold):
-        * the statement's summed source bytes are known and under the
-          small-statement band (< STMT_SMALL_BYTES, 64 MB) — above it
-          the parallel range sort is the right plan and the coalesce
-          would serialize real work (scale-adaptive, like the statement
-          bands themselves);
+        * the statement's summed source bytes are known and under
+          ``TINY_INPUT_BYTES`` (64 MB) — above it the parallel range sort
+          is the right plan and the coalesce would serialize real work;
         * the analyzed root is a global Sort (optionally under a bare
           Project, which Spark adds when ORDER BY references columns
           the SELECT dropped);
@@ -481,10 +483,9 @@ class Compiler:
         try:
             if not self.confs["spark.psql.localSortSmall"]:
                 return df
-            from .session import STMT_SMALL_BYTES
+            from .session import TINY_INPUT_BYTES
 
-            nbytes = getattr(self, "_stmt_source_bytes", -1)
-            if not (0 <= nbytes < STMT_SMALL_BYTES):
+            if not (0 <= self._stmt_source_bytes < TINY_INPUT_BYTES):
                 return df
             root = df._jdf.queryExecution().analyzed()
             wrap_project = None
@@ -528,47 +529,6 @@ class Compiler:
             except Exception:  # noqa: BLE001
                 pass
         self._persisted_views.clear()
-
-    def _tune_for_statement_sources(self, text: str) -> None:
-        """Size session parallelism confs to THIS statement's inputs.
-
-        Sums the on-disk bytes of the statement's distinct path literals
-        (the proxy the scale passes already use) and lets
-        ``session.tune_for_statement`` pick the band: a 25 MB
-        customer⋈orders statement inside a 2 GB dataset should not run
-        with 64 reduce partitions and 128 MB scan splits (sweep
-        evidence in that function's docstring). Statements with no
-        path literals (catalog tables, views, DDL) are left on the
-        session's current profile."""
-        try:
-            from .session import tune_for_statement
-
-            paths = set()
-            for t in tokenize(text):
-                if t.kind == "string":
-                    p = t.text[1:-1].replace("''", "'")
-                    if ("/" in p or p.endswith(".parquet")) and os.path.exists(p):
-                        paths.add(p)
-            self._stmt_source_bytes = (
-                sum(_path_bytes(p) for p in paths) if paths else -1
-            )
-            if paths:
-                if self.confs["spark.psql.stmtTune"]:
-                    tune_for_statement(self.spark, self._stmt_source_bytes)
-            else:
-                # no path literals — the statement's real inputs (views,
-                # catalog tables, attached names) are invisible to this
-                # scan, so fall back to the DATASET-level profile rather
-                # than inherit the previous statement's: a tiny preceding
-                # statement must not leave a 60 M-row view query on one
-                # reduce partition with AQE off (measured at sf10), and
-                # statement-order-dependent confs are exactly what sized
-                # the 8-bucket twins in the CLUSTER incident (§8.43)
-                from .session import restore_dataset_profile
-
-                restore_dataset_profile(self.spark)
-        except Exception:  # noqa: BLE001 — tuning must never fail a query
-            pass
 
     def _compile_statement_locked(self, text: str) -> DataFrame:
         stmt = first_statement(text)
@@ -1244,7 +1204,7 @@ class Compiler:
                 )
                 >= 3
                 and not (
-                    0 <= getattr(self, "_stmt_source_bytes", -1)
+                    0 <= self._stmt_source_bytes
                     < self.confs["spark.psql.blockPersist.minBytes"]
                 )
             ):
@@ -2824,17 +2784,9 @@ class Compiler:
         # Bucket-count priority: explicit buckets= > conf pin
         # (spark.psql.cluster.buckets) > bytes-derived default, resolved
         # AFTER the edge walk below so the default can size itself from
-        # the largest participating endpoint. The default must NOT read
-        # spark.sql.shuffle.partitions: that knob is re-tuned per
-        # statement from the statement's own path literals
-        # (_tune_for_statement_sources), and CLUSTER DECLARED KEYS
-        # carries no paths — it inherits whatever the PREVIOUS statement
-        # set. Reproduced at sf10: a preceding tiny DECLARE left
-        # shuffle.partitions=1, the old max(partitions, 8) default wrote
-        # 8-bucket twins of a 1.4 GB fact, and the first co-located join
-        # died building a 7.5 M-row hash relation per task
-        # ("Can't acquire 536870912 bytes"). A pay-once layout decision
-        # must derive from the DATA, not an ephemeral runtime conf.
+        # the largest participating endpoint. A pay-once layout decision
+        # derives from the DATA, not from spark.sql.shuffle.partitions, a
+        # runtime conf sized for query execution.
         buckets: int | None = None
         explicit = kv.get("buckets", self.confs["spark.psql.cluster.buckets"])
         if explicit is not None:
@@ -2958,9 +2910,8 @@ class Compiler:
         if codec.lower() in ("", "none", "default"):
             codec = None
 
-        # resolve sources on THIS thread (the resolver caches and the
-        # per-statement tuner are not thread-safe); only the independent
-        # write jobs fan out
+        # resolve sources on THIS thread (the resolver caches are not
+        # thread-safe); only the independent write jobs fan out
         prepared: list[tuple[tuple[str, str], tuple[str, ...], int, str, object]] = []
         for ep, keys, size in todo:
             kind, ident = ep
@@ -7578,18 +7529,35 @@ def _order_sensitive_stmt(stmt: str) -> bool:
     )
 
 
+def _statement_source_bytes(text: str) -> int:
+    """Summed on-disk bytes of the distinct existing path literals in a
+    statement's text, or -1 when it has none (views, catalog tables,
+    DDL)."""
+    paths = set()
+    for t in tokenize(text):
+        if t.kind == "string":
+            p = t.text[1:-1].replace("''", "'")
+            if ("/" in p or p.endswith(".parquet")) and os.path.exists(p):
+                paths.add(p)
+    return sum(_path_bytes(p) for p in paths) if paths else -1
+
+
 def _path_bytes(path: str) -> int:
-    """Total on-disk bytes of a file or (non-recursive is enough) directory."""
-    try:
-        if os.path.isfile(path):
+    """Total on-disk bytes of a file or directory tree; unreadable files
+    count as 0."""
+    if os.path.isfile(path):
+        try:
             return os.path.getsize(path)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
+        except OSError:
+            return 0
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
                 total += os.path.getsize(os.path.join(root, f))
-        return total
-    except OSError:
-        return 0
+            except OSError:
+                continue
+    return total
 
 
 def _scan_read_schemas(plan: str, path: str) -> list[set[str] | None]:

@@ -20,8 +20,6 @@ from .errors import PsqlCompileError
 MB = 1024 * 1024
 
 PSQL: dict[str, bool | int | str | None] = {
-    # per-statement parallelism bands (session.tune_for_statement)
-    "spark.psql.stmtTune": True,
     # terminal ORDER BY over a reduced result → one-partition local sort
     "spark.psql.localSortSmall": True,
     # declared-key passes
@@ -42,8 +40,10 @@ PSQL: dict[str, bool | int | str | None] = {
     # substitution of bucketed twins for their source paths
     "spark.psql.bucketedTwins": True,
     # persisted scan reuse across self-join branches; maxBytes 0 disables.
-    # The 64 MB floors equal session.TINY_INPUT_BYTES (importing it here
-    # would cycle through session → compiler → confs).
+    # This 64 MB floor and blockPersist's equal session.TINY_INPUT_BYTES,
+    # the cut of tune_for_input's tiny profile and of the local-sort gate
+    # (tests/test_confs.py checks it; importing it here would cycle
+    # through session → compiler → confs).
     "spark.psql.scanReuse.maxBytes": 4096 * MB,
     "spark.psql.scanReuse.minBytes": 64 * MB,
     "spark.psql.scanReuse.copartition": True,

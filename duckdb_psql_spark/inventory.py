@@ -56,35 +56,6 @@ def _psql(spark: SparkSession) -> PsqlSession:
     return session
 
 
-def _tune_tables(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    """Statement-size the session confs for a CALLABLE inventory entry.
-
-    Piped entries get this automatically from the compiler's
-    path-literal scan (compiler._tune_for_statement_sources); callables
-    compose DataFrames directly, so they declare their input tables
-    here. Same bands as session.tune_for_statement."""
-    import os as _os
-
-    from .confs import read as read_confs
-    from .session import tune_for_statement
-
-    total = 0
-    for t in tables:
-        p = f"{sf_dir}/{t}.parquet"
-        try:
-            if _os.path.isdir(p):
-                total += sum(
-                    _os.path.getsize(_os.path.join(p, f))
-                    for f in _os.listdir(p)
-                )
-            else:
-                total += _os.path.getsize(p)
-        except OSError:
-            pass
-    if read_confs(spark)["spark.psql.stmtTune"]:
-        tune_for_statement(spark, total)
-
-
 def _pipe(template: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _psql(spark).sql(template.replace("$SF", sf_dir))
@@ -2718,7 +2689,6 @@ _q(
 def _op_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_dup_pairs
 
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # unique_ids: doc_id is the corpus primary key by construction (one
     # row per document at every SF) → the round-14 Arrow signature
@@ -2933,7 +2903,6 @@ def _op_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.text import bm25_scores
 
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = bm25_scores(docs, ["table", "hash", "merge", "window"])
     return out.select(
@@ -3112,7 +3081,6 @@ def _op_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.text import ngram_lm_score
 
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = ngram_lm_score(docs, docs.where("doc_id % 10 = 0"))
     return out.select(
@@ -3710,7 +3678,6 @@ _q(
 def _op_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_dup_pairs
 
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # max_hamming=3 with the default 4 bands: 16-bit chunks keep buckets
     # selective (pigeonhole-complete recall needs bands > max_hamming).
@@ -3819,7 +3786,6 @@ def _op_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import semdedup
     from .operators.similarity import random_planes
 
-    _tune_tables(spark, sf_dir, "embeddings")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # fixed seeded centroids (same generator as the LSH planes) so the
     # oracle mirrors the assignment arithmetically; the k-means path is
@@ -3875,7 +3841,6 @@ def _op_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.text import dsir_weights
 
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     target = docs.filter("lang = 'en' and doc_id % 7 = 0")
     out = dsir_weights(docs, target, buckets=512, hash_mode="md5")
@@ -3942,7 +3907,6 @@ _q(
 def _op_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import knn_topk_arrow
 
-    _tune_tables(spark, sf_dir, "embeddings")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # query vectors are collected here (4 rows) — part of executing the
     # op, mirroring how a caller holds its query set driver-side
@@ -4564,7 +4528,6 @@ def _op_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.resolver import SourceResolver
     from .streaming import stream_tumbling_counts
 
-    _tune_tables(spark, sf_dir, "events")
     events = SourceResolver(spark).resolve(f"{sf_dir}/events.parquet")
     return stream_tumbling_counts(events, window="1 hour")
 
@@ -4583,8 +4546,6 @@ _q(
 def _op_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.resolver import SourceResolver
     from .streaming import stream_sliding_counts
-
-    _tune_tables(spark, sf_dir, "events")
 
     events = SourceResolver(spark).resolve(f"{sf_dir}/events.parquet")
     return stream_sliding_counts(events, window="1 hour", slide="15 minutes")
@@ -4612,8 +4573,6 @@ _q(
 def _op_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.resolver import SourceResolver
     from .streaming import sessionize
-
-    _tune_tables(spark, sf_dir, "events")
 
     events = SourceResolver(spark).resolve(f"{sf_dir}/events.parquet")
     return sessionize(events, gap="30 minutes")

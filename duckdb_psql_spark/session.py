@@ -12,11 +12,10 @@ matching the reference's pass-through behavior
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .compiler import Compiler
+from .compiler import Compiler, _path_bytes
 
 
 class PsqlSession:
@@ -137,22 +136,21 @@ _TINY_DEFAULTS = {
 def tune_for_input(spark: SparkSession, data_dir: str) -> int:
     """Size runtime session confs to the actual input footprint.
 
-    Measures ``data_dir`` once (local filesystem walk) and flips the four
-    runtime-settable parallelism confs to the tiny-input profile when the
-    whole dataset is smaller than ``TINY_INPUT_BYTES``; restores the
-    scale profile (AQE on — measured faster at sf1+, see
-    BENCH_sf1/sf10.json) otherwise. Config sweep evidence:
-    scripts/bench_tiny_sf.py / bench_tiny_sf2.py — the tiny profile takes
-    the sf0.1 headline total from ~8.6s to ~6s; each knob was measured
-    individually and jointly. Returns the measured byte total.
+    Measures ``data_dir`` once (local filesystem walk) and sets the
+    runtime-settable parallelism confs: the tiny-input profile when the
+    whole dataset is smaller than ``TINY_INPUT_BYTES``, the scale profile
+    (AQE on — measured faster at sf1+, see BENCH_sf1/sf10.json)
+    otherwise. Config sweep evidence: scripts/bench_tiny_sf.py /
+    bench_tiny_sf2.py — the tiny profile takes the sf0.1 headline total
+    from ~8.6s to ~6s; each knob was measured individually and jointly.
+
+    This is the engine's one sizing call, and the caller makes it
+    explicitly, once. Composing a statement never changes a Spark conf:
+    every statement plans under the session's confs as they stand when
+    it runs, so a later ``SET`` by the user wins. Returns the measured
+    byte total.
     """
-    total = 0
-    for root, _dirs, files in os.walk(data_dir):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                continue
+    total = _path_bytes(data_dir)
     if total < TINY_INPUT_BYTES:
         profile = dict(_TINY_DEFAULTS)
     else:
@@ -170,110 +168,7 @@ def tune_for_input(spark: SparkSession, data_dir: str) -> int:
         )
     for k, v in profile.items():
         spark.conf.set(k, v)
-    # remember the dataset-level choice so statements whose inputs the
-    # per-statement tuner can't see (views, catalog tables, attached
-    # names — no path literal in their own text) can RESTORE it instead
-    # of inheriting whatever profile the previous statement set: a big
-    # view query after a tiny DECLARE must not run its whole shuffle
-    # through the tiny band's single reduce partition (measured +40% on
-    # a 60 M-row view agg at sf10, and the same inheritance sized the
-    # CLUSTER DECLARED KEYS twins before that default went bytes-derived)
-    _DATASET_PROFILES[spark] = dict(profile)
     return total
-
-
-# dataset-level conf profile per live SparkSession, weakly keyed
-# (ADVICE r12: id()-keyed strong refs pinned every stopped session —
-# and its JVM-side wrapper — for the process lifetime; the weak key
-# also removes the id()-reuse hazard the old stored-session guard
-# existed for)
-_DATASET_PROFILES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def restore_dataset_profile(spark: SparkSession) -> bool:
-    """Re-apply the profile ``tune_for_input`` chose for this session.
-
-    Returns False (and changes nothing) if ``tune_for_input`` never ran
-    for this session — callers then keep the current confs."""
-    profile = _DATASET_PROFILES.get(spark)
-    if profile is None:
-        return False
-    for k, v in profile.items():
-        spark.conf.set(k, v)
-    return True
-
-
-# Statement-size bands for tune_for_statement. Sweep evidence
-# (BENCH_MIDBAND_sf1_r7.json + the probe runs recorded in SURVEY §8.9):
-# at sf1 the 128 MB default split made the 125 MB lineitem a SINGLE scan
-# task on 32 cores, and cluster-sized reduce parallelism + AQE's
-# per-exchange re-plan barrier taxed every sub-second statement ~2x.
-STMT_TINY_BYTES = 8 * 1024 * 1024
-STMT_SMALL_BYTES = TINY_INPUT_BYTES  # 64 MB
-
-
-def tune_for_statement(spark: SparkSession, stmt_bytes: int) -> None:
-    """Size runtime parallelism confs to ONE statement's input footprint.
-
-    The dataset-level ``tune_for_input`` picks a global profile, but a
-    208 MB dataset still contains 25 MB statements (q13 reads only
-    customer+orders) that drown in cluster-sized parallelism. Bands,
-    each interleave-swept (scripts/bench_midband.py + SURVEY §8.9
-    probes; sf1 q13 1.15→0.75s, q_union 0.33→0.15s; sf10 q13
-    1.23→0.91s, q_union 0.59→0.37s; sf0.1/sf10 headline profiles
-    unchanged by construction):
-
-    * < 8 MB — everything broadcastable: AQE off, 1 reduce partition,
-      2 MB splits (the sf0.1-winning tiny profile). The boundary moved
-      24 MB → 8 MB in round 10: a 10-round interleaved full-headline
-      A/B at sf0.1 (BENCH_STMT_TINY_CUT_AB_sf0.1.json) has the 8 MB cut
-      winning 7/10 rounds, mean −0.30 s (−6.4%) — one reduce partition
-      serializes the window/join sorts of the 10.8 MB lineitem
-      statements, while sub-8 MB statements still prefer the one-wave
-      plan. A UNIFORM p=8 tiny band was also measured and LOSES
-      (4.80/5.01 vs 4.37/4.82) — the small-statement regression
-      outweighs the window win, hence the byte-banded split;
-    * < 64 MB — same but 8 reduce partitions (a 27 MB orders side is
-      past the broadcast threshold; 1 partition would serialize that
-      join — measured 3x regression on q_left_join_nulls);
-    * < 1 GiB — AQE on, cores-sized reduce partitions, scan splits
-      sized to give every core a task (bytes/cores clamped to
-      [8 MB, 128 MB]);
-    * >= 1 GiB — the large-input scale profile (2x-cores partitions,
-      128 MB splits) exactly as ``tune_for_input`` sets it.
-
-    Spark binds these confs when an action plans the query, not when
-    the DataFrame is composed — with interleaved compose-then-run of
-    several statements, the last-composed profile applies. Harness and
-    bench paths compose and execute one statement at a time.
-    Callers skip it when ``spark.psql.stmtTune`` is false.
-    """
-    if stmt_bytes <= 0:
-        return
-    mb = 1024 * 1024
-    cores = spark.sparkContext.defaultParallelism
-    if stmt_bytes < STMT_TINY_BYTES:
-        profile = dict(_TINY_DEFAULTS)
-    elif stmt_bytes < STMT_SMALL_BYTES:
-        profile = dict(_TINY_DEFAULTS)
-        profile["spark.sql.shuffle.partitions"] = "8"
-    elif stmt_bytes < LARGE_INPUT_BYTES:
-        profile = dict(_SCALE_DEFAULTS)
-        profile["spark.sql.shuffle.partitions"] = str(max(cores, 4))
-        profile["spark.sql.files.maxPartitionBytes"] = str(
-            min(max(stmt_bytes // max(cores, 1), 8 * mb), 128 * mb)
-        )
-    else:
-        profile = dict(_SCALE_DEFAULTS)
-        profile["spark.sql.shuffle.partitions"] = str(max(2 * cores, 4))
-    # never override the broadcast threshold per statement: the band
-    # profiles agree within 2 MB anyway, and users/tests legitimately
-    # pin it (e.g. -1 to force shuffle shapes in plan assertions)
-    profile.pop("spark.sql.autoBroadcastJoinThreshold", None)
-    for k, v in profile.items():
-        spark.conf.set(k, v)
 
 
 def default_spark(app_name: str = "duckdb-psql-spark", cpus: int | None = None) -> SparkSession:
@@ -283,6 +178,8 @@ def default_spark(app_name: str = "duckdb-psql-spark", cpus: int | None = None) 
     same configs apply per-executor. AQE handles runtime coalescing and
     skew joins; shuffle partitions default to the core count locally (at
     cluster scale, AQE coalesces from a deliberately high initial value).
+    These confs stay as they are for every statement unless the caller
+    sizes them with ``tune_for_input`` or changes them with ``SET``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)

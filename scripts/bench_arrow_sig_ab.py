@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from duckdb_psql_spark.session import default_spark, tune_for_statement  # noqa: E402
+from duckdb_psql_spark.session import default_spark  # noqa: E402
 
 
 def sym_diff(x, y) -> int:
@@ -61,7 +61,6 @@ def main() -> None:
             os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)
         )
     )
-    tune_for_statement(spark, sz)
     docs = spark.read.parquet(path)
     res: dict = {"sf_dir": sf_dir, "input_bytes": sz}
 

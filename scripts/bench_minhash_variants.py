@@ -72,7 +72,6 @@ def main() -> None:
     check_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 
     from duckdb_psql_spark.session import default_spark, tune_for_input
-    from duckdb_psql_spark.inventory import _tune_tables
     from duckdb_psql_spark.operators import dedup as dd
 
     spark = default_spark(app_name="minhash-variants")
@@ -114,7 +113,6 @@ def main() -> None:
     print("est value check: identical", file=sys.stderr)
 
     # --- timing at sf_dir, interleaved ------------------------------
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     import random as _random

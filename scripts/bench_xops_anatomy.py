@@ -41,7 +41,6 @@ def main() -> None:
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/xops_anatomy.json"
 
     from duckdb_psql_spark.session import default_spark, tune_for_input
-    from duckdb_psql_spark.inventory import _tune_tables
     from duckdb_psql_spark.operators import dedup as dd
     from duckdb_psql_spark.operators.text import quality_score
 
@@ -49,7 +48,6 @@ def main() -> None:
     tune_for_input(spark, sf_dir)
     res: dict = {"sf_dir": sf_dir}
 
-    _tune_tables(spark, sf_dir, "documents")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     # --- common: scan + tokenize ------------------------------------

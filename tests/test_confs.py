@@ -2,6 +2,7 @@
 ``spark.psql.*`` key, one boolean parser, and a drift guard over the
 package sources."""
 
+import ast
 import pathlib
 import re
 
@@ -44,6 +45,54 @@ def test_only_deployment_env_switches():
     assert set(used) - ALLOWED_ENV == set(), used
 
 
+# the only code that writes Spark confs: the session's dialect settings,
+# the explicit input sizing call, the pin job's constraint-propagation
+# flip and the resolver's TIMESTAMP(NANOS) read setting
+CONF_WRITERS = {
+    ("session.py", "PsqlSession.__init__"),
+    ("session.py", "tune_for_input"),
+    ("compiler.py", "Compiler._pin"),
+    ("resolver.py", "spark.sql.legacy.parquet.nanosAsLong"),
+}
+
+
+def _conf_writes(path: pathlib.Path) -> set[tuple[str, str]]:
+    """(file, enclosing def) of every ``….conf.set/unset`` call; the
+    resolver's writes are named by their key instead."""
+    found = set()
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("set", "unset")
+                and re.search(r"(^|\.)_?j?conf$", ast.unparse(child.func.value))
+            ):
+                key = child.args[0] if child.args else None
+                if path.name == "resolver.py" and isinstance(key, ast.Constant):
+                    found.add((path.name, key.value))
+                else:
+                    found.add((path.name, scope))
+            visit(child, inner)
+
+    visit(ast.parse(path.read_text()), "")
+    return found
+
+
+def test_confs_written_only_at_allowed_sites():
+    """Composing a statement must not write Spark confs (they would land
+    on whichever statement runs next, over the user's SET)."""
+    sites = set()
+    for path in PKG.rglob("*.py"):
+        sites |= _conf_writes(path)
+    assert sites == CONF_WRITERS
+
+
 def test_byte_floors_match_session_constant():
     from duckdb_psql_spark.session import TINY_INPUT_BYTES
 
@@ -79,4 +128,4 @@ def test_snapshot_reads_session_values(spark):
         spark.conf.unset("spark.psql.cluster.buckets")
     assert snap["spark.psql.cluster.codec"] == "snappy"
     assert snap["spark.psql.cluster.buckets"] == 12
-    assert snap["spark.psql.stmtTune"] is True
+    assert snap["spark.psql.localSortSmall"] is True

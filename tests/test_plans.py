@@ -269,12 +269,9 @@ def test_scan_reuse_copartitioned_persist(psql, sf):
     )
     # tiny SF broadcasts every join (no exchanges → the pass is a no-op),
     # so force the shuffle shape the pass targets at real scale, and drop
-    # the size gate so it fires on the test fixture; statement-size
-    # tuning would re-tinify the confs per statement, so pin it off —
-    # and pin the parallelism too (with stmtTune off the session keeps
-    # whatever profile the PREVIOUS statement selected; partitions=1
-    # would collapse the asserted hashpartitioning exchange)
-    psql.spark.conf.set("spark.psql.stmtTune", "false")
+    # the size gate so it fires on the test fixture; pin the parallelism
+    # too (partitions=1 would collapse the asserted hashpartitioning
+    # exchange)
     psql.spark.conf.set("spark.sql.shuffle.partitions", "4")
     psql.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     psql.spark.conf.set("spark.psql.scanReuse.minBytes", "0")
@@ -296,7 +293,6 @@ def test_scan_reuse_copartitioned_persist(psql, sf):
         assert "InMemoryTableScan" in plan2 and not recluster.search(plan2)
         psql.spark.catalog.clearCache()
     finally:
-        psql.spark.conf.unset("spark.psql.stmtTune")
         psql.spark.conf.unset("spark.sql.shuffle.partitions")
         psql.spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         psql.spark.conf.unset("spark.psql.scanReuse.copartition")
@@ -508,13 +504,18 @@ def test_align_exists_probes_reuses_exchange(psql, spark, sf_dir):
         "and l3.l_shipdate > od + interval 60 day) |> "
         "select count() as n"
     )
-    df = psql.sql(q)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan
-    n_on = df.collect()[0].n
-    # the off-switch applies from the next compose on
-    psql.spark.conf.set("spark.psql.alignExistsProbes", "false")
+    # an unexecuted adaptive plan (AdaptiveSparkPlan isFinalPlan=false)
+    # shows no ReusedExchange: assert on the static plan
+    aqe = "spark.sql.adaptive.enabled"
+    prev_aqe = psql.spark.conf.get(aqe)
+    psql.spark.conf.set(aqe, "false")
     try:
+        df = psql.sql(q)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in plan
+        n_on = df.collect()[0].n
+        # the off-switch applies from the next compose on
+        psql.spark.conf.set("spark.psql.alignExistsProbes", "false")
         df_off = psql.sql(q)
         assert "ReusedExchange" not in (
             df_off._jdf.queryExecution().executedPlan().toString()
@@ -522,6 +523,7 @@ def test_align_exists_probes_reuses_exchange(psql, spark, sf_dir):
         assert df_off.collect()[0].n == n_on
     finally:
         psql.spark.conf.unset("spark.psql.alignExistsProbes")
+        psql.spark.conf.set(aqe, prev_aqe)
 
 
 def test_align_exists_probes_leaves_nonmatching(psql, sf_dir):

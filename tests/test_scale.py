@@ -324,47 +324,3 @@ def test_defer_dims_skips_eager_agg_until_flush(psql, spark, sf_dir):
         spark.conf.unset("spark.psql.deferDimJoins.smallBytes")
         spark.conf.unset("spark.psql.deferDimJoins.bigBytes")
 
-
-def test_stmt_band_env_defaults(spark):
-    """A '0' string default once silently disabled the tiny band (round
-    10). Pin the bands: sub-cut statements take p=1/AQE-off, the mid
-    band divides splits by cores."""
-    import duckdb_psql_spark.session as S
-
-    S.tune_for_statement(spark, 4 * 1024 * 1024)  # < 8MB cut
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    S.tune_for_statement(spark, 200 * 1024 * 1024)  # mid band
-    cores = spark.sparkContext.defaultParallelism
-    expected = min(max(200 * 1024 * 1024 // cores, 8 * 1024 * 1024),
-                   128 * 1024 * 1024)
-    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == str(expected)
-
-
-def test_sourceless_statement_restores_dataset_profile(spark, psql, sf_dir):
-    """A statement with no path literals (views, catalog tables) must
-    run on the DATASET-level profile, not whatever the previous
-    statement's per-statement tuning left behind: a tiny preceding
-    statement otherwise leaves a big view query on one reduce partition
-    with AQE off (measured +40% on a 60 M-row view agg at sf10, and the
-    same inheritance mis-sized the CLUSTER DECLARED KEYS twins)."""
-    import duckdb_psql_spark.session as S
-
-    # simulate the dataset-level choice tune_for_input makes at scale
-    S._DATASET_PROFILES[spark] = {
-        "spark.sql.shuffle.partitions": "48",
-        "spark.sql.adaptive.enabled": "true",
-    }
-    try:
-        psql.sql(f"create view tune_probe_v as "
-                 f"(| from '{sf_dir}/orders.parquet' |> select o_orderkey |)")
-        # tiny path statement drags the session into the tiny band
-        psql.sql(f"from '{sf_dir}/region.parquet' |> select count() as n")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        # sourceless view statement restores the dataset profile
-        psql.sql("from tune_probe_v |> select count() as n").collect()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "48"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    finally:
-        S._DATASET_PROFILES.pop(spark, None)
-        spark.catalog.dropTempView("tune_probe_v")
