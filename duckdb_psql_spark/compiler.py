@@ -3,12 +3,14 @@
 Where the reference rewrites ``A |> B |> C`` into nested ``FROM ( … )``
 SQL text and hands it to DuckDB (``/root/reference/src/psql_extension.cpp:28-49``,
 ``README.md:68-87``), we compile each stage into one DataFrame
-transformation and hand the chain to Catalyst (SURVEY.md §3.4). The
-mechanism is parameterized ``spark.sql("SELECT … FROM {__pipe} …",
-__pipe=prev_df)`` — every stage is a declarative logical-plan node, no
-temp-view catalog pollution, and Catalyst's CollapseProject /
-PushDownPredicates / ColumnPruning flatten the chain exactly as DuckDB's
-optimizer flattens the reference's nested FROMs (SURVEY.md §4.2).
+transformation and hand the chain to Catalyst (SURVEY.md §3.4): SQL
+text ``SELECT … FROM {__pipe} …`` whose placeholders ``Compiler._bind``
+names as per-statement temp views, all dropped at statement end through
+the session catalog (analysis is eager; no cache entry is touched), so
+composing leaves the catalog and the cache as it found them. Catalyst's
+CollapseProject / PushDownPredicates / ColumnPruning flatten the chain
+exactly as DuckDB's optimizer flattens the reference's nested FROMs
+(SURVEY.md §4.2).
 
 Statement forms (conformance surface, SURVEY.md §2.B):
 
@@ -27,7 +29,7 @@ import itertools
 import math
 import os
 import re
-import sys
+import string
 import threading
 import uuid
 from dataclasses import dataclass, replace
@@ -289,13 +291,8 @@ def _twin_table_name(path: str, keys: tuple[str, ...] | list[str]) -> str:
 
 
 def _esc(text: str) -> str:
-    """Escape braces so user text survives PySpark's SQL string formatter."""
+    """Escape braces so user text survives ``Compiler._run_sql``."""
     return text.replace("{", "{{").replace("}", "}}")
-
-
-def _unesc(text: str) -> str:
-    """Undo _esc for statements that end up with no formatter parameters."""
-    return text.replace("{{", "{").replace("}}", "}")
 
 
 @dataclass
@@ -339,11 +336,19 @@ class Compiler:
         # share the temp-view catalog, so generated names must not collide
         self._tag = uuid.uuid4().hex[:8]
         self._lock = threading.Lock()
-        # temp views registered while compiling the current statement (blocks,
-        # CTEs); dropped when the statement's plan is fully built — NOT when
-        # the registering scope ends, because later pipe stages may still
-        # reference a CTE name (e.g. `with a as (|…|) from a |> join b`).
-        self._pending_views: list[str] = []
+        # the statement's view names (_bind: id → (df, name), holding df
+        # so its id is not reused; _bind_cte: CTE name → the temp view it
+        # shadows, or None), dropped by _end_statement once the plan is
+        # built: later stages may still use a CTE (`… from a |> join b`)
+        self._bound: dict[int, tuple[DataFrame, str]] = {}
+        self._view_ids = itertools.count()  # _ids also numbers plan aliases
+        self._stashed_views: dict[str, object] = {}
+        # looked up once: the session catalog (its dropTempView only
+        # removes the entry; spark.catalog.dropTempView uncaches every
+        # same-result plan) and the local-sort gate's reduction patterns
+        self._jcatalog = spark._jsparkSession.sessionState().catalog()
+        patterns = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        self._reductions = (patterns.AGGREGATE(), patterns.WINDOW())
         # Running base-bytes estimate of the CURRENT pipe chain's inputs
         # (sum of the head path + every joined path), used by the
         # size-aware broadcast hint in _apply_stage_sql. None = unknown
@@ -352,23 +357,10 @@ class Compiler:
         # block DataFrames persisted because their CTE name is referenced
         # more than once (DuckDB materializes such CTEs; without this the
         # whole sub-plan — scans and aggregations included — executes once
-        # per reference). Unpersisted at the NEXT statement compile:
-        # unpersist only drops the cache, never correctness.
+        # per reference). Unpersisted at the NEXT statement compile, or
+        # at the end of a statement that fails: unpersist only drops the
+        # cache, never correctness.
         self._persisted_blocks: list[DataFrame] = []
-        # blocks whose persist() must wait until the statement is fully
-        # compiled: every parameterized spark.sql() stage call registers a
-        # `_pyspark_*` temp view over the previous stage and drops it with
-        # a CASCADE uncache when the call returns — which would evict a
-        # cache whose plan is contained in that view's plan. Persisting
-        # after the last stage call sidesteps the cascade; substitution
-        # into the physical plan happens at execution time, so the late
-        # persist still takes effect.
-        self._blocks_to_persist: list[DataFrame] = []
-        # temp views whose drop must wait until the persisted blocks are
-        # released: Catalog.dropTempView cascades an uncacheQuery over
-        # plans referencing the view, which would evict the cache the
-        # moment the statement finished compiling
-        self._persisted_views: list[str] = []
         # re-entrancy guard for the scan-reuse recompile pass
         self._in_scan_reuse = False
         # session-scoped DuckDB-style macros (name → Macro); expanded as
@@ -437,15 +429,52 @@ class Compiler:
     # ------------------------------------------------------------------
 
     def compile_statement(self, text: str) -> DataFrame:
-        # compilation mutates per-statement state (_pending_views); one
-        # statement at a time per compiler
+        # compilation mutates per-statement state (the bound view names);
+        # one statement at a time per compiler
         text = strip_comments(text)
         with self._lock:
             self.confs = confs_mod.read(self.spark)
             self._stmt_source_bytes = _statement_source_bytes(text)
             self._release_persisted_state()
-            df = self._compile_statement_locked(text)
-            return self._local_sort_small_result(df)
+            try:
+                return self._local_sort_small_result(
+                    self._compile_statement_locked(text))
+            except BaseException:
+                self._release_persisted_state()
+                raise
+            finally:
+                self._end_statement()
+
+    def _bind(self, df: DataFrame) -> str:
+        """``df``'s temp-view name for this statement, registered once."""
+        hit = self._bound.get(id(df))
+        if hit is not None:
+            return hit[1]
+        name = f"__psql_{self._tag}_{next(self._view_ids)}"
+        df.createOrReplaceTempView(name)
+        self._bound[id(df)] = (df, name)
+        return name
+
+    def _bind_cte(self, name: str, df: DataFrame) -> None:
+        """Register a CTE under the user's ``name`` for this statement,
+        stashing the temp view it shadows for ``_end_statement``. The old
+        entry leaves first: a replace over another plan uncaches it."""
+        if name not in self._stashed_views:
+            raw = self._jcatalog.getRawTempView(name)
+            self._stashed_views[name] = raw.get() if raw.isDefined() else None
+        self._jcatalog.dropTempView(name)
+        df.createOrReplaceTempView(name)
+
+    def _end_statement(self) -> None:
+        """Drop the statement's names; restore what its CTEs shadowed."""
+        for _, name in self._bound.values():
+            self._jcatalog.dropTempView(name)
+        for name, raw in self._stashed_views.items():
+            self._jcatalog.dropTempView(name)
+            if raw is not None:
+                self._jcatalog.createTempView(name, raw, True)
+        self._bound.clear()
+        self._stashed_views.clear()
 
     def _local_sort_small_result(self, df: DataFrame) -> DataFrame:
         """Terminal global ORDER BY over a reduced result → one-partition
@@ -497,10 +526,9 @@ class Compiler:
             if not getattr(root, "global")():
                 return df
             child = root.child()
-            # reduction check on the logical plan text: Aggregate and
-            # Window nodes render as leading words of their plan lines
-            if not re.search(r"(?m)^[\s:+-]*(Aggregate|Window) ",
-                             child.toString()):
+            # reduction check on the plan's tree-pattern bits (subquery
+            # plans included): one py4j call per pattern, no plan string
+            if not any(child.containsPattern(p) for p in self._reductions):
                 return df
             jvm = self.spark._jvm
             logical = jvm.org.apache.spark.sql.catalyst.plans.logical
@@ -516,19 +544,13 @@ class Compiler:
             return df
 
     def _release_persisted_state(self) -> None:
-        """Unpin the previous statement's persisted blocks and views."""
+        """Unpin the previous statement's persisted blocks."""
         for old in self._persisted_blocks:
             try:
                 old.unpersist()
             except Exception:  # noqa: BLE001 — session may be stopping
                 pass
         self._persisted_blocks.clear()
-        for v in self._persisted_views:
-            try:
-                self.spark.catalog.dropTempView(v)
-            except Exception:  # noqa: BLE001
-                pass
-        self._persisted_views.clear()
 
     def _compile_statement_locked(self, text: str) -> DataFrame:
         stmt = first_statement(text)
@@ -840,93 +862,77 @@ class Compiler:
                     for sname, c in counts.items():
                         sequences_mod.advance(self._sequences[sname], n * c)
                 return df
-        try:
-            had_psql = has_psql_tokens(stmt)
-            if had_psql:
-                stmt = self._substitute_blocks(stmt)
-            copy_from = self._parse_copy_from(stmt)
-            if copy_from is not None:
-                return self._run_copy_from(*copy_from)
-            dml = self._parse_mutation(stmt)
-            if dml is not None:
-                return self._run_mutation(*dml)
-            mi = merge_mod.parse_merge(stmt)
-            if mi is not None:
-                return self._run_merge(mi)
-            alt = self._run_alter(stmt)
-            if alt is not None:
-                return alt
-            copy = self._parse_copy(stmt)
-            if copy is not None:
-                return self._run_copy(*copy)
-            ins = self._parse_insert(stmt)
-            if ins is not None:
-                return self._run_insert(*ins)
-            if not had_psql:
-                # Pass-through (cpp:76-79) — but still resolve path literals
-                # and FROM-first forms so plain DuckDB-style SQL keeps working.
-                # Exception: CREATE [OR REPLACE] TEMP TABLE … AS has no
-                # Spark-parsable spelling, and CREATE OR REPLACE TABLE AS
-                # on the v1 catalog raises UNSUPPORTED_FEATURE once the
-                # table exists (round-9 probe find) — both take the DDL
-                # path below (read-then-overwrite saveAsTable).
-                ddl = self._parse_create(stmt)
-                if ddl is None or not (
-                    (ddl[4] or ddl[2]) and ddl[0] == "table"
+        had_psql = has_psql_tokens(stmt)
+        if had_psql:
+            stmt = self._substitute_blocks(stmt)
+        copy_from = self._parse_copy_from(stmt)
+        if copy_from is not None:
+            return self._run_copy_from(*copy_from)
+        dml = self._parse_mutation(stmt)
+        if dml is not None:
+            return self._run_mutation(*dml)
+        mi = merge_mod.parse_merge(stmt)
+        if mi is not None:
+            return self._run_merge(mi)
+        alt = self._run_alter(stmt)
+        if alt is not None:
+            return alt
+        copy = self._parse_copy(stmt)
+        if copy is not None:
+            return self._run_copy(*copy)
+        ins = self._parse_insert(stmt)
+        if ins is not None:
+            return self._run_insert(*ins)
+        if not had_psql:
+            # Pass-through (cpp:76-79) — but still resolve path literals
+            # and FROM-first forms so plain DuckDB-style SQL keeps working.
+            # Exception: CREATE [OR REPLACE] TEMP TABLE … AS has no
+            # Spark-parsable spelling, and CREATE OR REPLACE TABLE AS
+            # on the v1 catalog raises UNSUPPORTED_FEATURE once the
+            # table exists (round-9 probe find) — both take the DDL
+            # path below (read-then-overwrite saveAsTable).
+            ddl = self._parse_create(stmt)
+            if ddl is None or not (
+                (ddl[4] or ddl[2]) and ddl[0] == "table"
+            ):
+                return self._with_scale_passes(
+                    stmt, self._compile_query_expr(stmt)
+                )
+        else:
+            ddl = self._parse_create(stmt)
+        if ddl is not None:
+            kind, name, replace, body, temp = ddl
+            pending, self._pending_table_keys = self._pending_table_keys, None
+            df = self._compile_query_expr(body)
+            # the target outlives the statement even where a CTE bound its name
+            self._stashed_views.pop(name, None)
+            if kind == "view":
+                df.createOrReplaceTempView(name)
+            elif temp:
+                # DuckDB CTAS materializes at creation; a temp TABLE is
+                # session-local, so pin rows behind a temp view (the
+                # same contract INSERT/UPDATE/DELETE mutate in place)
+                if not replace and any(
+                    t.name == name for t in self.spark.catalog.listTables()
                 ):
-                    return self._with_scale_passes(
-                        stmt, self._compile_query_expr(stmt)
+                    raise PsqlCompileError(
+                        f"table {name!r} already exists "
+                        "(use CREATE OR REPLACE)"
                     )
+                pinned = self._pin(df)
+                pinned.createOrReplaceTempView(name)
+                df = pinned
+            elif self.materialize_tables:
+                df.write.mode("overwrite" if replace else "errorifexists").saveAsTable(name)
             else:
-                ddl = self._parse_create(stmt)
-            if ddl is not None:
-                kind, name, replace, body, temp = ddl
-                pending, self._pending_table_keys = self._pending_table_keys, None
-                df = self._compile_query_expr(body)
-                if kind == "view":
-                    df.createOrReplaceTempView(name)
-                elif temp:
-                    # DuckDB CTAS materializes at creation; a temp TABLE is
-                    # session-local, so pin rows behind a temp view (the
-                    # same contract INSERT/UPDATE/DELETE mutate in place)
-                    if not replace and any(
-                        t.name == name for t in self.spark.catalog.listTables()
-                    ):
-                        raise PsqlCompileError(
-                            f"table {name!r} already exists "
-                            "(use CREATE OR REPLACE)"
-                        )
-                    pinned = self._pin(df)
-                    pinned.createOrReplaceTempView(name)
-                    df = pinned
-                elif self.materialize_tables:
-                    df.write.mode("overwrite" if replace else "errorifexists").saveAsTable(name)
-                else:
-                    df.createOrReplaceTempView(name)
-                # (re)creation succeeded: replace drops prior constraints,
-                # a column-def form registers its declared keys
-                self._table_keys.pop(name, None)
-                if pending is not None and pending[0] == name and pending[1]:
-                    self._table_keys[name] = pending[1]
-                return df
-            return self._with_scale_passes(stmt, self._compile_query_expr(stmt))
-        finally:
-            if sys.exc_info()[0] is None:
-                for blk_df in self._blocks_to_persist:
-                    blk_df.persist()
-                    self._persisted_blocks.append(blk_df)
-            self._blocks_to_persist.clear()
-            if self._persisted_blocks:
-                # deferred: dropping now would cascade-uncache the
-                # materialized blocks (see _persisted_views)
-                self._persisted_views.extend(self._pending_views)
-            else:
-                for v in self._pending_views:
-                    try:
-                        self.spark.catalog.dropTempView(v)
-                    except Exception:
-                        pass
-            self._pending_views.clear()
+                df.createOrReplaceTempView(name)
+            # (re)creation succeeded: replace drops prior constraints,
+            # a column-def form registers its declared keys
+            self._table_keys.pop(name, None)
+            if pending is not None and pending[0] == name and pending[1]:
+                self._table_keys[name] = pending[1]
+            return df
+        return self._with_scale_passes(stmt, self._compile_query_expr(stmt))
 
     # ------------------------------------------------------------------
     # statement-scoped scale passes (bucketed twins, scan reuse)
@@ -1160,11 +1166,8 @@ class Compiler:
             self._in_scan_reuse = True
             self.resolver.overrides.update(overrides)
             out = self._compile_query_expr(stmt)
-            # persist DEFERRED until the statement's stage calls are done:
-            # each parameterized spark.sql() stage drops its temp view with
-            # a cascade uncache that would evict an early persist (see the
-            # _blocks_to_persist note in __init__)
-            self._blocks_to_persist.extend(overrides.values())
+            for ov in overrides.values():
+                self._persisted_blocks.append(ov.persist())
             return out
         except Exception:
             return df
@@ -1179,8 +1182,8 @@ class Compiler:
         Mirrors the reference's block pass (cpp:55-73): the block body is
         pipe-rewritten and re-emitted parenthesized. We compile the body to
         a DataFrame and substitute ``(select * from <tempview>)``; the view
-        is dropped after the statement's plan is built (analysis is eager,
-        so dropping is safe).
+        is bound (``_bind``) and dropped after the statement's plan is
+        built (analysis is eager, so dropping is safe).
         """
         blocks = list(find_blocks(stmt))
         # text outside the blocks — where CTE names can be referenced
@@ -1209,18 +1212,13 @@ class Compiler:
                 )
             ):
                 # name appears in its `<name> as` binding plus ≥2 uses →
-                # materialize once instead of re-running the sub-plan
-                # (persist deferred to statement end; see
-                # _blocks_to_persist). Tiny-input gate: below the
-                # threshold the OS page cache already holds the source
-                # and the persist job + pinned views cost more than the
-                # re-run saves.
-                self._blocks_to_persist.append(df)
-            name = f"__psql_blk_{self._tag}_{next(self._ids)}"
-            df.createOrReplaceTempView(name)
-            self._pending_views.append(name)
+                # materialize once instead of re-running the sub-plan.
+                # Tiny-input gate: below the threshold the OS page cache
+                # already holds the source and the persist job costs more
+                # than the re-run saves.
+                self._persisted_blocks.append(df.persist())
             out.append(stmt[pos : blk.start])
-            out.append(f"(select * from {name})")
+            out.append(f"(select * from {self._bind(df)})")
             pos = blk.end
         out.append(stmt[pos:])
         return "".join(out)
@@ -3286,9 +3284,8 @@ class Compiler:
                         f"{len(body_df.columns)} output column(s)"
                     )
                 body_df = body_df.toDF(*cte_cols)
-            body_df.createOrReplaceTempView(name)
             # kept alive until the whole statement is compiled (see __init__)
-            self._pending_views.append(name)
+            self._bind_cte(name, body_df)
             i = close + 1
             if i < len(toks) and toks[i].kind == "comma":
                 i += 1
@@ -3379,7 +3376,7 @@ class Compiler:
         )
         frontier = total
         for _ in range(max_iter):
-            frontier.createOrReplaceTempView(name)
+            self._bind_cte(name, frontier)
             step_df = _named(self._compile_query_expr(step_txt))
             new = self._pin(
                 step_df.dropDuplicates().subtract(total)
@@ -3393,8 +3390,7 @@ class Compiler:
                 f"WITH RECURSIVE {name!r}: no fixpoint after {max_iter} "
                 "iterations (spark.psql.recursiveCte.maxIterations)"
             )
-        total.createOrReplaceTempView(name)
-        self._pending_views.append(name)
+        self._bind_cte(name, total)
         return self._compile_query_expr(rest)
 
     def _combine_setops(self, parts: list[tuple[str | None, str]]) -> DataFrame:
@@ -3620,9 +3616,12 @@ class Compiler:
         return "".join(out)
 
     def _run_sql(self, sql_text: str, params: dict) -> DataFrame:
-        if params:
-            return self.spark.sql(sql_text, **params)
-        return self.spark.sql(_unesc(sql_text))
+        """``sql_text`` with each ``{k}`` it names bound to ``params[k]``
+        (``format_map`` also un-doubles ``_esc``'s ``{{ }}``)."""
+        names = {f for _, f, _, _ in string.Formatter().parse(sql_text) if f}
+        return self.spark.sql(
+            sql_text.format_map({k: self._bind(params[k]) for k in names})
+        )
 
     def _raw_sql(self, text: str) -> DataFrame:
         """shims + path-literal substitution → spark.sql."""
@@ -6615,9 +6614,9 @@ class Compiler:
             out = out.drop(*dedup_drop)
         if st.qualify is not None:
             qparams: dict = {"__q": out}
-            q = self.spark.sql(
+            q = self._run_sql(
                 "SELECT *, (" + self._frag(st.qualify, qparams) + ") AS __psql_q FROM {__q}",
-                **qparams,
+                qparams,
             )
             out = q.filter("__psql_q").drop("__psql_q")
         if st.sample is not None:

@@ -161,13 +161,13 @@ def xxh64_strings(arr) -> np.ndarray:
     if long_rows.size:
         short = np.nonzero(lengths <= _PACK_MAXLEN)[0]
         if short.size:
-            # compact the short strings into their own buffer
+            # compact the short strings into their own buffer: one gather,
+            # byte k of short string j reads data[offs[short[j]] + k]
             s_len = lengths[short]
             s_offs = np.zeros(short.size + 1, dtype=np.int64)
             np.cumsum(s_len, out=s_offs[1:])
-            s_data = np.empty(int(s_offs[-1]), dtype=np.uint8)
-            for j, r in enumerate(short):
-                s_data[s_offs[j] : s_offs[j + 1]] = data[offs[r] : offs[r + 1]]
+            shift = np.repeat(offs[short] - s_offs[:-1], s_len)
+            s_data = data[shift + np.arange(int(s_offs[-1]), dtype=np.int64)]
             words, lens = _pack_strings(s_offs, s_data)
             out[short] = xxh64_words(words, lens)
         for r in long_rows:

@@ -47,6 +47,26 @@ def test_numpy_xxh64_matches_spark(spark):
     assert got == want
 
 
+@pytest.mark.parametrize("large", [False, True])
+def test_xxh64_mixed_long_and_short_strings(large):
+    """A batch holding strings over _PACK_MAXLEN hashes each string as
+    it would alone (short strings through the compacted buffer, long
+    ones one at a time), for string and large_string offsets alike."""
+    import pyarrow as pa
+
+    from duckdb_psql_spark.operators.arrowhash import _PACK_MAXLEN, xxh64_strings
+
+    rng = random.Random(11)
+    lengths = [0, 3, _PACK_MAXLEN + 1, 17, 8, _PACK_MAXLEN, 4000, 1, 64, 2 * _PACK_MAXLEN]
+    strs = ["".join(chr(rng.randrange(32, 127)) for _ in range(n)) for n in lengths]
+    typ = pa.large_string() if large else pa.string()
+    # a sliced array: non-zero offset into the shared buffers
+    arr = pa.array(["pad"] + strs, type=typ).slice(1)
+    got = [int(x) for x in xxh64_strings(arr)]
+    want = [int(xxh64_strings(pa.array([s], type=typ))[0]) for s in strs]
+    assert got == want
+
+
 def test_minhash_arrow_value_parity(docs):
     from duckdb_psql_spark.operators.dedup import minhash_signatures
 

@@ -56,10 +56,8 @@ CONF_WRITERS = {
 }
 
 
-def _conf_writes(path: pathlib.Path) -> set[tuple[str, str]]:
-    """(file, enclosing def) of every ``….conf.set/unset`` call; the
-    resolver's writes are named by their key instead."""
-    found = set()
+def _scoped_calls(path: pathlib.Path):
+    """(enclosing def, call node) for every call in ``path``."""
 
     def visit(node, scope):
         for child in ast.iter_child_nodes(node):
@@ -67,20 +65,31 @@ def _conf_writes(path: pathlib.Path) -> set[tuple[str, str]]:
             if isinstance(child, (ast.ClassDef, ast.FunctionDef,
                                   ast.AsyncFunctionDef)):
                 inner = f"{scope}.{child.name}" if scope else child.name
-            elif (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in ("set", "unset")
-                and re.search(r"(^|\.)_?j?conf$", ast.unparse(child.func.value))
-            ):
-                key = child.args[0] if child.args else None
-                if path.name == "resolver.py" and isinstance(key, ast.Constant):
-                    found.add((path.name, key.value))
-                else:
-                    found.add((path.name, scope))
-            visit(child, inner)
+            elif isinstance(child, ast.Call):
+                yield scope, child
+            yield from visit(child, inner)
 
-    visit(ast.parse(path.read_text()), "")
+    yield from visit(ast.parse(path.read_text()), "")
+
+
+def _method_calls(path: pathlib.Path, *names: str):
+    for scope, call in _scoped_calls(path):
+        if isinstance(call.func, ast.Attribute) and call.func.attr in names:
+            yield scope, call
+
+
+def _conf_writes(path: pathlib.Path) -> set[tuple[str, str]]:
+    """(file, enclosing def) of every ``….conf.set/unset`` call; the
+    resolver's writes are named by their key instead."""
+    found = set()
+    for scope, call in _method_calls(path, "set", "unset"):
+        if not re.search(r"(^|\.)_?j?conf$", ast.unparse(call.func.value)):
+            continue
+        key = call.args[0] if call.args else None
+        if path.name == "resolver.py" and isinstance(key, ast.Constant):
+            found.add((path.name, key.value))
+        else:
+            found.add((path.name, scope))
     return found
 
 
@@ -91,6 +100,41 @@ def test_confs_written_only_at_allowed_sites():
     for path in PKG.rglob("*.py"):
         sites |= _conf_writes(path)
     assert sites == CONF_WRITERS
+
+
+# the compiler's temp-view registrations: the per-statement binder, the
+# CTE binder and the statement end restoring what a CTE shadowed, and the
+# DDL/DML statements that (re)define a user-named view
+VIEW_WRITERS = {
+    "Compiler._bind",
+    "Compiler._bind_cte",
+    "Compiler._end_statement",
+    "Compiler._compile_statement_locked",
+    "Compiler._run_mutation",
+    "Compiler._run_update_from",
+    "Compiler._run_merge",
+    "Compiler._run_alter",
+    "Compiler._parse_export_import",
+    "Compiler._append_to",
+}
+
+
+def test_views_registered_only_at_allowed_sites():
+    """Composing a statement leaves the catalog as it found it: every
+    DataFrame spliced into SQL goes through ``Compiler._bind`` (never
+    PySpark's ``spark.sql(text, **kwargs)`` formatter, whose per-call
+    views uncache on drop), and no other compiler site makes a view."""
+    for path in PKG.rglob("*.py"):
+        for scope, call in _method_calls(path, "sql"):
+            assert not any(k.arg is None for k in call.keywords), (
+                f"{path.name}:{call.lineno} ({scope}) passes **kwargs to sql()"
+            )
+    sites = {
+        scope for scope, _ in _method_calls(
+            PKG / "compiler.py", "createOrReplaceTempView", "createTempView"
+        )
+    }
+    assert sites == VIEW_WRITERS
 
 
 def test_byte_floors_match_session_constant():
