@@ -345,10 +345,16 @@ class Compiler:
         self._stashed_views: dict[str, object] = {}
         # looked up once: the session catalog (its dropTempView only
         # removes the entry; spark.catalog.dropTempView uncaches every
-        # same-result plan) and the local-sort gate's reduction patterns
+        # same-result plan), the local-sort gate's reduction patterns and
+        # the plan nodes its rewrite builds (py4j resolves a dotted JVM
+        # name one round trip per segment)
         self._jcatalog = spark._jsparkSession.sessionState().catalog()
-        patterns = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        jsql = spark._jvm.org.apache.spark.sql
+        patterns = jsql.catalyst.trees.TreePattern
         self._reductions = (patterns.AGGREGATE(), patterns.WINDOW())
+        logical = jsql.catalyst.plans.logical
+        self._local_sort_nodes = (logical.Repartition, logical.Sort, logical.Project)
+        self._of_rows = jsql.classic.Dataset.ofRows
         # Running base-bytes estimate of the CURRENT pipe chain's inputs
         # (sum of the head path + every joined path), used by the
         # size-aware broadcast hint in _apply_stage_sql. None = unknown
@@ -530,15 +536,12 @@ class Compiler:
             # plans included): one py4j call per pattern, no plan string
             if not any(child.containsPattern(p) for p in self._reductions):
                 return df
-            jvm = self.spark._jvm
-            logical = jvm.org.apache.spark.sql.catalyst.plans.logical
-            repart = logical.Repartition(1, False, child)
-            new_root = logical.Sort(root.order(), False, repart, root.hint())
+            repartition, sort, project = self._local_sort_nodes
+            repart = repartition(1, False, child)
+            new_root = sort(root.order(), False, repart, root.hint())
             if wrap_project is not None:
-                new_root = logical.Project(wrap_project.projectList(), new_root)
-            ds = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                self.spark._jsparkSession, new_root
-            )
+                new_root = project(wrap_project.projectList(), new_root)
+            ds = self._of_rows(self.spark._jsparkSession, new_root)
             return DataFrame(ds, df.sparkSession)
         except Exception:  # noqa: BLE001 — a failed rewrite keeps the plan
             return df

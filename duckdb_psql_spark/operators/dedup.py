@@ -10,12 +10,16 @@ Scale design (the 100 TB story):
 
 * exact: one hash-partitioned shuffle on the dedup key; ties broken by a
   window row_number so "which copy survives" is deterministic.
-* MinHash LSH: signatures are computed per-row with zero shuffle; the only
-  shuffle is the band-bucket groupBy (rows × bands exploded, keys are
+* MinHash LSH: signatures are computed per-row. With unique ids they run
+  in one Arrow pass, and an input smaller than a few scan splits is first
+  hash-spread over every core (spread.spread_over_cores) so the kernel
+  does not run in one task; a large input keeps its scan splits and
+  shuffles nothing before the kernel. The band join shuffles on
   (band_idx, band_hash) — uniformly distributed by construction, so no
-  skew). Candidate verification touches only bucket collisions, never the
+  skew. Candidate verification touches only bucket collisions, never the
   full cross product.
-* SimHash: per-row 64-bit signature, banded the same way.
+* SimHash: per-row 64-bit signature (spread the same way), banded the
+  same way.
 * embedding cosine: random-hyperplane LSH buckets then exact cosine on
   candidates only.
 """
@@ -26,6 +30,8 @@ import random
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .spread import spread_over_cores
 
 # Mersenne prime 2^31-1: hash values and permutation coefficients both live
 # below 2^31, so a*h+b stays under 2^62 — no signed-64 overflow even with
@@ -193,7 +199,11 @@ def _minhash_signatures_arrow(
     """Guide §4.2 hot path: one mapInArrow pass computes each row's full
     MinHash signature in vectorized numpy (arrowhash.minhash_sig_batch)
     — no interpreted HOF evaluation, no shingle explode, no groupBy
-    exchange. Requires unique ids (one input row == one document);
+    exchange. The only exchange is the small-input spread: an input
+    estimated at fewer scan splits than cores is hash-partitioned on the
+    id over up to one task per core first (spread.spread_over_cores), so
+    the kernel does not run in a single task. Requires unique ids (one
+    input row == one document);
     value-identical to the JVM path on such input (the per-id min-merge
     the JVM groupBy performs is the identity there). The permutation
     table is drawn with the same seeded RNG sequence as the JVM path."""
@@ -212,6 +222,7 @@ def _minhash_signatures_arrow(
     # applies Unicode SpecialCasing (Greek final sigma etc.) that
     # Arrow's utf8_lower does not — the kernel consumes pre-lowered text
     src = df.select(F.col(id_col), F.lower(F.col(text_col)).alias(text_col))
+    src = spread_over_cores(src, id_col)
     idf = src.schema[id_col]
     out = StructType(
         [
@@ -362,23 +373,21 @@ def minhash_dup_pairs(
     # ONLY (id, band, bh): duplicating the num_perm-long signature ×bands
     # through the self-join was the dominant cost (~16× row width);
     # signatures are joined back for just the candidate pairs.
-    def _band_hash(b: int) -> F.Column:
-        members = [F.element_at("signature", b * r + k + 1) for k in range(r)]
+    # All bands are one SQL text: built as Columns, every node of the
+    # bands × r member expressions is its own py4j round trip (~1,400 per
+    # call); the text builds the same Catalyst expressions in one.
+    def _band_hash(b: int) -> str:
+        members = ", ".join(f"element_at(signature, {b * r + k + 1})" for k in range(r))
         if hash_mode == "md5":
             # concat of fixed-width hex members — engine-portable
-            return F.md5(F.concat(*members))
-        return F.xxhash64(*members)
+            return f"md5(concat({members}))"
+        return f"xxhash64({members})"
 
+    structs = ", ".join(
+        f"struct({b} AS band, {_band_hash(b)} AS bh)" for b in range(bands)
+    )
     banded = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), _band_hash(b).alias("bh"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
+        F.col(id_col), F.expr(f"explode(array({structs}))").alias("bb")
     ).select(id_col, "bb.band", "bb.bh")
     banded = _persist(banded, pins)
     # narrow (id, band, bh) rows; persisted so the self-join's two branches
@@ -401,16 +410,14 @@ def minhash_dup_pairs(
     )
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("__sig_b"))
-    est = (
-        F.size(
-            F.filter(F.zip_with("__sig_a", "__sig_b", lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(float(num_perm))
+    est = F.expr(
+        "round(size(filter(zip_with(__sig_a, __sig_b, (x, y) -> x = y), m -> m))"
+        f" / {float(num_perm)}D, 4)"
     )
     return _attach_pins(
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(est, 4).alias("jaccard_est"))
+        .select("id_a", "id_b", est.alias("jaccard_est"))
         .filter(F.col("jaccard_est") >= threshold),
         pins,
     )
@@ -421,13 +428,15 @@ def _simhash_signatures_arrow(df: DataFrame, *, id_col: str, text_col: str) -> D
     mapInArrow pass (arrowhash.simhash_sig_batch) — replaces the token
     explode + 64 codegen'd sum-aggregates + groupBy exchange. Requires
     unique ids; value-identical there (per-id tally-merge is the
-    identity when each id has one row)."""
+    identity when each id has one row). Small inputs are spread over the
+    cores first, as for MinHash."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from .arrowhash import simhash_sig_batch
 
     # JVM-side lower for Unicode SpecialCasing parity (see minhash note)
     src = df.select(F.col(id_col), F.lower(F.col(text_col)).alias(text_col))
+    src = spread_over_cores(src, id_col)
     idf = src.schema[id_col]
     out = StructType(
         [
@@ -539,25 +548,16 @@ def simhash_dup_pairs(
     ), pins)
     width = 64 // bands
     mask = (1 << width) - 1
+    # one SQL text for all chunks (see the MinHash band note)
+    chunks = ", ".join(
+        f"struct({b} AS band, shiftright(simhash, {b * width}) & {mask} AS chunk)"
+        for b in range(bands)
+    )
     banded = s.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
+        id_col, "simhash", F.expr(f"explode(array({chunks}))").alias("bb")
     ).select(id_col, "simhash", "bb.band", "bb.chunk")
     a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    ham = F.expr("bit_count(a.simhash ^ b.simhash)")
     return _attach_pins(
         a.join(
             b,

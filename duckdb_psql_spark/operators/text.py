@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .spread import spread_over_cores
+
 # Tiny per-language stopword anchors for the n-gram/stopword heuristic.
 # Deliberately small + deterministic; real pipelines would swap in a model.
 STOPWORDS = {
@@ -38,7 +40,11 @@ def _count_of(text: Column, chars: str) -> Column:
 
 
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Quality-scoring features: lengths, ratios, entropy-ish signals."""
+    """Quality-scoring features: lengths, ratios, entropy-ish signals.
+
+    A small input is spread over every core first (keyed on the text),
+    so the per-row projection does not run in the scan's single task."""
+    df = spread_over_cores(df, text_col)
     t = F.col(text_col)
     toks = _tokens(t)
     n_chars = F.length(t)

@@ -137,6 +137,19 @@ def test_views_registered_only_at_allowed_sites():
     assert sites == VIEW_WRITERS
 
 
+def test_text_kernels_repartition_only_through_the_spread():
+    """The dedup and text operators change their input's partitioning in
+    one place, ``spread_over_cores``, so the rule for when a per-row
+    kernel gets an exchange lives in one function."""
+    ops = PKG / "operators"
+    sites = {
+        (path.name, scope)
+        for path in (ops / "dedup.py", ops / "text.py", ops / "spread.py")
+        for scope, _ in _method_calls(path, "repartition")
+    }
+    assert sites == {("spread.py", "spread_over_cores")}
+
+
 def test_byte_floors_match_session_constant():
     from duckdb_psql_spark.session import TINY_INPUT_BYTES
 
