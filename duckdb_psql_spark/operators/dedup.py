@@ -11,7 +11,7 @@ Scale design (the 100 TB story):
 * exact: one hash-partitioned shuffle on the dedup key; ties broken by a
   window row_number so "which copy survives" is deterministic.
 * MinHash LSH: signatures are computed per-row. With unique ids they run
-  in one Arrow pass, and an input smaller than a few scan splits is first
+  in one Arrow pass, and an input under one scan split per core is first
   hash-spread over every core (spread.spread_over_cores) so the kernel
   does not run in one task; a large input keeps its scan splits and
   shuffles nothing before the kernel. The band join shuffles on
@@ -199,8 +199,8 @@ def _minhash_signatures_arrow(
     """Guide §4.2 hot path: one mapInArrow pass computes each row's full
     MinHash signature in vectorized numpy (arrowhash.minhash_sig_batch)
     — no interpreted HOF evaluation, no shingle explode, no groupBy
-    exchange. The only exchange is the small-input spread: an input
-    estimated at fewer scan splits than cores is hash-partitioned on the
+    exchange. The only exchange is the small-input spread: a batch input
+    estimated under one row group per core is hash-partitioned on the
     id over up to one task per core first (spread.spread_over_cores), so
     the kernel does not run in a single task. Requires unique ids (one
     input row == one document);

@@ -42,8 +42,9 @@ def _count_of(text: Column, chars: str) -> Column:
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring features: lengths, ratios, entropy-ish signals.
 
-    A small input is spread over every core first (keyed on the text),
-    so the per-row projection does not run in the scan's single task."""
+    A small batch input is spread over every core first (keyed on the
+    text), so the per-row projection does not run in the scan's single
+    task; an ordered input (``order by`` upstream) keeps its order."""
     df = spread_over_cores(df, text_col)
     t = F.col(text_col)
     toks = _tokens(t)

@@ -31,19 +31,24 @@ def _corpus_rows(n: int, seed: int) -> list[tuple[int, str]]:
     return rows
 
 
-def _parquet(spark, tmp_path_factory, n: int):
+def _parquet(spark, tmp_path_factory, n: int) -> str:
     path = str(tmp_path_factory.mktemp("spread") / "docs.parquet")
     spark.createDataFrame(_corpus_rows(n, 7), "doc_id long, text string") \
         .coalesce(1).write.parquet(path)
-    return spark.read.parquet(path)
+    return path
 
 
 @pytest.fixture(scope="module")
-def corpus(spark, tmp_path_factory):
+def corpus_path(spark, tmp_path_factory):
     """A parquet corpus whose estimate sits above the floor."""
-    df = _parquet(spark, tmp_path_factory, 5000)
-    assert spread._estimated_bytes(df) >= 2 * spread.MIN_TASK_BYTES
-    return df
+    path = _parquet(spark, tmp_path_factory, 5000)
+    assert spread._estimated_bytes(spark.read.parquet(path)) >= 2 * spread.MIN_TASK_BYTES
+    return path
+
+
+@pytest.fixture
+def corpus(spark, corpus_path):
+    return spark.read.parquet(corpus_path)
 
 
 def _n(df) -> int:
@@ -94,7 +99,7 @@ def test_spread_above_floor_puts_one_exchange_under_each_kernel(corpus):
 def test_source_below_floor_keeps_its_plan(spark, tmp_path_factory):
     from duckdb_psql_spark.operators.text import with_text_stats
 
-    small = _parquet(spark, tmp_path_factory, 500)
+    small = spark.read.parquet(_parquet(spark, tmp_path_factory, 500))
     assert spread._estimated_bytes(small) < 2 * spread.MIN_TASK_BYTES
     assert spread.spread_over_cores(small, "doc_id") is small
     for sig in _signatures(small):
@@ -103,8 +108,9 @@ def test_source_below_floor_keeps_its_plan(spark, tmp_path_factory):
 
 
 def test_source_of_a_split_per_core_keeps_its_plan(corpus, monkeypatch):
-    """At ``cores × maxPartitionBytes`` the scan already gives a task per
-    core; the estimate is stubbed rather than a file that large written."""
+    """At ``cores × maxPartitionBytes`` a default-written parquet input has
+    a row group per core; the estimate is stubbed rather than a file that
+    large written."""
     spark = corpus.sparkSession
     cores = spark.sparkContext.defaultParallelism
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
@@ -147,3 +153,30 @@ def test_spread_quality_score_equals_unspread(corpus, monkeypatch):
     got = sorted(map(tuple, spread_df.collect()))
     assert len(got) == 5000
     assert got == sorted(map(tuple, plain_df.collect()))
+
+
+def test_ordered_source_keeps_its_order(psql, corpus_path):
+    """An exchange over ``order by`` would drop the order (and Spark the
+    Sort), so an ordered input above the floor is not spread."""
+    ordered = psql.sql(
+        f"from '{corpus_path}' |> order by doc_id desc |> where doc_id >= 0 |> "
+        "select doc_id, text |> text_stats"
+    )
+    assert "hashpartitioning" not in _plan(ordered)
+    ids = [r.doc_id for r in ordered.select("doc_id").collect()]
+    assert ids == list(range(4999, -1, -1))
+
+
+def test_streaming_source_is_not_spread(psql, corpus_path):
+    """A streaming plan has no batch size estimate (optimizing it raises):
+    ``quality_score`` over ``stream(...)`` compiles and drains to the batch
+    scores."""
+    sdf = psql.sql(f"from stream('{corpus_path}') |> quality_score")
+    assert sdf.isStreaming
+    q = (sdf.select("doc_id", "quality_score").writeStream.format("memory")
+         .queryName("spread_stream_t").trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    got = sorted(map(tuple, psql.spark.sql("select * from spread_stream_t").collect()))
+    want = psql.sql(f"from '{corpus_path}' |> quality_score |> select doc_id, quality_score")
+    assert len(got) == 5000
+    assert got == sorted(map(tuple, want.collect()))
