@@ -61,6 +61,37 @@ _DEDUP_ARGS = re.compile(
     r"^by\s+([\w\s,\"`]+?)(?:\s+keep\s+(\w+))?$", re.IGNORECASE | re.DOTALL
 )
 
+MB = 1024 * 1024
+
+# Below this total input size, per-stage scheduling overhead (~85 ms/job
+# measured on local[32]) dominates actual data processing, and Spark's
+# cluster-sized defaults (AQE stage-wave re-planning, wide shuffles,
+# 128 MB scan splits) actively hurt. Single-node engines size their
+# parallelism to the data; this is the Spark-session equivalent.
+# 64 MB boundary: the single-reduce-partition tiny profile measured a
+# clear win at 17 MB (sf0.1) but serializes the reduce side badly at
+# 170 MB (sf1: q21 12.6s tiny vs ~3s scale profile) — the crossover
+# sits between, and 64 MB keeps both committed scale points on their
+# measured-best profile. Also the floor of the local-sort gate, of scan
+# reuse and of CLUSTER DECLARED KEYS' default ``minbytes``.
+TINY_INPUT_BYTES = 64 * MB
+
+# deferred dim joins (_defer_conf): a dimension side up to SMALL bytes is
+# deferred past a fact side of at least BIG bytes
+DEFER_SMALL_BYTES = 32 * MB
+DEFER_BIG_BYTES = 256 * MB
+
+# scan reuse (_with_scan_reuse): at and above this file size the persisted
+# base is repartitioned on its repeated exchange key
+SCAN_REUSE_COPARTITION_BYTES = 256 * MB
+
+# bucketed-twin writes (CLUSTER DECLARED KEYS, `|> cluster by`): the
+# bytes-derived bucket count targets this much source parquet per bucket,
+# capped at MAX_BUCKETS, and every twin is written with one codec
+BUCKET_TARGET_BYTES = 32 * MB
+MAX_BUCKETS = 65536
+TWIN_CODEC = "zstd"
+
 
 def _parse_star_modifiers(
     sel: str,
@@ -518,8 +549,6 @@ class Compiler:
         try:
             if not self.confs["spark.psql.localSortSmall"]:
                 return df
-            from .session import TINY_INPUT_BYTES
-
             if not (0 <= self._stmt_source_bytes < TINY_INPUT_BYTES):
                 return df
             root = df._jdf.queryExecution().analyzed()
@@ -1085,12 +1114,13 @@ class Compiler:
         relation instead of re-decoding parquet per branch.
 
         Scale guard: only fires when the file's on-disk size is under
-        ``spark.psql.scanReuse.maxBytes`` (default 4 GiB, 0 disables) —
-        at 100 TB the plan stays pure-scan and this pass is a no-op.
-        Tiny guard: also skips below ``spark.psql.scanReuse.minBytes``
-        (default TINY_INPUT_BYTES = 64 MB) — at sf0.1 the persist +
+        ``spark.psql.scanReuse.maxBytes`` (0 disables) — at 100 TB the
+        plan stays pure-scan and this pass is a no-op. Tiny guard: also
+        skips below ``TINY_INPUT_BYTES`` — at sf0.1 the persist +
         recompile overhead exceeds the reuse win (q21 r5: 0.99s -> 1.46s
         with reuse on at 17 MB input; re-scanning tiny parquet is free).
+        Both guards run before the plan is fetched, so a statement with
+        no candidate in range never plans during compose.
         Safety: any parse/analysis hiccup (truncated plan strings, arity-
         sensitive star expansion) falls back to the original DataFrame —
         the pass can lose the optimization, never correctness.
@@ -1100,14 +1130,15 @@ class Compiler:
         max_bytes = self.confs["spark.psql.scanReuse.maxBytes"]
         if max_bytes <= 0:
             return df
-        lo_bytes = self.confs["spark.psql.scanReuse.minBytes"]
         counts = collections.Counter(
             t.text[1:-1] for t in tokenize(stmt) if t.kind == "string"
         )
-        cand = [
-            p for p, n in counts.items()
-            if n >= 2 and ("/" in p or "\\" in p) and os.path.exists(p)
-        ]
+        cand = {}
+        for p, n in counts.items():
+            if n >= 2 and ("/" in p or "\\" in p) and os.path.exists(p):
+                size = _path_bytes(p)
+                if TINY_INPUT_BYTES <= size <= max_bytes:
+                    cand[p] = size
         if not cand:
             return df
         try:
@@ -1115,9 +1146,7 @@ class Compiler:
         except Exception:
             return df
         overrides: dict[str, DataFrame] = {}
-        for p in cand:
-            if not (lo_bytes <= _path_bytes(p) <= max_bytes):
-                continue
+        for p, size in cand.items():
             schemas = _scan_read_schemas(plan, p)
             if len(schemas) < 2:
                 continue
@@ -1147,16 +1176,14 @@ class Compiler:
             # them with that skew. One even repartition at materialization
             # fixes the map-side parallelism of all N downstream shuffles
             # (q21 sf10 warm: 11.7s -> 6.1s, interleaved A/B in
-            # scripts/bench_q21_copart.py). Opt-out:
-            # spark.psql.scanReuse.copartition=false.
-            # size-gated: below copartitionMinBytes the repartition's fixed
-            # cost outweighs the balance win (sf0.1 interleaved A/B: on
-            # 1.11-2.03s vs off 1.04-1.20s; at sf10 on wins 2x), so tiny
-            # inputs keep the plain persist.
+            # scripts/bench_q21_copart.py as of commit b35fc93; result in
+            # BENCH_Q21_SHAPES.json).
+            # size-gated: below SCAN_REUSE_COPARTITION_BYTES the
+            # repartition's fixed cost outweighs the balance win (sf0.1
+            # interleaved A/B: on 1.11-2.03s vs off 1.04-1.20s; at sf10 on
+            # wins 2x), so smaller inputs keep the plain persist.
             if (
-                self.confs["spark.psql.scanReuse.copartition"]
-                and _path_bytes(p)
-                >= self.confs["spark.psql.scanReuse.copartitionMinBytes"]
+                size >= SCAN_REUSE_COPARTITION_BYTES
                 and not _order_sensitive_stmt(stmt)
             ):
                 part_col = _repeated_exchange_col(plan, list(ov.columns))
@@ -2748,8 +2775,7 @@ class Compiler:
         by o_orderkey for the lineitem join AND by o_custkey for the
         customer join), with the later substitution pass picking the
         layout whose key the plan actually shuffles on. Endpoints below
-        ``minbytes`` (default conf ``spark.psql.cluster.minBytes``,
-        64 MB) are skipped — a dim below the floor is broadcast at join
+        ``minbytes`` (default ``TINY_INPUT_BYTES``, 64 MB) are skipped — a dim below the floor is broadcast at join
         time anyway, so bucketing it buys nothing (it still CONSUMES
         the co-location of the other side if that side is twinned).
         Both endpoint kinds participate (round 13): path-backed sources
@@ -2782,14 +2808,14 @@ class Compiler:
                 f"cluster declared keys: unknown option(s) "
                 f"{', '.join(sorted(unknown))}"
             )
-        # Bucket-count priority: explicit buckets= > conf pin
-        # (spark.psql.cluster.buckets) > bytes-derived default, resolved
-        # AFTER the edge walk below so the default can size itself from
-        # the largest participating endpoint. A pay-once layout decision
-        # derives from the DATA, not from spark.sql.shuffle.partitions, a
-        # runtime conf sized for query execution.
+        # Bucket count: explicit buckets= > bytes-derived default,
+        # resolved AFTER the edge walk below so the default can size
+        # itself from the largest participating endpoint. A pay-once
+        # layout decision derives from the DATA, not from
+        # spark.sql.shuffle.partitions, a runtime conf sized for query
+        # execution.
         buckets: int | None = None
-        explicit = kv.get("buckets", self.confs["spark.psql.cluster.buckets"])
+        explicit = kv.get("buckets")
         if explicit is not None:
             try:
                 buckets = int(explicit)
@@ -2797,9 +2823,7 @@ class Compiler:
                 raise PsqlCompileError(
                     f"cluster declared keys: bad buckets= value {explicit!r}"
                 )
-        raw_minbytes = kv.get(
-            "minbytes", self.confs["spark.psql.cluster.minBytes"]
-        )
+        raw_minbytes = kv.get("minbytes", TINY_INPUT_BYTES)
         try:
             min_bytes = int(raw_minbytes)
         except ValueError:
@@ -2885,21 +2909,19 @@ class Compiler:
                 seen_todo.add((ep, keys))
                 todo.append((ep, keys, size))
         if buckets is None:
-            # size each bucket to ~bucketTargetBytes of source parquet
-            # (default 32 MB: decompressed that is a low-hundreds-MB
-            # build/sort per task, safe under executor memory at any
-            # concurrency), floor at the session's core count so a
-            # co-located stage still fills one task wave, round up to a
-            # multiple of cores so the one-file-per-bucket write runs in
-            # full waves, and cap via maxBuckets against runaway file
-            # counts (a 100 TB deployment pins buckets= explicitly).
-            target = self.confs["spark.psql.cluster.bucketTargetBytes"]
-            maxb = self.confs["spark.psql.cluster.maxBuckets"]
+            # size each bucket to ~BUCKET_TARGET_BYTES of source parquet
+            # (32 MB: decompressed that is a low-hundreds-MB build/sort
+            # per task, safe under executor memory at any concurrency),
+            # floor at the session's core count so a co-located stage
+            # still fills one task wave, round up to a multiple of cores
+            # so the one-file-per-bucket write runs in full waves, and
+            # cap at MAX_BUCKETS against runaway file counts (a 100 TB
+            # deployment pins buckets= explicitly).
             cores = max(self.spark.sparkContext.defaultParallelism, 1)
             biggest = max(eligible_bytes, default=0)
-            buckets = max(cores, 8, -(-biggest // max(target, 1)))
-            buckets = min(maxb, -(-buckets // cores) * cores)
-        # round 14 (guide §6 + §2.6): twins write zstd (conf-able) — as
+            buckets = max(cores, 8, -(-biggest // BUCKET_TARGET_BYTES))
+            buckets = min(MAX_BUCKETS, -(-buckets // cores) * cores)
+        # round 14 (guide §6 + §2.6): twins write TWIN_CODEC (zstd) — as
         # fast to write as snappy, 26% smaller, so every later co-located
         # scan reads fewer bytes — and the per-twin writes are
         # INDEPENDENT jobs submitted from a small driver thread pool so
@@ -2907,11 +2929,7 @@ class Compiler:
         # tasks (BENCH_TWIN_WRITE_ANATOMY_sf10_r14.json: 3-twin total
         # 36.5/32.5 s sequential-snappy → 31.4/29.3 s; registration stays
         # on this thread, in todo order, after all writes land).
-        codec = self.confs["spark.psql.cluster.codec"]
-        if codec.lower() in ("", "none", "default"):
-            codec = None
-
-        # resolve sources on THIS thread (the resolver caches are not
+        # Resolve sources on THIS thread (the resolver caches are not
         # thread-safe); only the independent write jobs fan out
         prepared: list[tuple[tuple[str, str], tuple[str, ...], int, str, object]] = []
         for ep, keys, size in todo:
@@ -2932,14 +2950,13 @@ class Compiler:
             # joins then skip their per-task sorts too
             write_bucketed(
                 df, name, keys=list(keys), buckets=buckets,
-                sort_cols=list(keys), codec=codec,
+                sort_cols=list(keys), codec=TWIN_CODEC,
             )
 
         made: list[tuple[str, str, str, int, int]] = []
         if prepared:
             from concurrent.futures import ThreadPoolExecutor
 
-            seq = not self.confs["spark.psql.cluster.parallelWrites"]
             # Per-job failure capture: twins that DID materialize must
             # still register even when a sibling write dies (disk full,
             # task failure) — otherwise the finished tables sit orphaned
@@ -2954,13 +2971,8 @@ class Compiler:
                 except Exception as exc:  # noqa: BLE001 — re-raised below
                     return exc
 
-            if seq:  # A/B control
-                errs = [_safe(job) for job in prepared]
-            else:
-                with ThreadPoolExecutor(
-                    max_workers=min(3, len(prepared))
-                ) as pool:
-                    errs = list(pool.map(_safe, prepared))
+            with ThreadPoolExecutor(max_workers=min(3, len(prepared))) as pool:
+                errs = list(pool.map(_safe, prepared))
             failed = []
             for exc, (ep, keys, size, name, _df) in zip(errs, prepared):
                 if exc is not None:
@@ -5375,10 +5387,7 @@ class Compiler:
         """(small_max, big_min) byte gates; (0, _) disables."""
         if not self.confs["spark.psql.deferDimJoins"]:
             return 0, 0
-        return (
-            self.confs["spark.psql.deferDimJoins.smallBytes"],
-            self.confs["spark.psql.deferDimJoins.bigBytes"],
-        )
+        return DEFER_SMALL_BYTES, DEFER_BIG_BYTES
 
     @staticmethod
     def _pure_inner_join_stage(st: Stage, spec: "_JoinSpec | None") -> bool:
@@ -6027,15 +6036,13 @@ class Compiler:
             # the profile keeps per-task builds at the sizes the planner
             # budgeted for). Floor of 8 keeps tiny-profile sessions
             # (1 reduce partition) from degenerate single-bucket tables.
-            default_buckets = self.confs["spark.psql.cluster.buckets"]
-            if default_buckets is None:
-                try:
-                    default_buckets = max(
-                        int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                        8,
-                    )
-                except ValueError:
-                    default_buckets = 32
+            try:
+                default_buckets = max(
+                    int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")),
+                    8,
+                )
+            except ValueError:
+                default_buckets = 32
             buckets = int(kv.get("buckets", default_buckets))
             src_path = self.resolver.path_of(df)
             name = kv.get("name")
@@ -6047,14 +6054,11 @@ class Compiler:
             sort_cols = [
                 c.strip() for c in kv.get("sort", "").split(",") if c.strip()
             ] or None
-            # same codec policy as CLUSTER DECLARED KEYS (round 14):
-            # both twin-writing flows must produce the same layout
-            codec = self.confs["spark.psql.cluster.codec"]
-            if codec.lower() in ("", "none", "default"):
-                codec = None
+            # same codec as CLUSTER DECLARED KEYS (round 14): both
+            # twin-writing flows must produce the same layout
             out = write_bucketed(
                 df, name, keys=keys, buckets=buckets, sort_cols=sort_cols,
-                codec=codec,
+                codec=TWIN_CODEC,
             )
             if src_path is not None:
                 self.resolver.register_bucketed_twin(src_path, name, tuple(keys))
@@ -6650,12 +6654,12 @@ class Compiler:
         ran 6.0s, and DuckDB 1.16s. The engine, unlike Catalyst, knows
         the base bytes of every path it resolved: when one side's
         accumulated base bytes fit spark.psql.broadcastHint.maxBytes
-        (default 32 MB; 0 disables) and the other side is bigger or
-        unknown, mark the small side with F.broadcast. Base bytes are a
-        lower bound on join-output size, so a sub-32 MB subtree that
-        explodes through many-to-many joins could over-broadcast — the
-        cap is deliberately conservative (32 MB ≈ 3% of executor
-        memory) and the conf is the off-switch. Left-side hints only on
+        (0 disables) and the other side is bigger or unknown, mark the
+        small side with F.broadcast. Base bytes are a lower bound on
+        join-output size, so a subtree under the cap that explodes
+        through many-to-many joins could over-broadcast — the cap is
+        deliberately conservative (a few percent of executor memory)
+        and the conf is the off-switch. Left-side hints only on
         preserved-side-legal join types (inner / right outer).
 
         Returns (right, df) with hints applied, and updates

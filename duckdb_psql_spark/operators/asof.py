@@ -25,8 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import PsqlCompileError
 from ..lexer import depth_map, tokenize
@@ -77,6 +76,10 @@ def _parse_on(on_text: str, left_alias: str, right_alias: str) -> _AsofCond:
     return _AsofCond(equi, ineq[0], ineq[2], ineq[1])
 
 
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -86,7 +89,9 @@ def asof_join(
     right_alias: str,
     how: str = "inner",
 ) -> DataFrame:
-    """Compile an AS-OF join into union + window-carry-forward."""
+    """Compile an AS-OF join into union + window-carry-forward, every
+    expression as SQL text (one round trip per projection, not one per
+    Column node)."""
     cond = _parse_on(on_text, left_alias, right_alias)
     backward = cond.op in (">=", ">")
     strict = cond.op in (">", "<")
@@ -94,37 +99,45 @@ def asof_join(
     lcols = left.columns
     rcols = right.columns
     # Right payload columns, suffixed on collision with left names (DuckDB
-    # keeps both sides; we keep both with a _r suffix on conflicts).
-    rmap = {c: (c if c not in lcols else f"{c}_r") for c in rcols}
+    # keeps both sides; we keep both with a _r suffix on conflicts),
+    # compared case-insensitively as the union below resolves names.
+    lnames = {c.lower() for c in lcols}
+    rmap = {c: (c if c.lower() not in lnames else f"{c}_r") for c in rcols}
 
     kcols = [f"__k{i}" for i in range(len(cond.equi))]
-    l2 = left.select(
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(rmap[c]) for c in rcols],
-        *[F.col(lc).alias(k) for (lc, _), k in zip(cond.equi, kcols)],
-        F.col(cond.left_ts).alias("__ts"),
-        F.lit(1 if not strict else 0).alias("__side"),
+    left_side, right_side = (1, 0) if not strict else (0, 1)
+    l2 = left.selectExpr(
+        *[_ident(c) for c in lcols],
+        *[f"{_ident(lc)} AS {k}" for (lc, _), k in zip(cond.equi, kcols)],
+        f"{_ident(cond.left_ts)} AS __ts",
+        f"{left_side} AS __side",
+        "CAST(NULL AS INT) AS __match",
     )
-    r2 = right.select(
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-        *[F.col(c).alias(rmap[c]) for c in rcols],
-        *[F.col(rc).alias(k) for (_, rc), k in zip(cond.equi, kcols)],
-        F.col(cond.right_ts).alias("__ts"),
-        F.lit(0 if not strict else 1).alias("__side"),
+    r2 = right.selectExpr(
+        *[f"{_ident(c)} AS {_ident(rmap[c])}" for c in rcols],
+        *[f"{_ident(rc)} AS {k}" for (_, rc), k in zip(cond.equi, kcols)],
+        f"{_ident(cond.right_ts)} AS __ts",
+        f"{right_side} AS __side",
+        "1 AS __match",
     )
-    l2 = l2.withColumn("__match", F.lit(None).cast("int"))
-    r2 = r2.withColumn("__match", F.lit(1))
-    u = l2.unionByName(r2)
+    # each side's missing columns come in as NULLs of the other side's
+    # exact types (UDTs and nested nullability included)
+    u = l2.unionByName(r2, allowMissingColumns=True)
 
-    order = [F.col("__ts").asc() if backward else F.col("__ts").desc(), F.col("__side").asc()]
-    w = Window.partitionBy(*kcols).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    is_left = F.col("__side") == F.lit(1 if not strict else 0)
+    # no equi-keys: one global window (an empty PARTITION BY does not parse)
+    part = f"PARTITION BY {', '.join(kcols)} " if kcols else ""
+    w = (
+        f"OVER ({part}ORDER BY __ts {'ASC' if backward else 'DESC'}, __side ASC "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    is_left = f"__side = {left_side}"
     carried = [
-        F.last(F.when(~is_left, F.col(rmap[c])), ignorenulls=True).over(w).alias(rmap[c])
-        for c in rcols
+        f"last(CASE WHEN NOT ({is_left}) THEN {_ident(c)} END, true) {w} AS {_ident(c)}"
+        for c in [*rmap.values(), "__match"]
     ]
-    carried.append(F.last(F.when(~is_left, F.col("__match")), ignorenulls=True).over(w).alias("__match"))
-    matched = u.select(*lcols, *kcols, "__ts", "__side", *carried).filter(is_left)
+    matched = u.selectExpr(
+        *[_ident(c) for c in lcols], *kcols, "__ts", "__side", *carried
+    ).filter(is_left)
     if how == "inner":
-        matched = matched.filter(F.col("__match").isNotNull())
+        matched = matched.filter("__match IS NOT NULL")
     return matched.drop(*kcols, "__ts", "__side", "__match")

@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .compiler import Compiler, _path_bytes
+from .compiler import TINY_INPUT_BYTES, Compiler, _path_bytes
 
 
 class PsqlSession:
@@ -91,18 +91,6 @@ def _driver_java_options() -> str:
     silencer = "-Xlog:gc+alloc=off" if major >= 9 else ""
     return f"{user} {silencer}".strip()
 
-
-# Below this total input size, per-stage scheduling overhead (~85 ms/job
-# measured on local[32]) dominates actual data processing, and Spark's
-# cluster-sized defaults (AQE stage-wave re-planning, wide shuffles,
-# 128 MB scan splits) actively hurt. Single-node engines size their
-# parallelism to the data; this is the Spark-session equivalent.
-# 64 MB boundary: the single-reduce-partition tiny profile measured a
-# clear win at 17 MB (sf0.1) but serializes the reduce side badly at
-# 170 MB (sf1: q21 12.6s tiny vs ~3s scale profile) — the crossover
-# sits between, and 64 MB keeps both committed scale points on their
-# measured-best profile.
-TINY_INPUT_BYTES = 64 * 1024 * 1024
 
 # Above this, reduce parallelism doubles (see tune_for_input).
 LARGE_INPUT_BYTES = 1024 * 1024 * 1024

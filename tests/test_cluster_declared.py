@@ -13,6 +13,8 @@ import re
 
 import pytest
 
+from duckdb_psql_spark import compiler
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -135,7 +137,9 @@ def test_cluster_declared_idempotent(clustered):
     assert clustered.sql("cluster declared keys minbytes=0").count() == 0
 
 
-def test_cluster_declared_default_buckets_are_bytes_derived(clustered, spark):
+def test_cluster_declared_default_buckets_are_bytes_derived(
+    clustered, spark, monkeypatch
+):
     """The bucket default must come from endpoint bytes, never from
     spark.sql.shuffle.partitions: that conf is re-tuned per statement
     from the statement's own path literals, and CLUSTER DECLARED KEYS
@@ -148,24 +152,13 @@ def test_cluster_declared_default_buckets_are_bytes_derived(clustered, spark):
     # 1-byte target makes the (tiny) endpoint bytes dominate, and the
     # cap clamps to a checkable value; under the old partitions-derived
     # default this comes out 8, not 16
-    spark.conf.set("spark.psql.cluster.bucketTargetBytes", "1")
-    spark.conf.set("spark.psql.cluster.maxBuckets", "16")
+    monkeypatch.setattr(compiler, "BUCKET_TARGET_BYTES", 1)
+    monkeypatch.setattr(compiler, "MAX_BUCKETS", 16)
     try:
         rows = clustered.sql("cluster declared keys minbytes=0").collect()
         assert rows and all(r.buckets == 16 for r in rows)
     finally:
         spark.conf.unset("spark.sql.shuffle.partitions")
-        spark.conf.unset("spark.psql.cluster.bucketTargetBytes")
-        spark.conf.unset("spark.psql.cluster.maxBuckets")
-
-
-def test_cluster_declared_conf_pin_overrides_default(clustered, spark):
-    spark.conf.set("spark.psql.cluster.buckets", "6")
-    try:
-        rows = clustered.sql("cluster declared keys minbytes=0").collect()
-        assert rows and all(r.buckets == 6 for r in rows)
-    finally:
-        spark.conf.unset("spark.psql.cluster.buckets")
 
 
 def test_twin_names_disambiguate_same_basename(spark, sf_dir, tmp_path):

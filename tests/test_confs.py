@@ -150,10 +150,32 @@ def test_text_kernels_repartition_only_through_the_spread():
     assert sites == {("spread.py", "spread_over_cores")}
 
 
-def test_byte_floors_match_session_constant():
-    from duckdb_psql_spark.session import TINY_INPUT_BYTES
+def test_one_conf_per_pass():
+    """One conf per compiler pass plus the two safety caps; a threshold
+    that only tunes a pass is a constant in compiler.py, so a new conf
+    needs an edit here."""
+    assert set(confs.PSQL) == {
+        "spark.psql.localSortSmall",
+        "spark.psql.keyJoinElimination",
+        "spark.psql.distinctElimination",
+        "spark.psql.keyedGroupByElimination",
+        "spark.psql.countDistFold",
+        "spark.psql.existsWindowRewrite",
+        "spark.psql.alignExistsProbes",
+        "spark.psql.eagerAgg",
+        "spark.psql.deferDimJoins",
+        "spark.psql.bucketedTwins",
+        "spark.psql.broadcastHint.maxBytes",
+        "spark.psql.scanReuse.maxBytes",
+        "spark.psql.blockPersist.minBytes",
+        "spark.psql.insertView.maxRows",
+        "spark.psql.recursiveCte.maxIterations",
+    }
 
-    assert confs.PSQL["spark.psql.scanReuse.minBytes"] == TINY_INPUT_BYTES
+
+def test_byte_floors_match_session_constant():
+    from duckdb_psql_spark.compiler import TINY_INPUT_BYTES
+
     assert confs.PSQL["spark.psql.blockPersist.minBytes"] == TINY_INPUT_BYTES
 
 
@@ -176,13 +198,13 @@ def test_invalid_value_names_the_key(psql):
 
 
 def test_snapshot_reads_session_values(spark):
-    spark.conf.set("spark.psql.cluster.codec", "snappy")
-    spark.conf.set("spark.psql.cluster.buckets", "12")
+    spark.conf.set("spark.psql.eagerAgg", "FALSE")
+    spark.conf.set("spark.psql.insertView.maxRows", "12")
     try:
         snap = confs.read(spark)
     finally:
-        spark.conf.unset("spark.psql.cluster.codec")
-        spark.conf.unset("spark.psql.cluster.buckets")
-    assert snap["spark.psql.cluster.codec"] == "snappy"
-    assert snap["spark.psql.cluster.buckets"] == 12
+        spark.conf.unset("spark.psql.eagerAgg")
+        spark.conf.unset("spark.psql.insertView.maxRows")
+    assert snap["spark.psql.eagerAgg"] is False
+    assert snap["spark.psql.insertView.maxRows"] == 12
     assert snap["spark.psql.localSortSmall"] is True

@@ -17,6 +17,8 @@ import shutil
 
 import pytest
 
+from duckdb_psql_spark import compiler
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -155,7 +157,7 @@ def test_unrelated_ddl_keeps_layouts_fresh(psql2, spark, sf_dir, tmp_path):
     spark.sql("DROP TABLE IF EXISTS li_ddl_t")
 
 
-def test_fold_over_twin_with_scan_reuse_active(psql2, spark, sf_dir):
+def test_fold_over_twin_with_scan_reuse_active(psql2, spark, sf_dir, monkeypatch):
     """The q13 count-distribution fold consuming a group-key layout
     while the scan-reuse pass is enabled at a 0-byte floor (so BOTH
     passes are live on the same statement): values must match the
@@ -176,16 +178,13 @@ def test_fold_over_twin_with_scan_reuse_active(psql2, spark, sf_dir):
         f"references '{sf_dir}/customer.parquet' (c_custkey)"
     )
     psql2.sql("cluster declared keys minbytes=0 buckets=2")
-    spark.conf.set("spark.psql.scanReuse.minBytes", "0")
-    try:
-        df = psql2.sql(q13)
-        assert [tuple(r) for r in df.collect()] == base
-        assert "Bucketed: true" in _plan(df)
-    finally:
-        spark.conf.unset("spark.psql.scanReuse.minBytes")
+    monkeypatch.setattr(compiler, "TINY_INPUT_BYTES", 0)
+    df = psql2.sql(q13)
+    assert [tuple(r) for r in df.collect()] == base
+    assert "Bucketed: true" in _plan(df)
 
 
-def test_repeated_path_statement_over_twin(psql2, spark, sf_dir):
+def test_repeated_path_statement_over_twin(psql2, spark, sf_dir, monkeypatch):
     """q21-class statement (same path referenced twice: correlated
     EXISTS) over a twinned path with scan reuse forced on — the twin
     substitution and the scan-reuse persist pass compose without
@@ -202,11 +201,8 @@ def test_repeated_path_statement_over_twin(psql2, spark, sf_dir):
         f"from '{sf_dir}/orders.parquet' |> cluster by o_custkey buckets=2 "
         f"name=li_rep_twin"
     )
-    spark.conf.set("spark.psql.scanReuse.minBytes", "0")
-    try:
-        assert [tuple(r) for r in psql2.sql(stmt).collect()] == base
-    finally:
-        spark.conf.unset("spark.psql.scanReuse.minBytes")
+    monkeypatch.setattr(compiler, "TINY_INPUT_BYTES", 0)
+    assert [tuple(r) for r in psql2.sql(stmt).collect()] == base
     spark.sql("DROP TABLE IF EXISTS li_rep_twin")
 
 

@@ -667,6 +667,35 @@ def test_asof_variants(spark, psql):
     assert [(r.price, r.tag) for r in rows] == [(10.0, "a"), (30.0, "b")]
 
 
+def test_asof_payload_types_round_trip(spark):
+    """The AS-OF join keeps every payload type exactly: struct fields
+    whose names need quoting (and non-null fields), decimals, intervals,
+    TIMESTAMP_NTZ, arrays with non-null elements and UDTs."""
+    from pyspark.ml.linalg import Vectors
+
+    from duckdb_psql_spark.operators.asof import asof_join
+
+    left = spark.sql(
+        "select 1 as k, 5 as ts, named_struct('a b', 1, 'x`y', 'q') as s, "
+        "array(1, 2) as arr"
+    )
+    right = spark.sql(
+        "select 1 as k, 3 as ts, named_struct('a b', 2, 'x`y', 'z') as s, "
+        "array(3) as arr, interval '1' day as iv, "
+        "cast(1.5 as decimal(10,2)) as d, "
+        "timestamp_ntz'2020-01-01 00:00:00' as tn"
+    ).crossJoin(spark.createDataFrame([(Vectors.dense([2.0]),)], ["vec"]))
+    out = asof_join(
+        left, right, on_text="a.k = b.k and a.ts >= b.ts",
+        left_alias="a", right_alias="b", how="left",
+    )
+    want = [f.dataType for f in left.schema.fields + right.schema.fields]
+    assert [f.dataType for f in out.schema.fields] == want
+    [row] = out.collect()
+    assert row.s_r["a b"] == 2 and row.s_r["x`y"] == "z"
+    assert row.arr_r == [3] and row.vec == Vectors.dense([2.0])
+
+
 def test_png_decode_real(spark, psql, tmp_path):
     """The PNG path decodes for real: dims from IHDR, pixel bytes crc-match
     the pre-encode buffer (so a header-parrot can't pass)."""

@@ -8,6 +8,8 @@ here is a 100×-at-scale problem even when results stay correct.
 
 import pytest
 
+from duckdb_psql_spark import compiler
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -165,7 +167,7 @@ def test_reused_cte_block_materialized_once(psql, sf):
         )
 
 
-def test_repeated_scan_reused_and_pruned(psql, sf):
+def test_repeated_scan_reused_and_pruned(psql, sf, monkeypatch):
     # q21-class shape: the same file referenced by the base join AND two
     # correlated EXISTS branches. The scan-reuse pass must serve all
     # branches from ONE persisted base pruned to the union of Catalyst's
@@ -184,32 +186,30 @@ def test_repeated_scan_reused_and_pruned(psql, sf):
         "              where l3.l_orderkey = ok and l3.l_tax > 0.07) |> "
         "select count() as n"
     )
-    # tiny-input gate (r5 q21 sf0.1 regression): at the default
-    # scanReuse.minBytes (64 MB) the test fixture is far below the
-    # threshold, so the pass must NOT fire — persist overhead beats the
-    # reuse win on inputs the OS page cache already holds.
+    # tiny-input gate (r5 q21 sf0.1 regression): at TINY_INPUT_BYTES
+    # (64 MB) the test fixture is far below the threshold, so the pass
+    # must NOT fire — persist overhead beats the reuse win on inputs the
+    # OS page cache already holds.
     assert "InMemoryTableScan" not in _plan(psql.sql(stmt))
     # drop the tiny gate so the pass fires on the test fixture
-    psql.spark.conf.set("spark.psql.scanReuse.minBytes", "0")
-    try:
-        df = psql.sql(stmt)
-        plan = _plan(df)
-        assert plan.count("InMemoryTableScan") >= 3
-        # pruned persist: the cached base carries only the referenced columns
-        comp = psql._compiler
-        cached = [d for d in comp._persisted_blocks if "l_orderkey" in d.columns]
-        assert cached, "expected a persisted scan-reuse base"
-        assert set(cached[0].columns) == {"l_orderkey", "l_suppkey", "l_shipdate", "l_tax"}
-        n = df.collect()[0][0]
-        assert n >= 0
+    monkeypatch.setattr(compiler, "TINY_INPUT_BYTES", 0)
+    df = psql.sql(stmt)
+    plan = _plan(df)
+    assert plan.count("InMemoryTableScan") >= 3
+    # pruned persist: the cached base carries only the referenced columns
+    comp = psql._compiler
+    cached = [d for d in comp._persisted_blocks if "l_orderkey" in d.columns]
+    assert cached, "expected a persisted scan-reuse base"
+    assert set(cached[0].columns) == {"l_orderkey", "l_suppkey", "l_shipdate", "l_tax"}
+    n = df.collect()[0][0]
+    assert n >= 0
 
-        # single mention → no reuse pass, plan stays a pure scan
-        df2 = psql.sql(f"from '{sf}/region.parquet' |> select r_name")
-        assert "InMemoryTableScan" not in _plan(df2)
-    finally:
-        psql.spark.conf.unset("spark.psql.scanReuse.minBytes")
+    # single mention → no reuse pass, plan stays a pure scan
+    df2 = psql.sql(f"from '{sf}/region.parquet' |> select r_name")
+    assert "InMemoryTableScan" not in _plan(df2)
 
-    # conf off-switch restores the pure-scan plan for repeated mentions
+    # conf off-switch restores the pure-scan plan for repeated mentions,
+    # with the tiny gate still dropped
     psql.spark.conf.set("spark.psql.scanReuse.maxBytes", "0")
     try:
         df3 = psql.sql(
@@ -246,13 +246,13 @@ def test_exists_window_rewrite_claims_self_probe(psql, sf):
     assert df.collect()[0][0] >= 0
 
 
-def test_scan_reuse_copartitioned_persist(psql, sf):
+def test_scan_reuse_copartitioned_persist(psql, sf, monkeypatch):
     # q21-class statements shuffle the reused base on the same key in
     # every branch (base join + semi + anti). The re-cluster pass must
     # persist the base repartitioned on that key (REPARTITION_BY_COL in
     # the cached plan) so downstream exchanges drain balanced cache
     # partitions instead of fat scan splits — and must not fire when
-    # switched off, or when no repeated single-key exchange exists.
+    # gated off by size, or when no repeated single-key exchange exists.
     import re as _re
 
     stmt = (
@@ -274,8 +274,8 @@ def test_scan_reuse_copartitioned_persist(psql, sf):
     # exchange)
     psql.spark.conf.set("spark.sql.shuffle.partitions", "4")
     psql.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    psql.spark.conf.set("spark.psql.scanReuse.minBytes", "0")
-    psql.spark.conf.set("spark.psql.scanReuse.copartitionMinBytes", "0")
+    monkeypatch.setattr(compiler, "TINY_INPUT_BYTES", 0)
+    monkeypatch.setattr(compiler, "SCAN_REUSE_COPARTITION_BYTES", 0)
     # round 10: keep the scan-reuse machinery under test — the
     # EXISTS→window rewrite would otherwise claim this shape
     psql.spark.conf.set("spark.psql.existsWindowRewrite", "false")
@@ -287,17 +287,15 @@ def test_scan_reuse_copartitioned_persist(psql, sf):
         assert df.collect()[0][0] >= 0
         psql.spark.catalog.clearCache()
 
-        # off-switch: plain (unpartitioned) persist
-        psql.spark.conf.set("spark.psql.scanReuse.copartition", "false")
+        # below the copartition size gate: plain (unpartitioned) persist
+        monkeypatch.setattr(compiler, "SCAN_REUSE_COPARTITION_BYTES", 10**18)
         plan2 = _plan(psql.sql(stmt))
         assert "InMemoryTableScan" in plan2 and not recluster.search(plan2)
         psql.spark.catalog.clearCache()
     finally:
         psql.spark.conf.unset("spark.sql.shuffle.partitions")
         psql.spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        psql.spark.conf.unset("spark.psql.scanReuse.copartition")
-        psql.spark.conf.unset("spark.psql.scanReuse.copartitionMinBytes")
-        psql.spark.conf.unset("spark.psql.scanReuse.minBytes")
+        monkeypatch.undo()
 
     # size gate restored + broadcast plans: the re-cluster must not fire
     try:

@@ -1,8 +1,9 @@
-"""py4j round-trip budgets for composing the dedup pair miners.
+"""py4j round-trip budgets for composing the dedup pair miners and the
+AS-OF join.
 
-Every Column node built in Python is its own gateway round trip; the
-miners build their per-band expressions as SQL text so composing a call
-stays a few hundred round trips instead of thousands. Counted the way
+Every Column node built in Python is its own gateway round trip; these
+operators build their expressions as SQL text so composing a call stays
+tens to a few hundred round trips instead of thousands. Counted the way
 perfbench's probe counts them: every ``send_command`` on the gateway
 client except proxy releases."""
 
@@ -52,3 +53,24 @@ def test_miner_compose_py4j_budget(spark, miner, args, budget):
     for p in dedup.take_pins(out):
         p.unpersist()
     assert calls[0] <= budget, calls[0]
+
+
+def test_asof_join_compose_py4j_budget(spark):
+    """The AS-OF join builds its tagged selects, carry-forward windows and
+    filters as SQL text: two 5-column frames compose in under 100 round
+    trips (63 measured; 1,165 when every node was a Column)."""
+    from duckdb_psql_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame(
+        [(1, 1, 10, 1.0, "a")], "k long, id long, ts long, v double, s string"
+    )
+    right = spark.createDataFrame(
+        [(1, 5, 2.0, "b", True)], "k long, ts long, v double, s string, f boolean"
+    )
+    kw = dict(on_text="l.k = r.k and l.ts >= r.ts", left_alias="l", right_alias="r")
+    asof_join(left, right, **kw)  # warms PySpark's own lookups
+    # fresh frames, so their schemas are fetched inside the count
+    fresh_left, fresh_right = left.select("*"), right.select("*")
+    with _counting(spark) as calls:
+        asof_join(fresh_left, fresh_right, **kw)
+    assert calls[0] <= 100, calls[0]

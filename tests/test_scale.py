@@ -3,6 +3,8 @@ results identical while scattering hot keys."""
 
 import pytest
 
+from duckdb_psql_spark import compiler
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -230,7 +232,13 @@ def test_twin_skipped_for_order_sensitive_statements(psql, sf_dir):
         spark.sql("DROP TABLE IF EXISTS nation_ordersense_twin")
 
 
-def test_defer_dim_joins_matches_plain(psql, spark, sf_dir):
+def _force_deferral(monkeypatch):
+    """Byte gates that defer every dimension of the tiny fixture."""
+    monkeypatch.setattr(compiler, "DEFER_SMALL_BYTES", 10**9)
+    monkeypatch.setattr(compiler, "DEFER_BIG_BYTES", 1)
+
+
+def test_defer_dim_joins_matches_plain(psql, spark, sf_dir, monkeypatch):
     """Deferred dim-join pass: a small⋈big pure inner join swaps so the
     big scan becomes the pipe and the dims re-attach at the first stage
     needing their columns — identical rows AND identical column order to
@@ -255,8 +263,7 @@ def test_defer_dim_joins_matches_plain(psql, spark, sf_dir):
         base = [tuple(r) for r in psql.sql(q).collect()]
         base_cols = psql.sql(bare).columns
         spark.conf.set("spark.psql.deferDimJoins", "true")
-        spark.conf.set("spark.psql.deferDimJoins.smallBytes", str(10**9))
-        spark.conf.set("spark.psql.deferDimJoins.bigBytes", "1")
+        _force_deferral(monkeypatch)
         got_df = psql.sql(q)
         assert [tuple(r) for r in got_df.collect()] == base
         # the pass actually fired: the optimized plan differs from the
@@ -270,11 +277,9 @@ def test_defer_dim_joins_matches_plain(psql, spark, sf_dir):
         assert psql.sql(bare).columns == base_cols
     finally:
         spark.conf.set("spark.psql.deferDimJoins", "true")
-        spark.conf.unset("spark.psql.deferDimJoins.smallBytes")
-        spark.conf.unset("spark.psql.deferDimJoins.bigBytes")
 
 
-def test_defer_dims_flushes_on_dim_column_reference(psql, spark, sf_dir):
+def test_defer_dims_flushes_on_dim_column_reference(psql, spark, sf_dir, monkeypatch):
     """A later ON referencing a deferred dims column forces the flush —
     results stay identical to the non-deferred compile."""
     q = (
@@ -288,16 +293,13 @@ def test_defer_dims_flushes_on_dim_column_reference(psql, spark, sf_dir):
         spark.conf.set("spark.psql.deferDimJoins", "false")
         base = [tuple(r) for r in psql.sql(q).collect()]
         spark.conf.set("spark.psql.deferDimJoins", "true")
-        spark.conf.set("spark.psql.deferDimJoins.smallBytes", str(10**9))
-        spark.conf.set("spark.psql.deferDimJoins.bigBytes", "1")
+        _force_deferral(monkeypatch)
         assert [tuple(r) for r in psql.sql(q).collect()] == base
     finally:
         spark.conf.set("spark.psql.deferDimJoins", "true")
-        spark.conf.unset("spark.psql.deferDimJoins.smallBytes")
-        spark.conf.unset("spark.psql.deferDimJoins.bigBytes")
 
 
-def test_defer_dims_skips_eager_agg_until_flush(psql, spark, sf_dir):
+def test_defer_dims_skips_eager_agg_until_flush(psql, spark, sf_dir, monkeypatch):
     """With a deferred dims join pending, the eager-agg (join, agg) pair
     rewrite must NOT fire — it would aggregate away the dims join
     columns before the flush (caught live: count-by-dim-column over a
@@ -316,11 +318,6 @@ def test_defer_dims_skips_eager_agg_until_flush(psql, spark, sf_dir):
         f"join '{sf_dir}/lineitem.parquet' l on n.n_nationkey = l.l_suppkey "
         "group by n_name order by n_name"
     ).fetchall()
-    try:
-        spark.conf.set("spark.psql.deferDimJoins.smallBytes", str(10**9))
-        spark.conf.set("spark.psql.deferDimJoins.bigBytes", "1")
-        assert [tuple(r) for r in psql.sql(q).collect()] == want
-    finally:
-        spark.conf.unset("spark.psql.deferDimJoins.smallBytes")
-        spark.conf.unset("spark.psql.deferDimJoins.bigBytes")
+    _force_deferral(monkeypatch)
+    assert [tuple(r) for r in psql.sql(q).collect()] == want
 
