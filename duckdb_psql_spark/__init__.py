@@ -8,10 +8,13 @@ Usage::
     psql = PsqlSession(spark)
     df = psql.sql("from 'data/lineitem.parquet' |> where l_quantity > 45 "
                   "|> select l_orderkey, l_quantity |> order by l_quantity desc |> limit 5")
+
+``PsqlSession`` and ``default_spark`` load on first access (PEP 562): a
+Spark Python worker that unpickles an operator's kernel imports this
+package, and should import the kernel's module, not the compiler.
 """
 
 from .errors import PsqlCompileError, PsqlError, PsqlParseError
-from .session import PsqlSession, default_spark
 
 __all__ = [
     "PsqlSession",
@@ -22,3 +25,11 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name in ("PsqlSession", "default_spark"):
+        from . import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

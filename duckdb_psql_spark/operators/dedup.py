@@ -2,9 +2,14 @@
 
 Beyond the reference's SQL surface (charter north star, BASELINE.json):
 exact dedup, MinHash+LSH near-dup, SimHash near-dup, n-gram Jaccard
-verification, and embedding-cosine near-dup. All hot paths are JVM-side
-(higher-order functions over arrays — ``transform``/``aggregate``/
-``array_min``), so nothing here ships rows through Python.
+verification, and embedding-cosine near-dup. One path crosses into
+Python: with ``unique_ids=True`` (and the default xxhash64 mode) the
+MinHash and SimHash signatures are one ``mapInArrow`` pass of vectorized
+numpy (arrowhash.py), and each of its tasks runs in a Spark Python
+worker, whose per-task cost pyworker.py cuts. Everything else (the JVM
+signature formulation, band joins, verification, exact and embedding
+dedup) stays JVM-side: higher-order functions over arrays and codegen'd
+aggregates.
 
 Scale design (the 100 TB story):
 
@@ -31,6 +36,7 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .asof import _ident
 from .spread import spread_over_cores
 
 # Mersenne prime 2^31-1: hash values and permutation coefficients both live
@@ -211,6 +217,7 @@ def _minhash_signatures_arrow(
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     from .arrowhash import minhash_sig_batch
+    from .pyworker import install_zip_stat_check
 
     rng = random.Random(seed)
     perms = [
@@ -234,6 +241,7 @@ def _minhash_signatures_arrow(
     def gen(batches):
         import pyarrow as pa
 
+        install_zip_stat_check()
         for batch in batches:
             sig = minhash_sig_batch(batch.column(1), num_perm, shingle_k, a, b)
             n = sig.shape[0]
@@ -393,23 +401,20 @@ def minhash_dup_pairs(
     # narrow (id, band, bh) rows; persisted so the self-join's two branches
     # and AQE's size estimation see materialized stats instead of
     # re-deriving (and mis-costing) the full signature lineage
-    a = banded.alias("a")
-    b = banded.alias("b")
+    # the join condition and the renaming selects are SQL text too: as
+    # Columns they cost ~300 round trips per call
+    i = _ident(id_col)
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            F.expr(f"a.band = b.band AND a.bh = b.bh AND a.{i} < b.{i}"),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        .selectExpr(f"a.{i} AS id_a", f"b.{i} AS id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("__sig_b"))
+    sa = sigs.selectExpr(f"{i} AS id_a", "signature AS __sig_a")
+    sb = sigs.selectExpr(f"{i} AS id_b", "signature AS __sig_b")
     est = F.expr(
         "round(size(filter(zip_with(__sig_a, __sig_b, (x, y) -> x = y), m -> m))"
         f" / {float(num_perm)}D, 4)"
@@ -433,6 +438,7 @@ def _simhash_signatures_arrow(df: DataFrame, *, id_col: str, text_col: str) -> D
     from pyspark.sql.types import LongType, StructField, StructType
 
     from .arrowhash import simhash_sig_batch
+    from .pyworker import install_zip_stat_check
 
     # JVM-side lower for Unicode SpecialCasing parity (see minhash note)
     src = df.select(F.col(id_col), F.lower(F.col(text_col)).alias(text_col))
@@ -448,6 +454,7 @@ def _simhash_signatures_arrow(df: DataFrame, *, id_col: str, text_col: str) -> D
     def gen(batches):
         import pyarrow as pa
 
+        install_zip_stat_check()
         for batch in batches:
             s = simhash_sig_batch(batch.column(1))
             yield pa.RecordBatch.from_arrays(
@@ -556,19 +563,15 @@ def simhash_dup_pairs(
     banded = s.select(
         id_col, "simhash", F.expr(f"explode(array({chunks}))").alias("bb")
     ).select(id_col, "simhash", "bb.band", "bb.chunk")
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.expr("bit_count(a.simhash ^ b.simhash)")
+    i = _ident(id_col)
     return _attach_pins(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            F.expr(f"a.band = b.band AND a.chunk = b.chunk AND a.{i} < b.{i}"),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
+        .selectExpr(
+            f"a.{i} AS id_a", f"b.{i} AS id_b", "bit_count(a.simhash ^ b.simhash) AS hamming"
         )
         # filter BEFORE the dedup shuffle: hamming is already computed per
         # candidate, so only surviving pairs pay the distinct exchange

@@ -15,13 +15,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Smallest estimated input per task worth a spread. Measured with
-# perfbench's dedup_docs on a 4-core host (steady state, per statement):
+# Smallest estimated input per task worth a spread. Measured on
+# perfbench's dedup_docs corpora on a 4-core host (steady state, pairs
+# statement exec, medians of 12, spread forced on and off alternately):
 # at the 1k-doc warm-up corpus (estimate 128 KB) a 4-way spread loses,
-# MinHash exec 0.44 -> 0.58 s and SimHash 0.39 -> 0.50 s; at 10k docs
-# (estimate 1.28 MB) it wins. 256 KB spreads the 10k corpus over 4 tasks
-# and leaves the warm-up corpus in one, so no extra Python workers are
-# forked during set-up (without the floor, setup_s rose ~1 s per run).
+# MinHash 0.27 -> 0.32 s and SimHash 0.19 -> 0.27 s; at 10k docs
+# (estimate 1.28 MB) it wins. 256 KB spreads the 10k corpus over 4
+# tasks and leaves the warm-up corpus in one, so no extra Python workers
+# are forked during set-up (without the floor, setup_s rose ~1 s per run,
+# measured before pyworker's zip stat check cut each Python task's cost).
 #
 # The ceiling, cores x maxPartitionBytes (512 MB on 4 cores), is where a
 # parquet file written with Spark's default 128 MB row groups holds one row

@@ -33,11 +33,12 @@ def _counting(spark):
 
 
 # measured on perfbench's dedup_docs arguments (unique ids, the Arrow
-# signature path): minhash 525 and simhash 385 round trips per call;
-# with the bands built from Columns they were 1,908 and 671
+# signature path): minhash 243 and simhash 185 round trips per call;
+# with the bands, join conditions and renaming selects built from
+# Columns they were 1,908 and 671
 @pytest.mark.parametrize("miner, args, budget", [
-    ("minhash_dup_pairs", dict(num_perm=64, bands=16, shingle_k=3, threshold=0.4), 650),
-    ("simhash_dup_pairs", dict(max_hamming=3), 480),
+    ("minhash_dup_pairs", dict(num_perm=64, bands=16, shingle_k=3, threshold=0.4), 290),
+    ("simhash_dup_pairs", dict(max_hamming=3), 220),
 ])
 def test_miner_compose_py4j_budget(spark, miner, args, budget):
     from duckdb_psql_spark.operators import dedup
