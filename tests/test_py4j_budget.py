@@ -39,7 +39,7 @@ def _counting(spark):
 @pytest.mark.parametrize("miner, args, budget", [
     ("minhash_dup_pairs", dict(num_perm=64, bands=16, shingle_k=3, threshold=0.4), 290),
     ("simhash_dup_pairs", dict(max_hamming=3), 220),
-])
+], ids=["minhash_dup_pairs", "simhash_dup_pairs"])
 def test_miner_compose_py4j_budget(spark, miner, args, budget):
     from duckdb_psql_spark.operators import dedup
 
