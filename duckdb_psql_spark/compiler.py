@@ -52,7 +52,7 @@ from .lexer import Token, depth_map, strip_comments, tokenize
 
 from .scanner import find_blocks, first_statement, has_psql_tokens, split_stages
 from .sources.resolver import SourceResolver
-from .stages import Head, Stage, parse_head, parse_stage
+from .stages import Head, Stage, _match_paren, parse_head, parse_stage
 
 _JOIN_WORDS = {"join", "inner", "left", "right", "full", "outer", "cross",
                "natural", "semi", "anti", "asof", "positional", "lateral"}
@@ -335,6 +335,37 @@ class _JoinSpec:
     on_text: str | None
     using_text: str | None    # inner text of USING (…)
 
+    def key(self) -> tuple[str, str]:
+        """The join source's identity in the declared-key registry."""
+        return constraints_mod.source_key(self.source_kind, self.source_text)
+
+
+@dataclass
+class _KeyHead:
+    """A pipeline head the declared-key passes can reason about: a bare
+    path or table source that resolves (Compiler._key_head)."""
+
+    head: Head
+    key: tuple[str, str]      # constraints.source_key of the source
+    df: DataFrame
+
+    def prov(self) -> dict:
+        """The column-provenance map at the source (Compiler._prov_stage)."""
+        return {c.lower(): (self.key, c.lower(), None) for c in self.df.columns}
+
+
+def _implicit_name(kind: str, text: str) -> str | None:
+    """DuckDB's implicit name for a bare path or table source: a table by
+    its last dotted name, a file scan by its basename stem; None when that
+    is not an identifier (or the source is neither)."""
+    if kind == "table":
+        name = text.split(".")[-1].strip('"`')
+    elif kind == "path":
+        name = os.path.splitext(os.path.basename(text.rstrip("/")))[0]
+    else:
+        return None
+    return name if name.isidentifier() else None
+
 
 @dataclass
 class _DeferredDimJoin:
@@ -424,6 +455,9 @@ class Compiler:
         # FOREIGN KEY … — constraints.py); trusted metadata feeding the
         # FK-join elimination pre-pass
         self.constraints = constraints_mod.KeyConstraints()
+        # the declared-key passes' head checks for the pipeline being
+        # compiled (head text → _KeyHead or None; see _key_head)
+        self._key_heads: dict[str, _KeyHead | None] = {}
         # join stages dropped by _eliminate_fk_joins for the LAST
         # compiled pipeline (introspection for tests/EXPLAIN)
         self.last_eliminated_joins: list[str] = []
@@ -1437,17 +1471,7 @@ class Compiler:
         ``UPDATE … FROM u WHERE cond`` joins one matching source row per
         target row (multi-match pick is arbitrary, as in DuckDB; here
         deterministic: first by the join's row_number)."""
-        catalog = self.spark.catalog
-        is_view = any(
-            t.name == name and t.tableType in ("TEMPORARY", "VIEW")
-            for t in catalog.listTables()
-            if t.name == name
-        )
-        if not is_view and not catalog.tableExists(name):
-            raise PsqlCompileError(
-                f"{kind.upper()}: table or view {name!r} not found"
-            )
-        target = self.spark.table(name)
+        target, is_view = self._dml_target(name, kind.upper())
         params: dict = {"__t": target}
         ret_df: DataFrame | None = None
         if kind == "truncate":
@@ -1550,15 +1574,31 @@ class Compiler:
             # RETURNING must capture the pre-overwrite image before the
             # copy-on-write replaces the relation underneath it
             ret_df = self._pin(ret_df)
-        if is_view:
-            pinned = self._pin(new)
-            pinned.createOrReplaceTempView(name)
-        else:
-            pinned = self._pin(new)
-            pinned.write.mode("overwrite").saveAsTable(name)
+        self._write_back(name, new, is_view)
         if ret_df is not None:
             return ret_df
         return self.spark.createDataFrame([(affected,)], "Count bigint")
+
+    def _dml_target(self, name: str, verb: str) -> tuple[DataFrame, bool]:
+        """(the relation, whether it is a temp view) for a DML target;
+        raises when neither a temp view nor a catalog table has the name."""
+        catalog = self.spark.catalog
+        is_view = any(
+            t.name == name and t.tableType in ("TEMPORARY", "VIEW")
+            for t in catalog.listTables()
+        )
+        if not is_view and not catalog.tableExists(name):
+            raise PsqlCompileError(f"{verb}: table or view {name!r} not found")
+        return self.spark.table(name), is_view
+
+    def _write_back(self, name: str, new: DataFrame, is_view: bool) -> None:
+        """Copy-on-write: pin ``new``, then re-point the temp view at it
+        or overwrite the catalog table from it."""
+        pinned = self._pin(new)
+        if is_view:
+            pinned.createOrReplaceTempView(name)
+        else:
+            pinned.write.mode("overwrite").saveAsTable(name)
 
     def _run_update_from(
         self,
@@ -1627,12 +1667,7 @@ class Compiler:
                 f"SELECT {self._frag(returning, {})} FROM {{__m}}",
                 {"__m": one.where("__m").drop("__m", "__rn")},
             ))
-        new = one.drop("__m", "__rn")
-        pinned = self._pin(new)
-        if is_view:
-            pinned.createOrReplaceTempView(name)
-        else:
-            pinned.write.mode("overwrite").saveAsTable(name)
+        self._write_back(name, one.drop("__m", "__rn"), is_view)
         if ret_df is not None:
             return ret_df
         return self.spark.createDataFrame([(affected,)], "Count bigint")
@@ -1645,22 +1680,12 @@ class Compiler:
         insert clauses. Both are plain equi-joins to Catalyst when the ON
         condition is one — no extra shuffle beyond MERGE's own semantics.
         Returns DuckDB's ``Count`` = rows updated + deleted + inserted."""
-        catalog = self.spark.catalog
-        is_view = any(
-            t.name == m.target and t.tableType in ("TEMPORARY", "VIEW")
-            for t in catalog.listTables()
-            if t.name == m.target
-        )
-        if not is_view and not catalog.tableExists(m.target):
-            raise PsqlCompileError(
-                f"MERGE INTO: table or view {m.target!r} not found"
-            )
+        target, is_view = self._dml_target(m.target, "MERGE INTO")
         ta, sa = m.target_alias, m.source_alias
         if ta.lower() == sa.lower():
             raise PsqlCompileError(
                 f"MERGE INTO: target and source aliases collide ({ta!r})"
             )
-        target = self.spark.table(m.target)
         tcols = target.columns
         dtypes = dict(target.dtypes)
         t_pin = self._pin(target.withColumn(
@@ -1865,11 +1890,7 @@ class Compiler:
                 if m.returning is not None:
                     ret_parts.append(ins.withColumn("__maction", F.lit("INSERT")))
 
-        pinned = self._pin(new)
-        if is_view:
-            pinned.createOrReplaceTempView(m.target)
-        else:
-            pinned.write.mode("overwrite").saveAsTable(m.target)
+        self._write_back(m.target, new, is_view)
         if m.returning is not None:
             if ret_parts:
                 ret = ret_parts[0]
@@ -2423,15 +2444,7 @@ class Compiler:
         RETURNING rides the MERGE executor's tail: post-image of the
         rows actually written — inserted rows plus DO-UPDATE-hit rows;
         DO-NOTHING-skipped conflicts are excluded, like DuckDB."""
-        catalog = self.spark.catalog
-        is_view = any(
-            t.name == name and t.tableType in ("TEMPORARY", "VIEW")
-            for t in catalog.listTables()
-            if t.name == name
-        )
-        if not is_view and not catalog.tableExists(name):
-            raise PsqlCompileError(f"INSERT INTO: table or view {name!r} not found")
-        target = self.spark.table(name)
+        target, is_view = self._dml_target(name, "INSERT INTO")
         aligned = self._align_for_insert(src, target, cols, by_name)
         keys = (conflict[1] if conflict and conflict[1] else None) or \
             self._table_keys.get(name)
@@ -2507,15 +2520,7 @@ class Compiler:
         verb: str,
         returning: str | None = None,
     ) -> DataFrame:
-        catalog = self.spark.catalog
-        is_view = any(
-            t.name == name and t.tableType in ("TEMPORARY", "VIEW")
-            for t in catalog.listTables()
-            if t.name == name
-        )
-        if not is_view and not catalog.tableExists(name):
-            raise PsqlCompileError(f"{verb}: table or view {name!r} not found")
-        target = self.spark.table(name)
+        target, is_view = self._dml_target(name, verb)
         aligned = self._align_for_insert(src, target, cols, by_name)
         if is_view:
             pinned = self._pin(aligned)
@@ -2647,11 +2652,90 @@ class Compiler:
                 return True
         return False
 
-    def _constraint_source_df(self, src: tuple[str, str]) -> DataFrame:
-        kind, text = src
+    def _source_df(self, kind: str, text: str) -> DataFrame:
+        """A path or table source through the resolver."""
         if kind == "path":
             return self.resolver.resolve(text)
         return self.resolver.table(text)
+
+    def _key_head(self, head_text: str) -> _KeyHead | None:
+        """The declared-key passes' shared head check: a bare path or
+        table head (no read_csv(…) options; no glob or multi-file list,
+        whose per-file key identity is unknown) whose source resolves.
+        Parsed and resolved once per pipeline."""
+        if head_text not in self._key_heads:
+            kh = None
+            try:
+                head = parse_head(head_text)
+                if (
+                    head is not None
+                    and head.kind in ("path", "table")
+                    and head.read_args is None
+                    and not (
+                        head.kind == "path"
+                        and ("\n" in head.source
+                             or any(ch in head.source for ch in "*?["))
+                    )
+                ):
+                    kh = _KeyHead(
+                        head,
+                        constraints_mod.source_key(head.kind, head.source),
+                        self._source_df(head.kind, head.source),
+                    )
+            except Exception:  # noqa: BLE001 — the normal compile reports it
+                pass
+            self._key_heads[head_text] = kh
+        return self._key_heads[head_text]
+
+    def _fk_to_key(
+        self, fk_src: tuple[str, str], fk_cols: list[str],
+        key_src: tuple[str, str], key_cols: list[str],
+    ) -> bool:
+        """The FK certificate: ``fk_cols`` of ``fk_src`` carry a declared
+        FOREIGN KEY that maps them pairwise onto ``key_cols`` of
+        ``key_src``, and ``key_cols`` are a declared unique key there —
+        so every fk row meets exactly one key row."""
+        fk = [c.lower() for c in fk_cols]
+        key = [c.lower() for c in key_cols]
+        tgt = self.constraints.fk_target(fk_src, set(fk))
+        return (
+            tgt is not None
+            and tgt[0] == key_src
+            and all(tgt[1].get(f) == k for f, k in zip(fk, key))
+            and self._declared_unique(key_src, set(key))
+        )
+
+    def _pipe_fk_to_key(self, prov: dict, pairs: list, rkey) -> bool:
+        """The FK certificate for a join's pipe side: the left columns of
+        the equi ``pairs`` trace (``prov``) to one source whose declared
+        FK maps them onto the right columns, a declared unique key of
+        ``rkey``."""
+        provs = [prov.get(c1.lower()) for c1, _ in pairs]
+        if any(p is None for p in provs) or len({p[0] for p in provs}) != 1:
+            return False
+        return self._fk_to_key(
+            provs[0][0], [p[1] for p in provs], rkey, [c2 for _, c2 in pairs]
+        )
+
+    def _unique_join_pairs(self, st: Stage, spec: "_JoinSpec") -> list | None:
+        """The ON equi pairs (pipe column, right column) of a join stage
+        whose right columns are a declared unique key of its path/table
+        source — each pipe row then meets at most one right row; None
+        otherwise."""
+        if (
+            spec.source_kind not in ("path", "table")
+            or spec.on_text is None
+            or spec.using_text is not None
+            or not st.alias
+            or not spec.alias
+        ):
+            return None
+        pairs = self._equi_conjuncts(spec.on_text, st.alias, spec.alias)
+        if pairs is None or not self._declared_unique(
+            spec.key(), {c2.lower() for _, c2 in pairs}
+        ):
+            return None
+        return pairs
 
     def _run_declare(self, stmt: str) -> DataFrame | None:
         """``DECLARE PRIMARY KEY / UNIQUE / FOREIGN KEY …`` — register
@@ -2665,7 +2749,7 @@ class Compiler:
         if parsed is None:
             return None
         kind, src, cols, ref, ref_cols, verify = parsed
-        df = self._constraint_source_df(src)
+        df = self._source_df(*src)
         actual = {c.lower(): c for c in df.columns}
         missing = [c for c in cols if c not in actual]
         if missing:
@@ -2695,7 +2779,7 @@ class Compiler:
                     )
             self.constraints.declare_unique(skey, cols)
         else:
-            rdf = self._constraint_source_df(ref)
+            rdf = self._source_df(*ref)
             ractual = {c.lower(): c for c in rdf.columns}
             rmissing = [c for c in ref_cols if c not in ractual]
             if rmissing:
@@ -2937,12 +3021,7 @@ class Compiler:
             name = _twin_table_name(
                 ident if kind == "path" else f"table:{ident}", keys
             )
-            df = (
-                self.resolver.resolve(ident)
-                if kind == "path"
-                else self.resolver.table(ident)
-            )
-            prepared.append((ep, keys, size, name, df))
+            prepared.append((ep, keys, size, name, self._source_df(kind, ident)))
 
         def _materialize(job):
             _ep, keys, _size, name, df = job
@@ -3517,16 +3596,15 @@ class Compiler:
                 and toks[i + 1].kind == "lparen"
             ):
                 close = _match_paren_tok(toks, i + 1)
-                if close is not None:
-                    name = f"__cat{next(self._ids)}"
-                    params[name] = introspection_mod.TABLE_FUNCS[t.lower](
-                        self.spark, self
-                    )
-                    out.append(_esc(text[pos : t.start]))
-                    out.append("{" + name + "}")
-                    pos = toks[close].end
-                    skip_until = pos
-                    continue
+                name = f"__cat{next(self._ids)}"
+                params[name] = introspection_mod.TABLE_FUNCS[t.lower](
+                    self.spark, self
+                )
+                out.append(_esc(text[pos : t.start]))
+                out.append("{" + name + "}")
+                pos = toks[close].end
+                skip_until = pos
+                continue
             # glob('pattern') table function in FROM/JOIN position: one
             # `file` column of matching paths (DuckDB shape). A file
             # LISTING is driver-side metadata in every engine — the tiny
@@ -3542,20 +3620,19 @@ class Compiler:
                 and toks[i + 2].kind == "string"
             ):
                 close = _match_paren_tok(toks, i + 1)
-                if close is not None:
-                    import glob as _glob
+                import glob as _glob
 
-                    pattern = toks[i + 2].text[1:-1].replace("''", "'")
-                    name = f"__glob{next(self._ids)}"
-                    params[name] = self.spark.createDataFrame(
-                        [(p,) for p in sorted(_glob.glob(pattern))],
-                        "file string",
-                    )
-                    out.append(_esc(text[pos : t.start]))
-                    out.append("{" + name + "}")
-                    pos = toks[close].end
-                    skip_until = pos
-                    continue
+                pattern = toks[i + 2].text[1:-1].replace("''", "'")
+                name = f"__glob{next(self._ids)}"
+                params[name] = self.spark.createDataFrame(
+                    [(p,) for p in sorted(_glob.glob(pattern))],
+                    "file string",
+                )
+                out.append(_esc(text[pos : t.start]))
+                out.append("{" + name + "}")
+                pos = toks[close].end
+                skip_until = pos
+                continue
             # information_schema.* / pg_catalog.* virtual schemas in
             # FROM/JOIN position
             if (
@@ -3593,22 +3670,21 @@ class Compiler:
                 and toks[i + 1].kind == "lparen"
             ):
                 close = _match_paren_tok(toks, i + 1)
-                if close is not None:
-                    arg_text = text[toks[i + 1].end : toks[close].start]
-                    ref = _read_func_paths(arg_text)
-                    if ref is not None:
-                        opts = _parse_read_args(arg_text) or {}
-                        if t.lower in ("read_text", "read_blob"):
-                            opts["__fmt"] = t.lower[5:]
-                        name = f"__src{next(self._ids)}"
-                        params[name] = self.resolver.resolve(
-                            ref, opts or None
-                        )
-                        out.append(_esc(text[pos : t.start]))
-                        out.append("{" + name + "}")
-                        pos = toks[close].end
-                        skip_until = toks[close].end
-                        continue
+                arg_text = text[toks[i + 1].end : toks[close].start]
+                ref = _read_func_paths(arg_text)
+                if ref is not None:
+                    opts = _parse_read_args(arg_text) or {}
+                    if t.lower in ("read_text", "read_blob"):
+                        opts["__fmt"] = t.lower[5:]
+                    name = f"__src{next(self._ids)}"
+                    params[name] = self.resolver.resolve(
+                        ref, opts or None
+                    )
+                    out.append(_esc(text[pos : t.start]))
+                    out.append("{" + name + "}")
+                    pos = toks[close].end
+                    skip_until = toks[close].end
+                    continue
             if (
                 t.kind == "string"
                 and i > 0
@@ -3654,6 +3730,7 @@ class Compiler:
         # in stage N surfaces even when stage 0's table doesn't exist.
         parsed = [parse_stage(s) for s in stages[1:]]
         self.last_keyed_groupby_elim = False
+        self._key_heads = {}
         self._eliminate_fk_joins(stages[0], parsed)
         new_head = self._exists_window_rewrite(stages[0], parsed)
         head_text = new_head if new_head is not None else stages[0]
@@ -3745,31 +3822,11 @@ class Compiler:
             return
         if not self.confs["spark.psql.keyJoinElimination"]:
             return
-        try:
-            head = parse_head(head_text)
-        except Exception:  # noqa: BLE001 — the normal compile reports it
+        kh = self._key_head(head_text)
+        if kh is None:
             return
-        if head is None or head.kind not in ("path", "table"):
-            return
-        if head.read_args is not None:
-            return
-        if head.kind == "path" and (
-            "\n" in head.source or any(ch in head.source for ch in "*?[")
-        ):
-            return  # multi-file/glob heads: per-file key identity unknown
-        prov: dict[str, tuple[tuple[str, str], str]] = {}
-        try:
-            src_df = (
-                self.resolver.resolve(head.source)
-                if head.kind == "path"
-                else self.resolver.table(head.source)
-            )
-        except Exception:  # noqa: BLE001
-            return
-        hkey = constraints_mod.source_key(head.kind, head.source)
-        for c in src_df.columns:
-            prov[c.lower()] = (hkey, c.lower(), None)
-        self._prov_stage(prov, head.tail)
+        prov = kh.prov()
+        self._prov_stage(prov, kh.head.tail)
         for idx, st in enumerate(parsed):
             if prov and self._keyed_join_droppable(prov, st, parsed[idx + 1 :]):
                 self.last_eliminated_joins.append(st.joins)
@@ -3843,35 +3900,25 @@ class Compiler:
             prov.clear()  # unknown columns could shadow tracked names
             return
         try:
-            rcols = (
-                self.resolver.resolve(spec.source_text)
-                if spec.source_kind == "path"
-                else self.resolver.table(spec.source_text)
-            ).columns
+            rcols = self._source_df(spec.source_kind, spec.source_text).columns
         except Exception:  # noqa: BLE001
             prov.clear()
             return
-        rkey = constraints_mod.source_key(spec.source_kind, spec.source_text)
+        rkey = spec.key()
         # fd: the right side attaches 1:1 when it is a pure inner equi
         # join onto its own declared-unique key — then every right
         # column is functionally dependent on the LEFT join columns'
         # provenance
         fd = None
-        if (
-            st is not None
-            and st.alias
-            and spec.alias
-            and spec.on_text is not None
-            and spec.using_text is None
-            and spec.how_words.lower() in ("join", "inner join")
-        ):
-            pairs = self._equi_conjuncts(spec.on_text, st.alias, spec.alias)
-            if pairs is not None and self._declared_unique(
-                rkey, {c2.lower() for _, c2 in pairs}
-            ):
-                lp = [prov.get(c1.lower()) for c1, _ in pairs]
-                if all(p is not None for p in lp):
-                    fd = frozenset((p[0], p[1]) for p in lp)
+        pairs = (
+            self._unique_join_pairs(st, spec)
+            if st is not None and spec.how_words.lower() in ("join", "inner join")
+            else None
+        )
+        if pairs is not None:
+            lp = [prov.get(c1.lower()) for c1, _ in pairs]
+            if all(p is not None for p in lp):
+                fd = frozenset((p[0], p[1]) for p in lp)
         for c in rcols:
             cl = c.lower()
             if cl in prov:
@@ -3888,32 +3935,10 @@ class Compiler:
         if spec.source_kind not in ("path", "table"):
             return False
         pairs = self._equi_conjuncts(spec.on_text, st.alias, spec.alias)
-        if pairs is None:
+        if pairs is None or not self._pipe_fk_to_key(prov, pairs, spec.key()):
             return False
-        rkey = constraints_mod.source_key(spec.source_kind, spec.source_text)
-        right_key_cols = {c2.lower() for _, c2 in pairs}
-        if not self._declared_unique(rkey, right_key_cols):
-            return False
-        provs = [prov.get(c1.lower()) for c1, _ in pairs]
-        if any(p is None for p in provs):
-            return False
-        if len({p[0] for p in provs}) != 1:
-            return False
-        tgt = self.constraints.fk_target(provs[0][0], {p[1] for p in provs})
-        if tgt is None:
-            return False
-        ref_key, mapping = tgt
-        if ref_key != rkey:
-            return False
-        for (c1, c2), p in zip(pairs, provs):
-            if mapping.get(p[1]) != c2.lower():
-                return False
         try:
-            rcols = (
-                self.resolver.resolve(spec.source_text)
-                if spec.source_kind == "path"
-                else self.resolver.table(spec.source_text)
-            ).columns
+            rcols = self._source_df(spec.source_kind, spec.source_text).columns
         except Exception:  # noqa: BLE001
             return False
         blob_parts: list[str] = []
@@ -3946,16 +3971,11 @@ class Compiler:
                 return False
         if not dropper:
             return False
-        names = {spec.alias.lower()}
-        if spec.source_kind == "table":
-            names.add(spec.source_text.split(".")[-1].strip('"`').lower())
-        else:
-            stem = os.path.splitext(
-                os.path.basename(spec.source_text.rstrip("/"))
-            )[0].lower()
-            if stem.isidentifier():
-                names.add(stem)
-        if any(re.search(rf"\b{re.escape(n)}\s*\.", blob) for n in names):
+        names = {spec.alias, _implicit_name(spec.source_kind, spec.source_text)}
+        if any(
+            re.search(rf"\b{re.escape(n.lower())}\s*\.", blob)
+            for n in names if n
+        ):
             return False
         return True
 
@@ -3986,35 +4006,18 @@ class Compiler:
         # annotations, so it runs when EITHER pass is on
         if not dist_on and not self.confs["spark.psql.keyedGroupByElimination"]:
             return
-        try:
-            head = parse_head(head_text)
-        except Exception:  # noqa: BLE001
+        kh = self._key_head(head_text)
+        if kh is None:
             return
-        if head is None or head.kind not in ("path", "table"):
-            return
-        if head.read_args is not None:
-            return
-        if head.kind == "path" and (
-            "\n" in head.source or any(ch in head.source for ch in "*?[")
-        ):
-            return
-        hkey = constraints_mod.source_key(head.kind, head.source)
+        hkey = kh.key
         key_sets = self.constraints.uniques.get(hkey)
         if not key_sets:
             return
-        try:
-            src_df = (
-                self.resolver.resolve(head.source)
-                if head.kind == "path"
-                else self.resolver.table(head.source)
-            )
-        except Exception:  # noqa: BLE001
-            return
-        prov: dict = {}
-        for c in src_df.columns:
-            prov[c.lower()] = (hkey, c.lower(), None)
+        prov = kh.prov()
         unique_ok = True
-        for st in [head.tail, *parsed]:
+        # the head's tail is walked as a copy: the parsed head is shared
+        # with the other key passes
+        for st in [replace(kh.head.tail), *parsed]:
             # a stage's JOIN executes before its SELECT: advance the
             # certificate and the provenance map past the join FIRST, or
             # a duplicating join in the SAME stage as the distinct would
@@ -4147,10 +4150,7 @@ class Compiler:
             toks = tokenize(it)
             if toks[1].kind != "lparen":
                 return None
-            try:
-                close = _match_paren_tok(toks, 1)
-            except Exception:  # noqa: BLE001
-                return None
+            close = _match_paren_tok(toks, 1)
             tail = it[toks[close].end :].strip()
             alias_m = re.fullmatch(r"(?is)as\s+(\w+)", tail) if tail else None
             if tail and alias_m is None:
@@ -4253,19 +4253,7 @@ class Compiler:
             return True  # pure row filters
         if how not in ("join", "inner join", "left join", "left outer join"):
             return False
-        if (
-            spec.on_text is None
-            or spec.using_text is not None
-            or st.alias is None
-            or spec.alias is None
-            or spec.source_kind not in ("path", "table")
-        ):
-            return False
-        pairs = self._equi_conjuncts(spec.on_text, st.alias, spec.alias)
-        if pairs is None:
-            return False
-        rkey = constraints_mod.source_key(spec.source_kind, spec.source_text)
-        return self._declared_unique(rkey, {c2.lower() for _, c2 in pairs})
+        return self._unique_join_pairs(st, spec) is not None
 
     @staticmethod
     def _rest_multiplicity_ok(st: Stage) -> bool:
@@ -4385,18 +4373,10 @@ class Compiler:
             return None
         if not self.confs["spark.psql.countDistFold"]:
             return None
-        try:
-            head = parse_head(head_text)
-        except Exception:  # noqa: BLE001
+        kh = self._key_head(head_text)
+        if kh is None or not kh.head.tail_is_empty():
             return None
-        if head is None or head.kind not in ("path", "table"):
-            return None
-        if head.read_args is not None or not head.tail_is_empty():
-            return None
-        if head.kind == "path" and (
-            "\n" in head.source or any(ch in head.source for ch in "*?[")
-        ):
-            return None
+        head, left = kh.head, kh.df
         st1, st2, st3 = parsed[0], parsed[1], parsed[2]
         if st1.joins is None or st2.select is None or st2.group_by is None:
             return None
@@ -4408,12 +4388,7 @@ class Compiler:
         from .operators.eager_agg import match_eager_agg
 
         try:
-            left = (
-                self.resolver.resolve(head.source)
-                if head.kind == "path"
-                else self.resolver.table(head.source)
-            )
-            right = self._resolve_join_source(spec)
+            right = self._source_df(spec.source_kind, spec.source_text)
         except Exception:  # noqa: BLE001
             return None
         plan = match_eager_agg(
@@ -4425,17 +4400,8 @@ class Compiler:
             return None
         if any(fn != "count" for fn, _ in plan.partial_specs):
             return None
-        lkey = constraints_mod.source_key(head.kind, head.source)
-        rkey = constraints_mod.source_key(spec.source_kind, spec.source_text)
-        if not self._declared_unique(lkey, {plan.equi_left.lower()}):
-            return None
-        tgt = self.constraints.fk_target(rkey, {plan.equi_right.lower()})
-        if tgt is None:
-            return None
-        ref_key, mapping = tgt
-        if ref_key != lkey or (
-            mapping.get(plan.equi_right.lower()) != plan.equi_left.lower()
-        ):
+        rkey = spec.key()
+        if not self._fk_to_key(rkey, [plan.equi_right], kh.key, [plan.equi_left]):
             return None
         # stage-2 aggregate output aliases, by partial index
         agg_alias: dict[int, str] = {}
@@ -4697,10 +4663,7 @@ class Compiler:
                 break
         if op is None:
             return None
-        try:
-            cl = _match_paren_tok(toks, op)
-        except Exception:  # noqa: BLE001
-            return None
+        cl = _match_paren_tok(toks, op)
         if cl != len(toks) - 1:
             return None
         inner = pred[toks[op].end : toks[cl].start]
@@ -4795,18 +4758,10 @@ class Compiler:
             "exists" in w.lower() for st in parsed for w in (st.where or [])
         ):
             return
-        try:
-            head = parse_head(head_text)
-        except Exception:  # noqa: BLE001
+        kh = self._key_head(head_text)
+        if kh is None:
             return
-        if head is None or head.kind not in ("path", "table"):
-            return
-        if head.read_args is not None:
-            return
-        if head.kind == "path" and (
-            "\n" in head.source or any(ch in head.source for ch in "*?[")
-        ):
-            return
+        head, hkey = kh.head, kh.key
         # the head tail must contribute nothing (a bare alias is fine)
         t = head.tail
         if any(
@@ -4815,23 +4770,7 @@ class Compiler:
             if k != "alias"
         ):
             return
-        try:
-            src_df = (
-                self.resolver.resolve(head.source)
-                if head.kind == "path"
-                else self.resolver.table(head.source)
-            )
-        except Exception:  # noqa: BLE001
-            return
-        hkey = constraints_mod.source_key(head.kind, head.source)
-        prov: dict[str, tuple] = {
-            c.lower(): (hkey, c.lower(), None) for c in src_df.columns
-        }
-
-        def _src_key_of(spec: "_JoinSpec"):
-            return constraints_mod.source_key(
-                spec.source_kind, spec.source_text
-            )
+        prov = kh.prov()
 
         # --- certified-1:1 join prefix ---------------------------------
         # `complete` tracks sources NO row of which has been lost: the
@@ -4860,42 +4799,14 @@ class Compiler:
             pairs = self._equi_conjuncts(spec.on_text, st.alias, spec.alias)
             if pairs is None:
                 break
-            rkey = _src_key_of(spec)
-            ok1 = False
+            rkey = spec.key()
             # direction 1: pipe side carries the FK → right side unique
-            lp = [prov.get(c1.lower()) for c1, _ in pairs]
-            if all(p is not None for p in lp) and len({p[0] for p in lp}) == 1:
-                tgt = self.constraints.fk_target(lp[0][0], {p[1] for p in lp})
-                if (
-                    tgt is not None
-                    and tgt[0] == rkey
-                    and all(
-                        tgt[1].get(p[1]) == c2.lower()
-                        for (c1, c2), p in zip(pairs, lp)
-                    )
-                    and self._declared_unique(
-                        rkey, {c2.lower() for _, c2 in pairs}
-                    )
-                ):
-                    ok1 = True
+            ok1 = self._pipe_fk_to_key(prov, pairs, rkey)
             # direction 2 (first join only, bare head on the left): the
             # RIGHT side carries the FK → the head's declared-unique key
-            ok2 = False
-            if not joined_yet:
-                rcolset = {c2.lower() for _, c2 in pairs}
-                tgt = self.constraints.fk_target(rkey, rcolset)
-                if (
-                    tgt is not None
-                    and tgt[0] == hkey
-                    and all(
-                        tgt[1].get(c2.lower()) == c1.lower()
-                        for c1, c2 in pairs
-                    )
-                    and self._declared_unique(
-                        hkey, {c1.lower() for c1, _ in pairs}
-                    )
-                ):
-                    ok2 = True
+            ok2 = not joined_yet and self._fk_to_key(
+                rkey, [c2 for _, c2 in pairs], hkey, [c1 for c1, _ in pairs]
+            )
             if not (ok1 or ok2):
                 break
             if not ok1:
@@ -5043,7 +4954,7 @@ class Compiler:
         flipped = None
         if flip is not None and all(fk[0] == flip[2] for fk in part_keys):
             fst, fspec, _frk = flip
-            hcols = {c.lower() for c in src_df.columns}
+            hcols = {c.lower() for c in kh.df.columns}
             blob = " ".join(win_exprs + hoisted).lower()
             ok_flip = not any(
                 re.search(rf"\b{re.escape(c)}\b", blob) for c in hcols
@@ -5109,23 +5020,11 @@ class Compiler:
         negated, src_text, alias, conj, _span = pb
         if not alias:
             return None
-        if src_text.startswith("'"):
-            f2 = constraints_mod.source_key(
-                "path", src_text[1:-1].replace("''", "'")
-            )
-        else:
-            f2 = constraints_mod.source_key("table", src_text)
+        f2 = constraints_mod.source_key(*constraints_mod._src_parts(src_text))
         if f2 not in complete:
             return None  # F2 rows may have been lost before the insert point
         try:
-            f2cols = {
-                c.lower()
-                for c in (
-                    self.resolver.resolve(f2[1])
-                    if f2[0] == "path"
-                    else self.resolver.table(f2[1])
-                ).columns
-            }
+            f2cols = {c.lower() for c in self._source_df(*f2).columns}
         except Exception:  # noqa: BLE001
             return None
         al = alias.lower()
@@ -6333,16 +6232,14 @@ class Compiler:
         named by its basename stem) so first-stage qualified references
         resolve. A stage alias (`as foo`) replaces it (_apply_stage_sql).
         """
+        name = _implicit_name(head.kind, head.source)
+        core = f"{{__pipe}} AS {name}" if name else "{__pipe}"
         if head.kind == "path":
             df = self.resolver.resolve(head.source, options=_parse_read_args(head.read_args))
-            stem = os.path.splitext(os.path.basename(head.source.rstrip("/")))[0]
-            core = f"{{__pipe}} AS {stem}" if stem.isidentifier() else "{__pipe}"
             return df, core
         if head.kind == "stream":
             return self.resolver.resolve_stream(head.source), "{__pipe}"
         if head.kind == "table":
-            name = head.source.split(".")[-1].strip('"`')
-            core = f"{{__pipe}} AS {name}" if name.isidentifier() else "{__pipe}"
             return self.resolver.table(head.source), core
         # raw SQL source (subquery / table function) — splice, resolving any
         # path literals inside it. Shims see a synthetic FROM so
@@ -6422,12 +6319,9 @@ class Compiler:
                 # DuckDB implicitly names a bare join source: a table/CTE by
                 # its (last dotted) name, a file scan by its basename stem —
                 # so `join m on t.j = m.mj` must keep `m` addressable.
-                ralias_name = spec.alias
-                if ralias_name is None and spec.source_kind == "table":
-                    ralias_name = spec.source_text.split(".")[-1].strip('"`')
-                elif ralias_name is None and spec.source_kind == "path":
-                    stem = os.path.splitext(os.path.basename(spec.source_text.rstrip("/")))[0]
-                    ralias_name = stem if stem.isidentifier() else None
+                ralias_name = spec.alias or _implicit_name(
+                    spec.source_kind, spec.source_text
+                )
                 ralias = f" AS {ralias_name}" if ralias_name else ""
                 if spec.using_text is not None:
                     tail = f" USING ({self._frag(spec.using_text, params)})"
@@ -6793,10 +6687,8 @@ class Compiler:
         return _JoinSpec(" ".join(how), kind, src, alias, on_text, using_text)
 
     def _resolve_join_source(self, spec: _JoinSpec) -> DataFrame:
-        if spec.source_kind == "path":
-            return self.resolver.resolve(spec.source_text)
-        if spec.source_kind == "table":
-            return self.resolver.table(spec.source_text)
+        if spec.source_kind in ("path", "table"):
+            return self._source_df(spec.source_kind, spec.source_text)
         # a subquery side recursively compiles (and resets) the pipe-bytes
         # estimate — preserve the OUTER chain's estimate across it
         outer = self._pipe_bytes
@@ -7643,18 +7535,6 @@ def _split_top_and(text: str) -> list[str]:
                 return [text]
     parts.append(text[start:])
     return [p for p in parts if p.strip()]
-
-
-def _match_paren(tokens: list[Token], open_i: int) -> int:
-    d = 0
-    for k in range(open_i, len(tokens)):
-        if tokens[k].kind in ("lparen", "block_open"):
-            d += 1
-        elif tokens[k].kind in ("rparen", "block_close"):
-            d -= 1
-            if d == 0:
-                return k
-    raise PsqlParseError('syntax error at or near "("')
 
 
 def _is_fully_parenthesized(text: str) -> bool:

@@ -190,14 +190,6 @@ def _shingle_hashes(text_col: str, k: int) -> F.Column:
     )
 
 
-def _arrow_sig_enabled() -> bool:
-    """A/B off-switch for the round-14 Arrow signature kernels
-    (SPARK_GRAFT_NO_ARROW_SIG=1 restores the JVM formulation)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_NO_ARROW_SIG") != "1"
-
-
 def _minhash_signatures_arrow(
     df: DataFrame, *, id_col: str, text_col: str, num_perm: int,
     shingle_k: int, seed: int,
@@ -289,12 +281,7 @@ def minhash_signatures(
     codegen'd ``min`` aggregates with map-side partial aggregation: the
     shuffle carries one num_perm-wide row per document.
     """
-    if (
-        unique_ids
-        and hash_mode == "xxhash64"
-        and shingle_k >= 2
-        and _arrow_sig_enabled()
-    ):
+    if unique_ids and hash_mode == "xxhash64" and shingle_k >= 2:
         # round 14: with unique ids the groupBy min-merge is the identity,
         # so the whole signature computes per-row in one Arrow batch pass
         # (guide §4.2). Callers with possibly-duplicated ids keep the
@@ -482,12 +469,7 @@ def simhash_signatures(
     codegen'd ``sum`` aggregates (map-side combined); the signature is
     assembled from the tallies with scalar bit ops.
     """
-    if (
-        unique_ids
-        and hash_mode == "xxhash64"
-        and bits == 64
-        and _arrow_sig_enabled()
-    ):
+    if unique_ids and hash_mode == "xxhash64" and bits == 64:
         return _simhash_signatures_arrow(df, id_col=id_col, text_col=text_col)
     toks = F.split(F.lower(F.col(text_col)), r"\s+")
     if hash_mode == "md5":

@@ -13,13 +13,12 @@ from duckdb_psql_spark.errors import PsqlCompileError
 
 PKG = pathlib.Path(confs.__file__).parent
 
-# deployment settings, plus the Arrow signature kernels' JVM fallback
+# deployment settings
 ALLOWED_ENV = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_LOCAL_DIR",
     "SPARK_GRAFT_DRIVER_MEM",
     "SPARK_GRAFT_DRIVER_JAVA_OPTIONS",
-    "SPARK_GRAFT_NO_ARROW_SIG",
 }
 
 
@@ -104,15 +103,14 @@ def test_confs_written_only_at_allowed_sites():
 
 # the compiler's temp-view registrations: the per-statement binder, the
 # CTE binder and the statement end restoring what a CTE shadowed, and the
-# DDL/DML statements that (re)define a user-named view
+# DDL/DML statements that (re)define a user-named view (DELETE, UPDATE,
+# TRUNCATE and MERGE through the copy-on-write _write_back)
 VIEW_WRITERS = {
     "Compiler._bind",
     "Compiler._bind_cte",
     "Compiler._end_statement",
     "Compiler._compile_statement_locked",
-    "Compiler._run_mutation",
-    "Compiler._run_update_from",
-    "Compiler._run_merge",
+    "Compiler._write_back",
     "Compiler._run_alter",
     "Compiler._parse_export_import",
     "Compiler._append_to",
