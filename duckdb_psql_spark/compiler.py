@@ -1,16 +1,19 @@
 """PSQL → DataFrame compiler.
 
-Where the reference rewrites ``A |> B |> C`` into nested ``FROM ( … )``
-SQL text and hands it to DuckDB (``/root/reference/src/psql_extension.cpp:28-49``,
-``README.md:68-87``), we compile each stage into one DataFrame
-transformation and hand the chain to Catalyst (SURVEY.md §3.4): SQL
-text ``SELECT … FROM {__pipe} …`` whose placeholders ``Compiler._bind``
-names as per-statement temp views, all dropped at statement end through
-the session catalog (analysis is eager; no cache entry is touched), so
-composing leaves the catalog and the cache as it found them. Catalyst's
-CollapseProject / PushDownPredicates / ColumnPruning flatten the chain
-exactly as DuckDB's optimizer flattens the reference's nested FROMs
-(SURVEY.md §4.2).
+Like the reference, which rewrites ``A |> B |> C`` into the nested text
+``FROM ( FROM ( A ) B ) C`` and hands it to DuckDB (the reference's
+``src/psql_extension.cpp:28-49``, ``README.md:68-87``), a pipeline
+compiles to one SQL text: each stage's ``SELECT … FROM {__pipe} …``
+takes the previous stage's text as a parenthesized subquery (``_Lazy``),
+and Catalyst analyzes the whole pipeline in one ``spark.sql`` call
+(SURVEY.md §3.4). Only the DataFrames spliced into the text — sources,
+join sides, CTEs, operator results — get names: ``Compiler._bind``
+registers each as a per-statement temp view straight in the session
+catalog, and the statement end drops them there (analysis is eager; no
+cache entry is touched), so composing leaves the catalog and the cache
+as it found them. Catalyst's CollapseProject / PushDownPredicates /
+ColumnPruning flatten the nesting exactly as DuckDB's optimizer
+flattens the reference's (SURVEY.md §4.2).
 
 Statement forms (conformance surface, SURVEY.md §2.B):
 
@@ -24,6 +27,7 @@ Statement forms (conformance surface, SURVEY.md §2.B):
 from __future__ import annotations
 
 import collections
+import collections.abc
 import hashlib
 import itertools
 import math
@@ -32,6 +36,7 @@ import re
 import string
 import threading
 import uuid
+import weakref
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +53,7 @@ from . import sequences as sequences_mod
 from .operators import merge_into as merge_mod
 from .errors import PsqlCompileError, PsqlParseError
 from .functions.shims import _NONDET_FNS, _match_paren_tok, _split_args, apply_shims
-from .lexer import Token, depth_map, strip_comments, tokenize
+from .lexer import Token, depth_map, lex, lexing_once, strip_comments
 
 from .scanner import find_blocks, first_statement, has_psql_tokens, split_stages
 from .sources.resolver import SourceResolver
@@ -106,7 +111,7 @@ def _parse_star_modifiers(
     [(expr, col)], rest_after_comma) or None when the select list has no
     star modifier.
     """
-    toks = tokenize(sel)
+    toks = lex(sel)
     i = 0
     distinct = ""
     if toks and toks[0].kind == "word" and toks[0].lower == "distinct":
@@ -178,7 +183,7 @@ def _expand_columns_calls(sel: str, cols: list[str]) -> str | None:
     """
     if not _COLUMNS_CALL.search(sel):
         return None
-    toks = tokenize(sel)
+    toks = lex(sel)
     items: list[tuple[int, int]] = []  # [start, end) char spans of items
     depth = 0
     start = 0
@@ -194,7 +199,7 @@ def _expand_columns_calls(sel: str, cols: list[str]) -> str | None:
     out_items: list[str] = []
     for s, e in items:
         item = sel[s:e]
-        itoks = tokenize(item)
+        itoks = lex(item)
         call = None
         for k, t in enumerate(itoks):
             if (
@@ -286,7 +291,7 @@ def _block_cte_name(stmt: str, blk_start: int) -> str | None:
     """The CTE name binding a block: ``with <name> as (| … |)`` — scan the
     tokens before the block for ``<name> as`` (an optional column list
     between them is tolerated)."""
-    toks = [t for t in tokenize(stmt[:blk_start])]
+    toks = [t for t in lex(stmt[:blk_start])]
     j = len(toks) - 1
     if j >= 0 and toks[j].kind == "rparen":
         # skip a column list `(c1, c2)` between name and AS? not legal for
@@ -324,6 +329,69 @@ def _twin_table_name(path: str, keys: tuple[str, ...] | list[str]) -> str:
 def _esc(text: str) -> str:
     """Escape braces so user text survives ``Compiler._run_sql``."""
     return text.replace("{", "{{").replace("}", "}}")
+
+
+def _sql(spark: SparkSession, text: str) -> DataFrame:
+    """``spark.sql(text)`` in one py4j round trip: the session's
+    ``sql(String)``, without PySpark's empty parameter array (four more)."""
+    return DataFrame(spark._jsparkSession.sql(text), spark)
+
+
+class _Lazy:
+    """A pipeline prefix kept as one SQL query text over bound names.
+
+    The next stage nests ``sql`` as a subquery in its FROM clause; the
+    text becomes a DataFrame — one ``spark.sql`` call, which analyzes
+    it — only when a pass reads the prefix's schema or runs a DataFrame
+    operator on it (``df``)."""
+
+    __slots__ = ("sql", "_spark", "_df")
+
+    def __init__(self, spark: SparkSession, sql: str):
+        self.sql = sql
+        self._spark = spark
+        self._df: DataFrame | None = None
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = _sql(self._spark, self.sql)
+        return self._df
+
+    @property
+    def columns(self) -> list[str]:
+        return self.df.columns
+
+    @property
+    def schema(self):
+        return self.df.schema
+
+
+class _Hint(collections.abc.Mapping):
+    """Lowercased column name → dtype over a fragment's inputs, read on
+    the first lookup: only a type-directed shim that asks analyzes a
+    ``_Lazy`` prefix."""
+
+    def __init__(self, sources: list):
+        self._sources = sources
+        self._map: dict[str, str] | None = None
+
+    def _fields(self) -> dict[str, str]:
+        if self._map is None:
+            self._map = {}
+            for v in self._sources:
+                for f in v.schema.fields:
+                    self._map.setdefault(f.name.lower(), f.dataType.simpleString())
+        return self._map
+
+    def __getitem__(self, key: str) -> str:
+        return self._fields()[key]
+
+    def __iter__(self):
+        return iter(self._fields())
+
+    def __len__(self) -> int:
+        return len(self._fields())
 
 
 @dataclass
@@ -404,6 +472,10 @@ class Compiler:
         # built: later stages may still use a CTE (`… from a |> join b`)
         self._bound: dict[int, tuple[DataFrame, str]] = {}
         self._view_ids = itertools.count()  # _ids also numbers plan aliases
+        # _bind's name and view definition per DataFrame, kept while the
+        # DataFrame lives (the resolver memoizes sources across statements)
+        self._named: "weakref.WeakKeyDictionary[DataFrame, tuple[str, object]]" = (
+            weakref.WeakKeyDictionary())
         self._stashed_views: dict[str, object] = {}
         # looked up once: the session catalog (its dropTempView only
         # removes the entry; spark.catalog.dropTempView uncaches every
@@ -417,6 +489,19 @@ class Compiler:
         logical = jsql.catalyst.plans.logical
         self._local_sort_nodes = (logical.Repartition, logical.Sort, logical.Project)
         self._of_rows = jsql.classic.Dataset.ofRows
+        # _view_relation's view definition: the CatalogTable that
+        # CreateViewCommand stores for a DataFrame's temp view (Spark's
+        # defaults, the analyzed-plan marker), built per name without
+        # running the command (its QueryExecution costs ~9 ms a view)
+        catalog = jsql.catalyst.catalog
+        table = catalog.CatalogTable
+        self._view_defaults = [getattr(table, f"apply$default${k}")() for k in range(5, 22)]
+        self._view_defaults[12 - 5] = spark._jvm.PythonUtils.toScalaMap(
+            {table.VIEW_STORING_ANALYZED_PLAN(): "true"})
+        self._view_kind = (catalog.CatalogTableType.VIEW(),
+                           catalog.CatalogStorageFormat.empty())
+        self._view_ctors = (jsql.catalyst.TableIdentifier, table,
+                            catalog.TemporaryViewRelation, spark._jvm.scala.Some)
         # Running base-bytes estimate of the CURRENT pipe chain's inputs
         # (sum of the head path + every joined path), used by the
         # size-aware broadcast hint in _apply_stage_sql. None = unknown
@@ -503,7 +588,7 @@ class Compiler:
         # compilation mutates per-statement state (the bound view names);
         # one statement at a time per compiler
         text = strip_comments(text)
-        with self._lock:
+        with self._lock, lexing_once():
             self.confs = confs_mod.read(self.spark)
             self._stmt_source_bytes = _statement_source_bytes(text)
             self._release_persisted_state()
@@ -517,24 +602,43 @@ class Compiler:
                 self._end_statement()
 
     def _bind(self, df: DataFrame) -> str:
-        """``df``'s temp-view name for this statement, registered once."""
+        """``df``'s temp-view name for this statement, registered once. A
+        DataFrame keeps its name and view definition across statements
+        (``_named``), so binding a resolver-memoized source again is one
+        catalog call."""
         hit = self._bound.get(id(df))
         if hit is not None:
             return hit[1]
-        name = f"__psql_{self._tag}_{next(self._view_ids)}"
-        df.createOrReplaceTempView(name)
+        named = self._named.get(df)
+        if named is None:
+            name = f"__psql_{self._tag}_{next(self._view_ids)}"
+            named = self._named[df] = (name, self._view_relation(name, df))
+        name, relation = named
+        self._register_view(name, relation)
         self._bound[id(df)] = (df, name)
         return name
 
     def _bind_cte(self, name: str, df: DataFrame) -> None:
         """Register a CTE under the user's ``name`` for this statement,
-        stashing the temp view it shadows for ``_end_statement``. The old
-        entry leaves first: a replace over another plan uncaches it."""
+        stashing the temp view it shadows for ``_end_statement``."""
         if name not in self._stashed_views:
             raw = self._jcatalog.getRawTempView(name)
             self._stashed_views[name] = raw.get() if raw.isDefined() else None
-        self._jcatalog.dropTempView(name)
-        df.createOrReplaceTempView(name)
+        self._register_view(name, self._view_relation(name, df))
+
+    def _view_relation(self, name: str, df: DataFrame):
+        """The ``TemporaryViewRelation`` that ``createOrReplaceTempView``
+        stores for ``df`` under ``name`` (its analyzed plan), built
+        without running the command."""
+        ident, table, relation, some = self._view_ctors
+        plan = df._jdf.logicalPlan()
+        meta = table(ident(name), *self._view_kind, plan.schema(), *self._view_defaults)
+        return relation(meta, some(plan))
+
+    def _register_view(self, name: str, relation) -> None:
+        """Put a view definition in the session catalog. Replacing an
+        entry never uncaches: the catalog only swaps the definition."""
+        self._jcatalog.createTempView(name, relation, True)
 
     def _end_statement(self) -> None:
         """Drop the statement's names; restore what its CTEs shadowed."""
@@ -587,10 +691,10 @@ class Compiler:
                 return df
             root = df._jdf.queryExecution().analyzed()
             wrap_project = None
-            if root.getClass().getSimpleName() == "Project":
+            if root.nodeName() == "Project":
                 wrap_project = root
                 root = root.child()
-            if root.getClass().getSimpleName() != "Sort":
+            if root.nodeName() != "Sort":
                 return df
             if not getattr(root, "global")():
                 return df
@@ -627,7 +731,7 @@ class Compiler:
             # (DuckDB semantics; spliced before any other rewrite so the
             # literal carries the ORIGINAL spelling)
             lit = "'" + stmt.replace("'", "''") + "'"
-            out, pos, toks = [], 0, tokenize(stmt)
+            out, pos, toks = [], 0, lex(stmt)
             for i, t in enumerate(toks):
                 if (
                     t.kind == "word"
@@ -642,7 +746,7 @@ class Compiler:
             if out:
                 out.append(stmt[pos:])
                 stmt = "".join(out)
-        head = tokenize(stmt)
+        head = lex(stmt)
         if head and head[0].kind == "word" and head[0].lower == "summarize":
             # DuckDB `SUMMARIZE <table|'path'|query>` statement
             from .operators.profile import summarize
@@ -650,7 +754,7 @@ class Compiler:
             rest = stmt[head[0].end :].strip().rstrip(";")
             if not rest:
                 raise PsqlParseError('syntax error at or near ""')
-            first = tokenize(rest)[0]
+            first = lex(rest)[0]
             if not (
                 first.kind == "word"
                 and first.lower in ("select", "from", "with", "values")
@@ -663,7 +767,7 @@ class Compiler:
             # keep Spark's native DESCRIBE; pipes and path literals compile
             # the source and report (column_name, column_type)
             rest = stmt[head[0].end :].strip().rstrip(";")
-            rtoks = tokenize(rest) if rest else []
+            rtoks = lex(rest) if rest else []
             if rtoks and not (
                 len(rtoks) == 1 and rtoks[0].kind in ("word", "qident")
             ):
@@ -699,7 +803,7 @@ class Compiler:
             # (ANALYZE additionally executes it so AQE finalizes)
             rest = stmt[head[0].end :].strip()
             analyze = False
-            rtoks = tokenize(rest)
+            rtoks = lex(rest)
             if rtoks and rtoks[0].kind == "word" and rtoks[0].lower == "analyze":
                 analyze = True
                 rest = rest[rtoks[0].end :].strip()
@@ -1043,15 +1147,13 @@ class Compiler:
         per-use via the twin's (bytes, mtime) fingerprint.
         Off-switch: ``spark.psql.bucketedTwins=false``.
         """
-        if self._in_scan_reuse or df.isStreaming:
-            return df
-        if _order_sensitive_stmt(stmt):
+        if self._in_scan_reuse or _order_sensitive_stmt(stmt):
             return df
         if not self.resolver.bucketed_twins and not self.resolver.table_twins:
             return df
-        if not self.confs["spark.psql.bucketedTwins"]:
+        if not self.confs["spark.psql.bucketedTwins"] or df.isStreaming:
             return df
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         paths = {
             t.text[1:-1]
             for t in toks
@@ -1159,13 +1261,13 @@ class Compiler:
         sensitive star expansion) falls back to the original DataFrame —
         the pass can lose the optimization, never correctness.
         """
-        if self._in_scan_reuse or df.isStreaming:
+        if self._in_scan_reuse:
             return df
         max_bytes = self.confs["spark.psql.scanReuse.maxBytes"]
         if max_bytes <= 0:
             return df
         counts = collections.Counter(
-            t.text[1:-1] for t in tokenize(stmt) if t.kind == "string"
+            t.text[1:-1] for t in lex(stmt) if t.kind == "string"
         )
         cand = {}
         for p, n in counts.items():
@@ -1173,7 +1275,7 @@ class Compiler:
                 size = _path_bytes(p)
                 if TINY_INPUT_BYTES <= size <= max_bytes:
                     cand[p] = size
-        if not cand:
+        if not cand or df.isStreaming:
             return df
         try:
             plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1194,7 +1296,7 @@ class Compiler:
                 # count()). Keep those too or analysis fails.
                 used = set().union(*schemas)
                 named = {
-                    t.lower for t in tokenize(stmt) if t.kind in ("word", "qident")
+                    t.lower for t in lex(stmt) if t.kind in ("word", "qident")
                 }
                 cols = [
                     c for c in base.columns if c in used or c.lower() in named
@@ -1291,7 +1393,7 @@ class Compiler:
         """Detect ``COPY (query)|table TO 'path' [(options)]`` (DuckDB sink
         form, /root/reference delegated dialect). Returns (source_text,
         path, options)."""
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         if not toks or toks[0].kind != "word" or toks[0].lower != "copy":
             return None
         i = 1
@@ -1329,7 +1431,7 @@ class Compiler:
     def _split_dml_tail(rest: str, keywords: tuple[str, ...]) -> dict:
         """Split a DML tail at top-level KEYWORDS (in any order of
         appearance). Returns {"" : leading text, kw: text-after-kw}."""
-        rtoks = tokenize(rest)
+        rtoks = lex(rest)
         depth = 0
         marks: list[tuple[str, int, int]] = []
         for t in rtoks:
@@ -1357,7 +1459,7 @@ class Compiler:
         [RETURNING …]``, ``UPDATE t SET a = e[, …] [FROM u] [WHERE p]
         [RETURNING …]``, ``TRUNCATE [TABLE] t``. Returns (kind, name,
         set_text, where_text, using_text, returning_text)."""
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         if not toks or toks[0].kind != "word":
             return None
         head = toks[0].lower
@@ -1415,7 +1517,7 @@ class Compiler:
     def _resolve_dml_source(self, text: str) -> tuple[DataFrame, str]:
         """Resolve a DELETE USING / UPDATE FROM source: a table/view name
         or a quoted path, with an optional alias. Returns (df, alias)."""
-        stoks = tokenize(text)
+        stoks = lex(text)
         if not stoks:
             raise PsqlCompileError(f"DML source: cannot parse {text!r}")
         t0 = stoks[0]
@@ -1582,14 +1684,12 @@ class Compiler:
     def _dml_target(self, name: str, verb: str) -> tuple[DataFrame, bool]:
         """(the relation, whether it is a temp view) for a DML target;
         raises when neither a temp view nor a catalog table has the name."""
+        if self._jcatalog.getRawTempView(name).isDefined():
+            return self.spark.table(name), True
         catalog = self.spark.catalog
-        is_view = any(
-            t.name == name and t.tableType in ("TEMPORARY", "VIEW")
-            for t in catalog.listTables()
-        )
-        if not is_view and not catalog.tableExists(name):
+        if not catalog.tableExists(name):
             raise PsqlCompileError(f"{verb}: table or view {name!r} not found")
-        return self.spark.table(name), is_view
+        return self.spark.table(name), catalog.getTable(name).tableType == "VIEW"
 
     def _write_back(self, name: str, new: DataFrame, is_view: bool) -> None:
         """Copy-on-write: pin ``new``, then re-point the temp view at it
@@ -2034,7 +2134,7 @@ class Compiler:
     def _parse_copy_from(self, stmt: str) -> tuple[str, str, dict[str, str]] | None:
         """Detect ``COPY <table> FROM '<path>' [(options)]`` — DuckDB's
         import direction (delegated dialect). Returns (name, path, opts)."""
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         if (
             len(toks) < 4
             or toks[0].kind != "word"
@@ -2138,7 +2238,7 @@ class Compiler:
         """
         import json as _json
 
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         if (
             len(toks) < 3
             or toks[1].kind != "word"
@@ -2249,7 +2349,7 @@ class Compiler:
         ("update", key_cols|None, set_text, where_text) |
         ("replace", None)."""
         returning: str | None = None
-        rtoks = tokenize(stmt)
+        rtoks = lex(stmt)
         depth0 = 0
         for t in rtoks:
             if t.kind in ("lparen", "block_open"):
@@ -2260,7 +2360,7 @@ class Compiler:
                 returning = stmt[t.end :].strip().rstrip(";")
                 stmt = stmt[: t.start]
                 break
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         words = [t.lower if t.kind == "word" else t.text for t in toks]
         conflict: tuple | None = None
         if words[:1] != ["insert"]:
@@ -2359,7 +2459,7 @@ class Compiler:
             return ("nothing", key_cols)
         if words[i : i + 3] == ["do", "update", "set"]:
             rest = stmt[toks[i + 2].end :]
-            rtoks = tokenize(rest)
+            rtoks = lex(rest)
             depth = 0
             where = None
             set_text = rest.strip().rstrip(";")
@@ -2594,14 +2694,8 @@ class Compiler:
                     f"INSERT INTO … BY NAME: source column(s) "
                     f"{', '.join(unmatched)} not in target schema"
                 )
-            sel = [
-                F.col(have[f.name.lower()]).cast(f.dataType).alias(f.name)
-                if f.name.lower() in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in fields
-            ]
-            return src.select(*sel)
-        if cols is not None:
+            picks = [have.get(f.name.lower()) for f in fields]
+        elif cols is not None:
             if len(cols) != len(src.columns):
                 raise PsqlCompileError(
                     f"INSERT INTO: {len(cols)} target columns but source "
@@ -2614,24 +2708,18 @@ class Compiler:
                     f"not in target schema"
                 )
             pos = {c.lower(): i for i, c in enumerate(cols)}
-            sel = [
-                F.col(src.columns[pos[f.name.lower()]]).cast(f.dataType).alias(f.name)
-                if f.name.lower() in pos
-                else F.lit(None).cast(f.dataType).alias(f.name)
+            picks = [
+                src.columns[pos[f.name.lower()]] if f.name.lower() in pos else None
                 for f in fields
             ]
-            return src.select(*sel)
-        if len(src.columns) != len(fields):
-            raise PsqlCompileError(
-                f"INSERT INTO: target has {len(fields)} columns but source "
-                f"produces {len(src.columns)}"
-            )
-        return src.select(
-            *[
-                F.col(src.columns[i]).cast(f.dataType).alias(f.name)
-                for i, f in enumerate(fields)
-            ]
-        )
+        else:
+            if len(src.columns) != len(fields):
+                raise PsqlCompileError(
+                    f"INSERT INTO: target has {len(fields)} columns but source "
+                    f"produces {len(src.columns)}"
+                )
+            picks = list(src.columns)
+        return _cast_select(src, picks, fields)
 
     # ------------------------------------------------------------------
     # declared key constraints (constraints.py)
@@ -3163,7 +3251,7 @@ class Compiler:
             return _dynamic_pivot(base, text[toks[on_i].start :].strip())
         # UNPIVOT: ON <cols> [INTO NAME <k> VALUE <v>]
         spec = text[toks[on_i].end :].strip()
-        stoks = tokenize(spec)
+        stoks = lex(spec)
         into_i = None
         for j, t in enumerate(stoks):
             if t.kind == "word" and t.lower == "into":
@@ -3194,7 +3282,7 @@ class Compiler:
 
     def _parse_create(self, stmt: str) -> tuple[str, str, bool, str, bool] | None:
         """Detect ``CREATE [OR REPLACE] [TEMP] VIEW|TABLE name AS body``."""
-        toks = tokenize(stmt)
+        toks = lex(stmt)
         words = [t.lower if t.kind == "word" else t.text for t in toks]
         if not words or words[0] != "create":
             return None
@@ -3294,7 +3382,7 @@ class Compiler:
         stages = split_stages(text)
         if len(stages) > 1:
             return self._compile_pipeline(stages)
-        toks = tokenize(text)
+        toks = lex(text)
         if not toks:
             raise PsqlParseError('syntax error at or near ""')
         head_word = toks[0].lower if toks[0].kind == "word" else None
@@ -3313,7 +3401,7 @@ class Compiler:
                 if df is None:
                     df = self._run_sql(f"SELECT * FROM {base_from}", params)
                 return self._apply_ext_verb(df, head.tail.ext_verb, head.tail.ext_args or "")
-            return self._apply_stage_sql(df, head.tail, base_from, params)[0]
+            return self._df(self._apply_stage_sql(df, head.tail, base_from, params)[0])
         if head_word in ("pivot", "unpivot"):
             res = self._plain_pivot_stmt(text, toks, head_word)
             if res is not None:
@@ -3431,7 +3519,7 @@ class Compiler:
         if not rest.strip():
             return None
         # split the body at a depth-0 UNION not followed by ALL
-        btoks = tokenize(body)
+        btoks = lex(body)
         bdepths = depth_map(btoks)
         split_at = None
         for k, bt in enumerate(btoks):
@@ -3510,19 +3598,14 @@ class Compiler:
         """Prepare a user SQL fragment for the parameterized spark.sql call:
         dialect shims, FROM/JOIN path-literal resolution (anywhere in the
         fragment, including inside subqueries), and brace escaping."""
-        # column dtypes visible to this fragment (pipe input + join sides):
-        # lets the bracket rewrite pick substring vs slice vs map access
-        hint: dict[str, str] = {}
-        for v in params.values():
-            if isinstance(v, DataFrame):
-                for f in v.schema.fields:
-                    hint.setdefault(f.name.lower(), f.dataType.simpleString())
-        if not hint and "'" in text:
-            # plain SQL over path literals has no pipe input to hint from;
-            # resolve FROM/JOIN '<path>' schemas up front (resolver-memoized)
-            # so type-directed shims (decimal-cast away mode, date+interval,
-            # bracket slicing) see column dtypes here too
-            ptoks = tokenize(text)
+        # column dtypes visible to this fragment (pipe input + join sides),
+        # read only when a type-directed shim asks (bracket slicing,
+        # decimal-cast away mode, date+interval)
+        sources = [v for v in params.values() if isinstance(v, (DataFrame, _Lazy))]
+        if not sources and "'" in text:
+            # plain SQL over path literals has no pipe input to hint from:
+            # its FROM/JOIN '<path>' sources (resolver-memoized) hint instead
+            ptoks = lex(text)
             for k, pt in enumerate(ptoks):
                 if (
                     pt.kind == "string"
@@ -3531,15 +3614,11 @@ class Compiler:
                     and ptoks[k - 1].lower in ("from", "join")
                 ):
                     try:
-                        src = self.resolver.resolve(
+                        sources.append(self.resolver.resolve(
                             pt.text[1:-1].replace("''", "'")
-                        )
+                        ))
                     except Exception:
                         continue
-                    for f in src.schema.fields:
-                        hint.setdefault(
-                            f.name.lower(), f.dataType.simpleString()
-                        )
         if "current_setting" in text.lower():
             # current_setting('key') → the session conf value as a string
             # literal (compile-time, like DuckDB binds it)
@@ -3563,8 +3642,8 @@ class Compiler:
                 _getvar,
                 text,
             )
-        text = apply_shims(text, hint or None)
-        toks = tokenize(text)
+        text = apply_shims(text, _Hint(sources) if sources else None)
+        toks = lex(text)
         out: list[str] = []
         pos = 0
         # track the enclosing call: standard-SQL forms like
@@ -3706,12 +3785,37 @@ class Compiler:
         out.append(_esc(text[pos:]))
         return "".join(out)
 
-    def _run_sql(self, sql_text: str, params: dict) -> DataFrame:
-        """``sql_text`` with each ``{k}`` it names bound to ``params[k]``
-        (``format_map`` also un-doubles ``_esc``'s ``{{ }}``)."""
+    def _text(self, sql_text: str, params: dict) -> str:
+        """``sql_text`` with each ``{k}`` it names replaced by ``params[k]``:
+        a DataFrame by its bound view name, a ``_Lazy`` by its text as a
+        subquery (``format_map`` also un-doubles ``_esc``'s ``{{ }}``)."""
         names = {f for _, f, _, _ in string.Formatter().parse(sql_text) if f}
-        return self.spark.sql(
-            sql_text.format_map({k: self._bind(params[k]) for k in names})
+        return sql_text.format_map({k: self._ref(params[k]) for k in names})
+
+    def _ref(self, v: "DataFrame | _Lazy") -> str:
+        if isinstance(v, DataFrame):
+            return self._bind(v)
+        if v._df is not None:  # analyzed already: reuse its plan
+            return self._bind(v._df)
+        return f"({v.sql})"
+
+    def _run_sql(self, sql_text: str, params: dict) -> DataFrame:
+        return _sql(self.spark, self._text(sql_text, params))
+
+    def _lazy(self, sql_text: str, params: dict) -> _Lazy:
+        return _Lazy(self.spark, self._text(sql_text, params))
+
+    @staticmethod
+    def _df(v: "DataFrame | _Lazy") -> DataFrame:
+        return v if isinstance(v, DataFrame) else v.df
+
+    def _broadcast(self, v: "DataFrame | _Lazy") -> _Lazy:
+        """``F.broadcast(v)`` as text: the same resolved hint, written as a
+        SQL hint over ``v``'s name or subquery, so a text prefix is not
+        analyzed and a bound source keeps its view."""
+        return _Lazy(
+            self.spark,
+            f"SELECT /*+ BROADCAST(__psql_bc) */ * FROM {self._ref(v)} __psql_bc",
         )
 
     def _raw_sql(self, text: str) -> DataFrame:
@@ -3725,6 +3829,33 @@ class Compiler:
     # ------------------------------------------------------------------
 
     def _compile_pipeline(self, stages: list[str]) -> DataFrame:
+        """Compile ``A |> B |> C`` into one SQL text and one DataFrame.
+
+        As in the reference's rewrite to ``FROM ( FROM ( A ) B ) C``, each
+        stage's ``SELECT … FROM {__pipe} …`` takes the previous stage's
+        text as a parenthesized subquery (a ``_Lazy``), so Catalyst
+        analyzes the whole pipeline once, in the ``spark.sql`` call at the
+        end. Only DataFrames are bound to view names: the sources, join
+        sides, CTEs and operator results.
+
+        A prefix is analyzed early (its own ``spark.sql`` call, whose
+        DataFrame the rest of the text then binds) only where a step needs
+        its schema or a DataFrame operator:
+
+        * star ``EXCLUDE``/``REPLACE``/``RENAME``, ``COLUMNS(…)``, GROUPS
+          frames, ``DISTINCT ON`` and ``PIVOT ON`` (column lists);
+        * the B11 same-name join keys (``… join r on a.k = r.k``) and the
+          deferred dim join (prefix columns against the join side's);
+        * eager aggregation below a join and keyed GROUP-BY elimination
+          (prefix columns and result types);
+        * a type-directed shim that asks for a column's dtype (``_Hint``),
+          and ``unnest(<struct column>)`` (``_struct_fields_hint``);
+        * ``LIMIT n%`` (a count), ``QUALIFY``, ``USING SAMPLE``, a trailing
+          set operation, AS-OF/positional joins and pipe verbs (DataFrame
+          operators).
+
+        A broadcast hint on the pipe side needs no analysis: it is the SQL
+        hint ``/*+ BROADCAST */`` on the subquery (``_broadcast``)."""
         # Parse every stage BEFORE compiling any: the reference re-parses the
         # whole rewritten text before binding (cpp:83-89), so a syntax error
         # in stage N surfaces even when stage 0's table doesn't exist.
@@ -3784,7 +3915,7 @@ class Compiler:
             i += 1
         if deferred:
             df = self._flush_deferred(df, deferred)
-        return df
+        return self._df(df)
 
     # ------------------------------------------------------------------
     # EXISTS/NOT-EXISTS probe alignment
@@ -4147,7 +4278,7 @@ class Compiler:
             am = re.match(r"(?is)^(\w+)\s*\(", it)
             if am is None or am.group(1).lower() not in self._KEYED_AGG_FNS:
                 return None
-            toks = tokenize(it)
+            toks = lex(it)
             if toks[1].kind != "lparen":
                 return None
             close = _match_paren_tok(toks, 1)
@@ -4392,7 +4523,7 @@ class Compiler:
         except Exception:  # noqa: BLE001
             return None
         plan = match_eager_agg(
-            st1, st2, left.columns, right.columns, spec, st1.alias
+            st1, st2, lambda: left.columns, lambda: right.columns, spec, st1.alias
         )
         if plan is None or not plan.is_left:
             return None
@@ -4655,7 +4786,7 @@ class Compiler:
         m = re.match(r"(?is)^\s*(not\s+)?exists\s*\(", pred)
         if not m:
             return None
-        toks = tokenize(pred)
+        toks = lex(pred)
         op = None
         for j, t in enumerate(toks):
             if t.kind == "lparen":
@@ -4934,7 +5065,7 @@ class Compiler:
                     ht = ht2  # same rewrite for every key or bail
                 nondet = any(
                     t.kind == "word" and t.lower in _NONDET_FNS
-                    for t in tokenize(c)
+                    for t in lex(c)
                 )
                 if ht is not None and not nondet:
                     hoisted.append(ht)
@@ -5123,7 +5254,7 @@ class Compiler:
         references become bare F2 columns; bare names resolve to F2's
         own columns (inner scope) or to outer columns that are the
         partition key / functionally dependent on it."""
-        toks = tokenize(c)
+        toks = lex(c)
         out: list[str] = []
         pos = 0
         i = 0
@@ -5440,7 +5571,7 @@ class Compiler:
         # scale this is the classic magic-sets/SIP reduction — the
         # semi build ships only the key column, never the payload.
         key_cols = [F.col(c1).alias(c2) for c1, c2 in pairs]
-        keys_df = F.broadcast(df.select(*key_cols).distinct())
+        keys_df = F.broadcast(self._df(df).select(*key_cols).distinct())
         right = right.join(keys_df, on=[c2 for _, c2 in pairs], how="leftsemi")
         self._pipe_bytes = right_bytes
         return right
@@ -5481,7 +5612,7 @@ class Compiler:
             dims = d.dims
             hint_max = self.confs["spark.psql.broadcastHint.maxBytes"]
             if d.dims_bytes and 0 < d.dims_bytes <= hint_max:
-                dims = F.broadcast(dims)
+                dims = self._broadcast(dims)
             params: dict = {"__pipe": df, "__dims": dims}
             on_sql = self._frag(d.on_text, params)
             out = self._run_sql(
@@ -5528,7 +5659,7 @@ class Compiler:
         try:
             right = self._resolve_join_source(spec)
             plan = match_eager_agg(
-                st, nxt, df.columns, right.columns, spec, l_alias
+                st, nxt, lambda: df.columns, lambda: right.columns, spec, l_alias
             )
             if plan is None:
                 return None
@@ -5562,9 +5693,10 @@ class Compiler:
                 f"from {{__ea_r}}{where} group by {plan.equi_right}",
                 {"__ea_r": right},
             )
-            joined = df.join(
+            left = self._df(df)
+            joined = left.join(
                 pre,
-                df[plan.equi_left] == pre[key],
+                left[plan.equi_left] == pre[key],
                 "left" if plan.is_left else "inner",
             )
             tail = ""
@@ -5586,10 +5718,10 @@ class Compiler:
         return out
 
     def _apply_stage(
-        self, df: DataFrame, st: Stage, pending_alias: str | None
-    ) -> tuple[DataFrame, str | None]:
+        self, df: "DataFrame | _Lazy", st: Stage, pending_alias: str | None
+    ) -> tuple["DataFrame | _Lazy", str | None]:
         if st.ext_verb is not None:
-            return self._apply_ext_verb(df, st.ext_verb, st.ext_args or ""), None
+            return self._apply_ext_verb(self._df(df), st.ext_verb, st.ext_args or ""), None
         if st.is_pure_alias():
             return df, st.alias
         if st.alias is None and pending_alias is not None:
@@ -5968,7 +6100,7 @@ class Compiler:
             #   (small, broadcast) eval set (operators/text.py)
             from .operators.text import contamination_check
 
-            atoks = tokenize(args)
+            atoks = lex(args)
             if not atoks or atoks[0].kind != "string":
                 raise PsqlCompileError(
                     "contamination: first argument must be a quoted probe source path"
@@ -6016,7 +6148,7 @@ class Compiler:
             #   top-weight rows downstream to perform the resampling
             from .operators.text import dsir_weights
 
-            atoks = tokenize(args)
+            atoks = lex(args)
             if not atoks or atoks[0].kind != "string":
                 raise PsqlCompileError(
                     "dsir: first argument must be a quoted target source path"
@@ -6082,7 +6214,7 @@ class Compiler:
             #   operators/text.py ngram_lm_score)
             from .operators.text import ngram_lm_score
 
-            atoks = tokenize(args)
+            atoks = lex(args)
             if not atoks or atoks[0].kind != "string":
                 raise PsqlCompileError(
                     "lm_score: first argument must be a quoted reference "
@@ -6106,7 +6238,7 @@ class Compiler:
             #   nested loop (operators/rangejoin.py)
             from .operators.rangejoin import interval_join
 
-            atoks = tokenize(args)
+            atoks = lex(args)
             if not atoks or atoks[0].kind != "string":
                 raise PsqlCompileError(
                     "range_join: first argument must be a quoted source path"
@@ -6249,9 +6381,11 @@ class Compiler:
         return None, re.sub(r"(?i)^from\s+", "", fragged, count=1)
 
     def _apply_stage_sql(
-        self, df: DataFrame | None, st: Stage, base_from: str, params: dict
-    ) -> tuple[DataFrame, str | None]:
-        """Compile one stage over ``base_from`` (usually ``{__pipe}``)."""
+        self, df: "DataFrame | _Lazy | None", st: Stage, base_from: str, params: dict
+    ) -> tuple["DataFrame | _Lazy", str | None]:
+        """Compile one stage over ``base_from`` (usually ``{__pipe}``) into
+        SQL text; a step that needs the input's schema or a DataFrame
+        operator analyzes it (see ``_compile_pipeline``)."""
         if st.limit is not None:
             m = re.match(r"^\s*([0-9]+(?:\.[0-9]+)?)\s*%\s*$", st.limit.strip())
             if m:
@@ -6262,6 +6396,7 @@ class Compiler:
                 out, ret_alias = self._apply_stage_sql(
                     df, _dc.replace(st, limit=None), base_from, params
                 )
+                out = self._df(out)
                 n = int(out.count() * float(m.group(1)) / 100.0)
                 return out.limit(n), ret_alias
         params = dict(params)
@@ -6313,7 +6448,7 @@ class Compiler:
                         common = [c for c in pairs if df is not None and c in df.columns]
                         if common:
                             renames = {c: f"__psql_r_{c}" for c in common}
-                            right = right.withColumnsRenamed(renames)
+                            right = self._df(right).withColumnsRenamed(renames)
                             on_text = _rewrite_qualified_cols(on_text, spec.alias, renames)
                             dedup_drop = list(renames.values())
                 # DuckDB implicitly names a bare join source: a table/CTE by
@@ -6480,7 +6615,11 @@ class Compiler:
                 out = out.drop("__psql_rn")
             return out, None
 
-        if st.group_by is None:
+        if st.group_by is None and any(
+            t.kind == "word" and t.lower == "unnest" for t in lex(sel)
+        ):
+            # the struct-field probe reads every input's schema: only
+            # for an unnest item
             su = _rewrite_struct_unnest(sel, _struct_fields_hint(params))
             if su is not None:
                 sel = su
@@ -6508,11 +6647,10 @@ class Compiler:
             parts.append(f"LIMIT {_esc(st.limit)}")
         if st.offset is not None:
             parts.append(f"OFFSET {_esc(st.offset)}")
-        sql_text = " ".join(parts)
-        out = self._run_sql(sql_text, params)
+        out: DataFrame | _Lazy = self._lazy(" ".join(parts), params)
 
         if dedup_drop:
-            out = out.drop(*dedup_drop)
+            out = self._df(out).drop(*dedup_drop)
         if st.qualify is not None:
             qparams: dict = {"__q": out}
             q = self._run_sql(
@@ -6521,22 +6659,22 @@ class Compiler:
             )
             out = q.filter("__psql_q").drop("__psql_q")
         if st.sample is not None:
-            out = _apply_sample(out, st.sample)
+            out = _apply_sample(self._df(out), st.sample)
         if st.setop_tail is not None:
             op_kw, operand = _split_setop_tail(st.setop_tail)
             other = self._compile_query_expr(operand)
-            out = _apply_setop(out, op_kw, other)
+            out = _apply_setop(self._df(out), op_kw, other)
         return out, None
 
     # -- join helpers -------------------------------------------------
 
     def _maybe_broadcast_hint(
         self,
-        df: DataFrame | None,
+        df: "DataFrame | _Lazy | None",
         right: DataFrame,
         spec: _JoinSpec,
         how: str,
-    ) -> tuple[DataFrame, DataFrame | None]:
+    ) -> tuple["DataFrame | _Lazy", "DataFrame | _Lazy | None"]:
         """Size-aware broadcast hints from the engine's own byte knowledge.
 
         Catalyst's static estimate for a join SUBTREE multiplies child
@@ -6549,7 +6687,7 @@ class Compiler:
         the base bytes of every path it resolved: when one side's
         accumulated base bytes fit spark.psql.broadcastHint.maxBytes
         (0 disables) and the other side is bigger or unknown, mark the
-        small side with F.broadcast. Base bytes are a lower bound on
+        small side with a broadcast hint. Base bytes are a lower bound on
         join-output size, so a subtree under the cap that explodes
         through many-to-many joins could over-broadcast — the cap is
         deliberately conservative (a few percent of executor memory)
@@ -6595,22 +6733,22 @@ class Compiler:
                     and right_bytes >= asym * left_bytes
                     and left_ok
                 ):
-                    df = F.broadcast(df)
+                    df = self._broadcast(df)
                 elif (
                     right_bytes < left_bytes
                     and right_bytes <= hint_max
                     and left_bytes >= asym * right_bytes
                 ):
-                    right = F.broadcast(right)
+                    right = self._broadcast(right)
             elif right_bytes is not None and right_bytes <= hint_max:
-                right = F.broadcast(right)
+                right = self._broadcast(right)
             elif (
                 right_bytes is None
                 and left_bytes is not None
                 and 0 < left_bytes <= hint_max
                 and left_ok
             ):
-                df = F.broadcast(df)
+                df = self._broadcast(df)
         self._pipe_bytes = (
             left_bytes + right_bytes
             if left_bytes is not None and right_bytes is not None
@@ -6620,7 +6758,7 @@ class Compiler:
 
     def _parse_join(self, jtext: str) -> _JoinSpec | None:
         """Parse a single-join tail; None → raw splice fallback."""
-        toks = tokenize(jtext)
+        toks = lex(jtext)
         i = 0
         how: list[str] = []
         while i < len(toks) and toks[i].kind == "word" and toks[i].lower in _JOIN_WORDS:
@@ -6711,10 +6849,10 @@ class Compiler:
         right = self._resolve_join_source(spec)
         how = spec.how_words.lower()
         if "positional" in how:
-            out = positional_join(df, right)
+            out = positional_join(self._df(df), right)
         else:
             out = asof_join(
-                df, right,
+                self._df(df), right,
                 on_text=spec.on_text or "",
                 left_alias=alias or "l",
                 right_alias=spec.alias or "r",
@@ -6735,8 +6873,33 @@ class Compiler:
 # helpers
 # ---------------------------------------------------------------------------
 
+def _cast_select(src: DataFrame, picks: list[str | None], fields) -> DataFrame:
+    """``src`` projected onto ``fields``: each pick (a source column, or
+    None for NULL) cast to its field's type under its field's name. One
+    ``selectExpr`` text when every type is atomic (its SQL name is exact);
+    Columns otherwise, since SQL cannot spell an array's or map's
+    non-null elements."""
+    from pyspark.sql import types as T
+
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    if not any(
+        isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType, T.UserDefinedType))
+        for f in fields
+    ):
+        return src.selectExpr(*[
+            f"CAST({'NULL' if c is None else q(c)} AS {f.dataType.simpleString()}) AS {q(f.name)}"
+            for c, f in zip(picks, fields)
+        ])
+    return src.select(*[
+        (F.lit(None) if c is None else F.col(c)).cast(f.dataType).alias(f.name)
+        for c, f in zip(picks, fields)
+    ])
+
+
 def _split_top_commas(text: str) -> list[str]:
-    toks = tokenize(text)
+    toks = lex(text)
     items: list[str] = []
     depth = 0
     start = 0
@@ -6756,7 +6919,7 @@ def _zip_field_name(expr: str, pos: int) -> str:
     """Predict arrays_zip's struct field name for one input expression:
     a bare/qualified identifier chain keeps its last segment's name,
     anything else is named by its position index."""
-    toks = tokenize(expr)
+    toks = lex(expr)
     if toks and len(toks) % 2 == 1 and all(
         t.kind in ("word", "qident") if i % 2 == 0 else (t.kind == "op" and t.text == ".")
         for i, t in enumerate(toks)
@@ -6867,7 +7030,7 @@ def _struct_fields_hint(params: dict) -> dict[str, list[str]]:
 
     hint: dict[str, list[str]] = {}
     for v in params.values():
-        if isinstance(v, DataFrame):
+        if isinstance(v, (DataFrame, _Lazy)):
             for f in v.schema.fields:
                 if isinstance(f.dataType, T.StructType):
                     hint.setdefault(f.name.lower(), list(f.dataType.names))
@@ -6888,7 +7051,7 @@ def _rewrite_struct_unnest(
     changed = False
     out: list[str] = []
     for item in items:
-        it = tokenize(item)
+        it = lex(item)
         if (
             len(it) >= 3
             and it[0].kind == "word"
@@ -6900,7 +7063,7 @@ def _rewrite_struct_unnest(
             fields = _struct_expr_fields(expr)
             if fields is None and schema_hint:
                 # bare (possibly qualified) column reference
-                et = tokenize(expr)
+                et = lex(expr)
                 if et and et[-1].kind in ("word", "qident") and all(
                     t.kind in ("word", "qident") or t.text == "." for t in et
                 ):
@@ -6927,7 +7090,7 @@ def _alias_bare_unnests(sel: str) -> str:
     changed = False
     out: list[str] = []
     for item in items:
-        it = tokenize(item)
+        it = lex(item)
         if (
             len(it) >= 3
             and it[0].kind == "word"
@@ -6959,7 +7122,7 @@ def _rewrite_parallel_unnest(sel: str) -> tuple[str, str] | None:
     items = _split_top_commas(sel)
     found: list[tuple[int, str, str | None]] = []  # (item idx, expr, alias)
     for idx, item in enumerate(items):
-        it = tokenize(item)
+        it = lex(item)
         if not it or it[0].kind != "word" or it[0].lower != "unnest":
             continue
         if len(it) < 2 or it[1].kind != "lparen":
@@ -7021,7 +7184,7 @@ def _has_toplevel_comma(src: str) -> bool:
     list). Commas inside parens — VALUES rows, function args, column
     alias lists like ``t(a, b)`` — are part of ONE source."""
     depth = 0
-    for t in tokenize(src):
+    for t in lex(src):
         if t.kind in ("lparen", "block_open"):
             depth += 1
         elif t.kind in ("rparen", "block_close"):
@@ -7225,7 +7388,7 @@ def _merge_source_equi_keys(
             return None
         side_cols = []
         for part in parts:
-            ptoks = tokenize(part.strip())
+            ptoks = lex(part.strip())
             # accept `alias . col` or a bare `col`
             if (
                 len(ptoks) == 3
@@ -7285,7 +7448,7 @@ def _rewrite_groups_frames(
     because __drK is computed over the original order spec. Returns None
     (caller falls through) for bare ``*`` select lists, EXCLUDE clauses,
     or GROUPS without ORDER BY."""
-    toks = tokenize(sel)
+    toks = lex(sel)
     depth = 0
     for j, t in enumerate(toks):
         if t.kind in ("lparen", "block_open"):
@@ -7374,7 +7537,7 @@ def _has_projection_star(texts: list[str]) -> bool:
 
     for txt in texts:
         t2 = re.sub(r"(?is)\bcount\s*\(\s*\*\s*\)", "cnt()", txt)
-        toks = tokenize(t2)
+        toks = lex(t2)
         for k, tk in enumerate(toks):
             if tk.kind == "op" and tk.text == "*" and (
                 k == 0 or not _ep(toks[k - 1])
@@ -7400,7 +7563,7 @@ def _head_path_bytes(head_text: str) -> int | None:
     shape (no joins in the head stage). None when the head is a table,
     subquery, or contains a join — unknown sizes poison the broadcast-
     hint estimate rather than guess."""
-    toks = tokenize(head_text)
+    toks = lex(head_text)
     if (
         len(toks) >= 2
         and toks[0].kind == "word"
@@ -7432,7 +7595,7 @@ def _statement_source_bytes(text: str) -> int:
     statement's text, or -1 when it has none (views, catalog tables,
     DDL)."""
     paths = set()
-    for t in tokenize(text):
+    for t in lex(text):
         if t.kind == "string":
             p = t.text[1:-1].replace("''", "'")
             if ("/" in p or p.endswith(".parquet")) and os.path.exists(p):
@@ -7516,7 +7679,7 @@ def _repeated_exchange_col(plan: str, file_cols: list[str]) -> str | None:
 def _split_top_and(text: str) -> list[str]:
     """Split a predicate on depth-0 AND (conjunction only — a depth-0
     OR makes the whole body one residual-unfriendly pred → [])."""
-    toks = tokenize(text)
+    toks = lex(text)
     depth = 0
     parts: list[str] = []
     start = 0
@@ -7538,7 +7701,7 @@ def _split_top_and(text: str) -> list[str]:
 
 
 def _is_fully_parenthesized(text: str) -> bool:
-    toks = tokenize(text)
+    toks = lex(text)
     if len(toks) < 2 or toks[0].kind != "lparen":
         return False
     return _match_paren(toks, 0) == len(toks) - 1
@@ -7597,7 +7760,7 @@ def _split_setops(text: str, toks: list[Token]) -> list[tuple[str | None, str]] 
 
 
 def _split_setop_tail(tail: str) -> tuple[str, str]:
-    toks = tokenize(tail)
+    toks = lex(tail)
     words = [tail[toks[0].start : toks[0].end].lower()]
     j = 1
     while j < len(toks) and toks[j].kind == "word" and toks[j].lower in ("all", "by", "name", "distinct"):
@@ -7612,7 +7775,7 @@ def _split_setop_trailing(text: str) -> tuple[str, str]:
     ORDER BY / LIMIT / OFFSET clauses). The trailing clauses bind to the
     whole set operation per standard SQL — a branch wanting its own must
     be parenthesized (and is then not at depth 0 here)."""
-    toks = tokenize(text)
+    toks = lex(text)
     depths = depth_map(toks)
     for i, t in enumerate(toks):
         if depths[i] != 0 or t.kind != "word" or i == 0:
@@ -7651,7 +7814,7 @@ def _paren_pred(frag: str) -> str:
     expression"). A single identifier needs no precedence protection, so
     emit it bare; everything else keeps the protective parens.
     """
-    toks = tokenize(frag)
+    toks = lex(frag)
     if len(toks) == 1 and toks[0].kind in ("word", "qident"):
         return frag
     return f"({frag})"
@@ -7661,7 +7824,7 @@ def _duckdb_null_order(order_text: str) -> str:
     """Append NULLS LAST to ascending sort items without an explicit null
     spec: DuckDB defaults to NULLS LAST for ASC where Spark defaults to
     NULLS FIRST (DESC defaults agree)."""
-    toks = tokenize(order_text)
+    toks = lex(order_text)
     # split on top-level commas
     items: list[tuple[int, int]] = []
     d = 0
@@ -7678,7 +7841,7 @@ def _duckdb_null_order(order_text: str) -> str:
     out: list[str] = []
     for s, e in items:
         item = order_text[s:e].strip()
-        itoks = tokenize(item)
+        itoks = lex(item)
         words = [t.lower for t in itoks if t.kind == "word"]
         if "nulls" in words or (words and words[-1] == "desc"):
             out.append(item)
@@ -7689,7 +7852,7 @@ def _duckdb_null_order(order_text: str) -> str:
 
 def _parse_distinct_on(sel: str) -> tuple[str, str] | None:
     """Split ``distinct on (keys) rest`` → (keys, rest); None otherwise."""
-    toks = tokenize(sel)
+    toks = lex(sel)
     if (
         len(toks) < 4
         or toks[0].kind != "word" or toks[0].lower != "distinct"
@@ -7714,7 +7877,7 @@ def _read_func_paths(arg_text: str) -> str | None:
     path, or a literal ['a','b'] list joined with newlines (the
     resolver's multi-file convention). None when the first arg is
     dynamic (left for Spark to fail on, as before)."""
-    toks = tokenize(arg_text)
+    toks = lex(arg_text)
     if not toks:
         return None
     if toks[0].kind == "string":
@@ -7749,7 +7912,7 @@ def _parse_read_args(args: str | None) -> dict[str, str] | None:
     """``read_csv('p', header=true, delim='|')`` tail args → options dict."""
     if not args:
         return None
-    toks = tokenize(args)
+    toks = lex(args)
     parts: list[tuple[int, int]] = []
     d = 0
     start = 0
@@ -7781,7 +7944,7 @@ def _dynamic_pivot(df: DataFrame, spec: str) -> DataFrame:
     distinct scan is a narrow aggregation — safe at scale (bounded by the
     pivot column's cardinality, which any pivot already requires).
     """
-    toks = tokenize(spec)
+    toks = lex(spec)
     words = [t.lower if t.kind == "word" else None for t in toks]
     using_i = None
     for k, w in enumerate(words):
@@ -7800,7 +7963,7 @@ def _dynamic_pivot(df: DataFrame, spec: str) -> DataFrame:
     on_text = spec[toks[0].end : on_stop].strip()
     # optional value filter: ON col IN (v1, v2, …) pins the output columns
     in_values = None
-    otoks = tokenize(on_text)
+    otoks = lex(on_text)
     if (
         len(otoks) >= 3
         and otoks[1].kind == "word"
@@ -7862,7 +8025,7 @@ def _apply_sample(df: DataFrame, sample_text: str) -> DataFrame:
     )
     if m:
         sample_text = m.group(2).strip()
-    toks = tokenize(sample_text)
+    toks = lex(sample_text)
     if not toks or toks[0].kind != "number":
         raise PsqlCompileError(f"unsupported sample spec: {sample_text!r}")
     n = float(toks[0].text)
@@ -7877,7 +8040,7 @@ def _apply_sample(df: DataFrame, sample_text: str) -> DataFrame:
 
 def _same_name_equi_keys(on_text: str, lalias: str, ralias: str) -> list[str] | None:
     """If cond is a conjunction of ``L.c = R.c`` (same c), return the keys."""
-    toks = tokenize(on_text)
+    toks = lex(on_text)
     depths = depth_map(toks)
     # split on top-level AND
     pieces: list[list[Token]] = [[]]
@@ -7910,7 +8073,7 @@ def _same_name_equi_keys(on_text: str, lalias: str, ralias: str) -> list[str] | 
 
 def _rewrite_qualified_cols(on_text: str, ralias: str, renames: dict[str, str]) -> str:
     """Rewrite ``R.c`` → ``R.__psql_r_c`` in a join condition."""
-    toks = tokenize(on_text)
+    toks = lex(on_text)
     out: list[str] = []
     pos = 0
     for i in range(len(toks) - 2):

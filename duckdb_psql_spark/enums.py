@@ -38,7 +38,7 @@ import re
 from dataclasses import dataclass
 
 from .errors import PsqlCompileError
-from .lexer import Token, tokenize
+from .lexer import Token, lex
 
 _MARK = re.compile(r"__enum([vtpq])_(\d+)__")
 
@@ -64,7 +64,7 @@ class EnumType:
 def parse_create_type(stmt: str) -> tuple[EnumType, bool] | None:
     """``CREATE [OR REPLACE] TYPE name AS ENUM ('v' [, …])`` → (type,
     replace); None when the statement is not a CREATE TYPE."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     words = [t.lower if t.kind == "word" else t.kind for t in toks]
     if not words or words[0] != "create":
         return None
@@ -187,7 +187,7 @@ class _Rewriter:
         from .functions.shims import _match_paren_tok, _primary_start
 
         while True:
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 # expr::name  /  expr::ENUM('a','b')
@@ -241,7 +241,7 @@ class _Rewriter:
                     if tn == "enum" and m.group(3):
                         vals = tuple(
                             _lit_value(tt.text)
-                            for tt in tokenize(m.group(3))
+                            for tt in lex(m.group(3))
                             if tt.kind == "string"
                         )
                         if vals:
@@ -285,7 +285,7 @@ class _Rewriter:
             "enum_range_boundary",
         )
         while True:
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 if not (
@@ -458,7 +458,7 @@ class _Rewriter:
         # pinned: enum-vs-varchar degrades to lexicographic — the value
         # form already IS a string, so only the both-enum case rewrites)
         while True:
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 if not (
@@ -496,7 +496,7 @@ class _Rewriter:
         # keeps its negation (round-10 review find: the subject primary
         # must be taken from BEFORE the 'not' token)
         while True:
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 if not (t.kind == "word" and t.lower == "between"):
@@ -564,7 +564,7 @@ class _Rewriter:
 
         # ORDER BY operands that are enum-typed primaries → positional
         while True:
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 if not (
@@ -602,7 +602,7 @@ class _Rewriter:
                                 and self._is_marker_primary(seg)
                             ):
                                 et = self.types[int(m.group(2))]
-                                stoks = tokenize(seg)
+                                stoks = lex(seg)
                                 inner = ""
                                 for k, st in enumerate(stoks):
                                     if (
@@ -684,7 +684,7 @@ class _Rewriter:
                 break
         # extreme aggregates: positional pick, VALUE result
         while True:
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 # ONLY min/max: the container DuckDB degrades
@@ -779,7 +779,7 @@ class _Rewriter:
                     "enum rewrite exceeded the size budget — deeply "
                     "nested enum casts are not supported"
                 )
-            toks = tokenize(sql)
+            toks = lex(sql)
             done = True
             for i, t in enumerate(toks):
                 m = t.kind == "word" and _MARK.fullmatch(t.text)
@@ -789,7 +789,7 @@ class _Rewriter:
                 et = self.types[idx]
                 close = _match_paren_tok(toks, i + 1)
                 inner = sql[toks[i + 1].end : toks[close].start].strip()
-                itoks = tokenize(inner)
+                itoks = lex(inner)
                 arr = _arr(et)
                 desc = ("ENUM" + repr(tuple(et.values))).replace("'", "''")
                 err = (
@@ -859,7 +859,7 @@ def _reject_enum_table_columns(sql: str, enums: dict[str, EnumType]) -> None:
     string carrier would silently lose declaration-order semantics."""
     if not re.match(r"(?is)^\s*create\s+(or\s+replace\s+)?(temp\w*\s+)?table\b", sql):
         return
-    toks = tokenize(sql)
+    toks = lex(sql)
     names = set(enums) | {"enum"}
     # column-type declarations only exist BEFORE a CTAS body: stop at the
     # depth-0 AS (round-10 review find: `create table t as select x mood`
@@ -925,7 +925,7 @@ def _reject_stored_enum_items(sql: str, marked: str) -> None:
     )
     if not m:
         return
-    toks = tokenize(marked)
+    toks = lex(marked)
     depth = 0
     in_select = False
     for k, t in enumerate(toks):

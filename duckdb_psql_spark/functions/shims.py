@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import re
 
-from ..lexer import Token, tokenize
+from ..lexer import Token, lex
 
 # DuckDB name → Spark name, same argument order/semantics (or close enough
 # to be value-identical on the conformance surface).
@@ -253,7 +253,7 @@ def _match_paren_tok(tokens: list[Token], open_i: int) -> int:
 
 def _split_args(text: str) -> list[str]:
     """Split call-argument text on top-level commas."""
-    toks = tokenize(text)
+    toks = lex(text)
     parts: list[str] = []
     d = 0
     pos = 0
@@ -432,7 +432,7 @@ _UNIT_SECONDS = {
 
 def _interval_seconds(text: str) -> int | None:
     """Parse ``INTERVAL '15 minutes'`` / ``INTERVAL 15 MINUTE`` → seconds."""
-    toks = tokenize(text)
+    toks = lex(text)
     if not toks or toks[0].kind != "word" or toks[0].lower != "interval":
         return None
     qty = unit = None
@@ -462,7 +462,7 @@ _UNIT_MONTHS = {
 
 def _interval_months(text: str) -> int | None:
     """Parse ``INTERVAL '1 month'`` / ``INTERVAL 2 YEAR`` → months."""
-    toks = tokenize(text)
+    toks = lex(text)
     if not toks or toks[0].kind != "word" or toks[0].lower != "interval":
         return None
     qty = unit = None
@@ -481,7 +481,7 @@ def _interval_months(text: str) -> int | None:
 
 def _strip_direction(order_text: str) -> tuple[str, bool]:
     """Split a single order key into (key, is_desc); strips ASC/DESC."""
-    toks = tokenize(order_text)
+    toks = lex(order_text)
     if toks and toks[-1].kind == "word" and toks[-1].lower in ("asc", "desc"):
         return order_text[: toks[-1].start].strip(), toks[-1].lower == "desc"
     return order_text.strip(), False
@@ -489,7 +489,7 @@ def _strip_direction(order_text: str) -> tuple[str, bool]:
 
 def _split_order_by(arg: str) -> tuple[str, str] | None:
     """Split ``expr ORDER BY keys`` at top level; None if no ORDER BY."""
-    toks = tokenize(arg)
+    toks = lex(arg)
     d = 0
     for k, t in enumerate(toks):
         if t.kind in ("lparen", "block_open"):
@@ -646,7 +646,7 @@ def rewrite_braces(sql: str) -> str:
     else is left untouched (it was not a DuckDB literal to begin with).
     """
     for _ in range(64):
-        tokens = tokenize(sql)
+        tokens = lex(sql)
         changed = False
         for i, t in enumerate(tokens):
             if t.kind != "op" or t.text != "{":
@@ -744,7 +744,7 @@ def _is_arrayish(arg: str, schema: dict[str, str] | None) -> bool:
 def _strip_outer_parens(e: str) -> str:
     e = e.strip()
     while e.startswith("(") and e.endswith(")"):
-        toks = tokenize(e)
+        toks = lex(e)
         if not toks or toks[0].kind != "lparen":
             break
         try:
@@ -775,7 +775,7 @@ def _literal_type(expr: str):
     if not e:
         return None
     # top-level trailing field access: X.f (scan depth-0 dots from right)
-    toks = tokenize(e)
+    toks = lex(e)
     depth = 0
     for k in range(len(toks) - 1, 0, -1):
         t = toks[k]
@@ -870,10 +870,8 @@ def _hint_type(schema: dict[str, str] | None, base: str) -> str | None:
             "varchar": "string", "text": "string", "char": "string",
             "string": "string",
         }.get(typ, typ)
-    if not schema:
-        return None
     name = base.split(".")[-1].strip().strip('`"').lower()
-    if not re.fullmatch(r"[\w$]+", name):
+    if not re.fullmatch(r"[\w$]+", name) or not schema:
         return None
     return schema.get(name)
 
@@ -889,7 +887,7 @@ def _has_nondet(expr: str) -> bool:
     shim falls back to a single ``round(e, 0)`` (Spark HALF_UP — same
     away-from-zero ties) instead of the branchless three-occurrence
     floor form (ADVICE r6: the CASE branches would re-evaluate)."""
-    toks = tokenize(expr)
+    toks = lex(expr)
     for k, t in enumerate(toks):
         if (
             t.kind == "word"
@@ -911,7 +909,7 @@ def _decimal_arith_expr(schema: dict[str, str] | None, expr: str) -> bool:
     flips the result to DOUBLE (half-even). Lets the int-cast shim pick
     away-mode for expressions like cast(l_quantity * 2 as int) that the
     simple-column hint can't type (ADVICE r6)."""
-    toks = tokenize(expr)
+    toks = lex(expr)
     if not toks:
         return False
     saw_decimal = False
@@ -963,7 +961,7 @@ def rewrite_brackets(sql: str, schema: dict[str, str] | None = None) -> str:
       subscripts return DuckDB's singleton-or-empty LIST shape.
     """
     for _ in range(64):  # restart after each rewrite; bounded
-        tokens = tokenize(sql)
+        tokens = lex(sql)
         changed = False
         for i, t in enumerate(tokens):
             if t.kind != "op" or t.text != "[":
@@ -1027,7 +1025,7 @@ def rewrite_brackets(sql: str, schema: dict[str, str] | None = None) -> str:
                 changed = True
                 break
             # top-level slice colon?
-            itoks = tokenize(inner)
+            itoks = lex(inner)
             d = 0
             colon = None
             for k, it in enumerate(itoks):
@@ -1111,7 +1109,7 @@ def rewrite_brackets(sql: str, schema: dict[str, str] | None = None) -> str:
                 # throws on index 0 — guard numeric indexes. String
                 # subscripts (map keys) skip the zero-guard: comparing a
                 # key to 0 would itself be an ANSI cast error.
-                _it = tokenize(inner.strip())
+                _it = lex(inner.strip())
                 _stringy = (
                     len(_it) == 1 and _it[0].kind == "string"
                 ) or (_hint_type(schema, inner.strip()) or "") == "string"
@@ -1878,7 +1876,7 @@ def _ts_diff_typed(text: str) -> bool:
     TIMESTAMP literals (parens allowed). Timestamp-typed COLUMNS are
     statically invisible — the same documented boundary as
     _interval_typed's bare identifiers."""
-    toks = tokenize(text)
+    toks = lex(text)
     words = [t for t in toks if t.kind == "word"]
     if len(words) != 2 or any(w.lower != "timestamp" for w in words):
         return False
@@ -2028,7 +2026,7 @@ def _rewrite_blob_varchar(sql: str, schema=None) -> str:
     lhs (function renames) before it reaches the ``::`` token, so the
     postfix spelling must rewrite BEFORE the loop. The ``cast(x AS
     varchar)`` spelling is handled inside the cast branch itself."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i, t in enumerate(tokens):
         if not (
@@ -2696,7 +2694,7 @@ def _fix_lambda_index_base(sql: str) -> str:
     Inside the transform/filter family, substitute every body use of the
     index parameter with ``(i + 1)`` so the body keeps DuckDB semantics.
     Processed right-to-left so earlier offsets stay valid."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     # paren stack entries: (token index of '(', call word before it or None)
     stack: list[tuple[int, str | None]] = []
@@ -2858,7 +2856,7 @@ def _rewrite_window_exclude(sql: str) -> str:
     EXCLUDE NO OTHERS is a no-op and just drops."""
     from ..errors import PsqlCompileError
 
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i in range(n):
         t = tokens[i]
@@ -3350,7 +3348,7 @@ def _rewrite_sugar(sql: str) -> str:
       Spark's FILTER clause requires it). The ``filter(list, fn)``
       function is not affected: its ``filter`` is not preceded by ')'.
     """
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     depth = 0
     for i, t in enumerate(tokens):
@@ -3441,7 +3439,7 @@ def _interval_typed(text: str) -> bool:
     type for every operand type that is legal at all. Interval-typed
     COLUMNS otherwise stay statically invisible — documented boundary,
     same class as BIT columns."""
-    toks = tokenize(text)
+    toks = lex(text)
     n = len(toks)
     saw_interval = False
     saw_ident = False
@@ -3551,7 +3549,7 @@ def _rewrite_interval_varchar(sql: str) -> str:
     2 months' — silent text divergence). Mixed year-month + day-time
     intervals don't exist in Spark's type system; those stay untouched
     (loud analysis error)."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i, t in enumerate(tokens):
         e = None
@@ -3594,7 +3592,7 @@ def _rewrite_interval_varchar(sql: str) -> str:
             return _rewrite_interval_varchar(
                 sql[: span[0]] + lit + sql[span[1] :]
             )
-        etoks = tokenize(e)
+        etoks = lex(e)
         if (
             len(etoks) >= 3
             and etoks[0].kind == "word"
@@ -3664,7 +3662,7 @@ def _rewrite_decimal_division(sql: str) -> str:
     the arith-chain pass); bare decimal literals and decimal-hinted
     columns are already double-cast at the division site in the main
     walk."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i, t in enumerate(tokens):
         if t.kind != "op" or t.text != "/":
@@ -3817,7 +3815,7 @@ def _fold_agg_filter(sql: str) -> str:
     rest…)`` for composite-shim aggregates (probe: corr(..) FILTER
     raised FUNCTION_WITH_UNSUPPORTED_SYNTAX once the corr shim expanded
     to its guarded-moments form)."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i, t in enumerate(tokens):
         if not (
@@ -3852,7 +3850,7 @@ def _fold_agg_filter(sql: str) -> str:
             # BOTH sides: their shims expand to INDEPENDENT per-side
             # moments, so a one-sided fold filters one moment only
             # (probe: corr FILTER off by 7e-4).
-            at = tokenize(a)
+            at = lex(a)
             return not (len(at) == 1 and at[0].kind in ("number", "string"))
 
         args = [
@@ -3877,7 +3875,7 @@ def _rewrite_bit_ops(sql: str) -> str:
     batch found Spark's integer-domain operators error or mis-compute
     on the string representation). Shifts match DuckDB: bits fall off,
     zero-fill keeps the width (probe: '0110'::BIT << 2 = '1000')."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i, t in enumerate(tokens):
         if (
@@ -3989,7 +3987,7 @@ def _rewrite_binary_ops(sql: str) -> str:
     ``(x % 5) ** 2`` corrupted by the ``%`` nullif rewrite). Restart on
     every mutation; left-associativity of power chains falls out
     (power(a, b) becomes the next lhs primary)."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i, t in enumerate(tokens):
         if t.kind != "op":
@@ -4088,7 +4086,7 @@ def _rewrite_like_backslashes(sql: str) -> str:
     Non-literal patterns (columns/expressions) are left as-is — the
     engine can't see their content, and wrapping every one in replace()
     would tax the common no-backslash case; documented boundary."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     out: list[str] = []
     pos = 0
@@ -4131,7 +4129,7 @@ def _rewrite_factorials(sql: str) -> str:
     whole depth-0 arithmetic chain to the left (stops at comparisons,
     commas, and clause keywords: ``3! = 6`` is TRUE, ``case when 1=1
     then 3! end`` = 6)."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     for i in range(n - 1, -1, -1):  # right-to-left: nested x!! stays valid
         t = tokens[i]
@@ -4185,7 +4183,7 @@ def _rewrite_like_contains_chain(sql: str) -> str:
     clause and no operator after the pattern (``like p || q`` binds
     into the pattern). Measured at sf10: q13 fold residual 0.838 s →
     see BENCH_Q13_FOLD_AB_sf10.json round-12 update."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     n = len(tokens)
     ctx_words = {
         "and", "or", "not", "where", "when", "then", "else", "on",
@@ -4306,7 +4304,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
         sql = _rewrite_like_contains_chain(sql)
     if "exclude" in sql.lower() and re.search(r"(?is)\bover\s*\(", sql):
         sql = _rewrite_window_exclude(sql)
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     out: list[str] = []
     pos = 0
     i = 0
@@ -4420,7 +4418,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                 return None
 
             left = _date_operand_left(i - 1) if i >= 1 else None
-            right = _date_operand_right(i + 1)
+            right = _date_operand_right(i + 1) if left is not None else None
             if (
                 left is not None
                 and right is not None
@@ -4760,15 +4758,15 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
         # decimal literal or decimal-typed column is involved — cast such
         # operands to double at the division site
         if (
+            (i > 0 and tokens[i - 1].kind == "op" and tokens[i - 1].text == "/")
+            or (i + 1 < n and tokens[i + 1].kind == "op" and tokens[i + 1].text == "/")
+        ) and (
             (t.kind == "number" and "." in t.text)
             or (
                 t.kind in ("word", "qident")
                 and not (i + 1 < n and tokens[i + 1].kind == "lparen")
                 and (_hint_type(schema, t.text) or "").startswith("decimal")
             )
-        ) and (
-            (i > 0 and tokens[i - 1].kind == "op" and tokens[i - 1].text == "/")
-            or (i + 1 < n and tokens[i + 1].kind == "op" and tokens[i + 1].text == "/")
         ):
             if pos <= t.start:
                 out.append(sql[pos : t.start])
@@ -4816,7 +4814,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                 # 1.166…), a power operator, or a double-returning
                 # function suffices. A cast back to an integral type
                 # re-integralizes the whole operand.
-                toks2 = tokenize(txt.strip())
+                toks2 = lex(txt.strip())
                 if re.search(
                     r"(?is)\bas\s+(u?(tiny|small|big|huge)?int(eger)?\d*"
                     r"|long|short|byte)\s*\)\s*$",
@@ -4974,7 +4972,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
             # inputs; non-numeric→int casts are not valid DuckDB anyway)
             if w in ("cast", "try_cast") and is_call:
                 close = _match_paren_tok(tokens, i + 1)
-                inner_toks = tokenize(sql[tokens[i + 1].end : tokens[close].start])
+                inner_toks = lex(sql[tokens[i + 1].end : tokens[close].start])
                 as_pos = None
                 depth = 0
                 for k, it in enumerate(inner_toks):
@@ -5045,7 +5043,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                         # even.
                         e_txt = expr_txt
                         was_round = False
-                        rt = tokenize(e_txt)
+                        rt = lex(e_txt)
                         if (
                             len(rt) >= 3
                             and rt[0].kind == "word"
@@ -5061,7 +5059,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                                 e_txt = rargs[0]
                                 was_round = True
                         ht = _hint_type(schema, e_txt) or ""
-                        et = tokenize(e_txt)
+                        et = lex(e_txt)
                         is_num_lit = len(et) == 1 and et[0].kind == "number"
                         # string LITERALS parse as decimals in DuckDB too:
                         # cast('0.5' as int) = 1 (half away), not rint
@@ -5562,7 +5560,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                 if len(margs) == 1:
                     a1 = margs[0].strip()
                     ht1 = _hint_type(schema, a1) or ""
-                    et1 = tokenize(a1)
+                    et1 = lex(a1)
                     is_int_arg = (
                         ht1 in ("int", "bigint", "smallint", "tinyint")
                         or (len(et1) == 1 and et1[0].kind == "number"
@@ -6652,7 +6650,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                     l, a, b = (apply_shims(x) for x in args)
                     out.append(sql[pos : t.start])
                     a0 = args[0].strip()
-                    a0t = tokenize(a0)
+                    a0t = lex(a0)
                     is_str = (len(a0t) == 1 and a0t[0].kind == "string") or (
                         (_hint_type(schema, a0) or "") == "string"
                     )
@@ -6705,7 +6703,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                     # 3-month buckets land on Jan/Apr/Jul/Oct)
                     ts = apply_shims(args[1])
                     a1 = args[1].strip()
-                    a1t = tokenize(a1)
+                    a1t = lex(a1)
                     body = (
                         f"add_months(date '2000-01-01', "
                         f"cast(floor(months_between(date_trunc('month', {ts}),"
@@ -6746,7 +6744,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
                         f" + ({off_sql}))"
                     )
                     # DATE input → DATE output (DuckDB keeps the type)
-                    a1t = tokenize(a1)
+                    a1t = lex(a1)
                     if (_hint_type(schema, a1) == "date") or (
                         len(a1t) == 2
                         and a1t[0].kind == "word"
@@ -7287,7 +7285,7 @@ def apply_shims(sql: str, schema: dict[str, str] | None = None) -> str:
             if w in ("bin", "to_binary") and is_call:
                 close = _match_paren_tok(tokens, i + 1)
                 arg = sql[tokens[i + 1].end : tokens[close].start]
-                at = tokenize(arg.strip())
+                at = lex(arg.strip())
                 if (len(at) == 1 and at[0].kind == "string") or (
                     (_hint_type(schema, arg) or "") == "string"
                 ):

@@ -16,6 +16,8 @@ find clause boundaries at paren-depth zero.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 # Multi-char operators, longest first (maximal munch).
@@ -103,6 +105,36 @@ def strip_comments(sql: str) -> str:
         out.append(c)
         i += 1
     return "".join(out)
+
+
+_memo = threading.local()
+
+
+@contextmanager
+def lexing_once():
+    """Within the block (one statement's compile), ``lex`` tokenizes each
+    distinct text once: the statement parsers, the stage splitter, the
+    passes and the shims all read the same text, and share its tokens."""
+    outer = getattr(_memo, "toks", None)
+    if outer is None:
+        _memo.toks = {}
+    try:
+        yield
+    finally:
+        if outer is None:
+            _memo.toks = None
+
+
+def lex(sql: str) -> list[Token]:
+    """``tokenize(sql)``, once per text inside ``lexing_once``. The list
+    is shared: callers read it and never change it."""
+    memo = getattr(_memo, "toks", None)
+    if memo is None:
+        return tokenize(sql)
+    toks = memo.get(sql)
+    if toks is None:
+        toks = memo[sql] = tokenize(sql)
+    return toks
 
 
 def tokenize(sql: str) -> list[Token]:

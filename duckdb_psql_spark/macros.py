@@ -30,7 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from .errors import PsqlCompileError, PsqlParseError
-from .lexer import Token, tokenize
+from .lexer import Token, lex
 
 _MAX_EXPANSION_ROUNDS = 16
 
@@ -51,7 +51,7 @@ class Macro:
 
 def parse_create_macro(stmt: str) -> tuple[Macro, bool] | None:
     """Return (macro, or_replace) for a CREATE MACRO statement, else None."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     i = 0
     if not (i < len(toks) and toks[i].kind == "word" and toks[i].lower == "create"):
         return None
@@ -129,7 +129,7 @@ def parse_create_macro(stmt: str) -> tuple[Macro, bool] | None:
 
 def parse_drop_macro(stmt: str) -> tuple[str, bool] | None:
     """Return (name, if_exists) for DROP MACRO/FUNCTION, else None."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     if not (
         len(toks) >= 3
         and toks[0].kind == "word"
@@ -240,7 +240,7 @@ def _substitute(macro: Macro, pos_args: list[str], named: dict[str, str]) -> str
             f"macro {macro.name} missing argument(s): {', '.join(missing)}"
         )
     body = macro.body
-    toks = tokenize(body)
+    toks = lex(body)
     out: list[str] = []
     last = 0
     for t in toks:
@@ -267,7 +267,7 @@ def expand_macros(text: str, macros: dict[str, Macro]) -> str:
 
 
 def _expand_once(text: str, macros: dict[str, Macro]) -> str:
-    toks = tokenize(text)
+    toks = lex(text)
     out: list[str] = []
     last = 0
     i = 0

@@ -115,11 +115,13 @@ def _pack_strings(offsets: np.ndarray, data: np.ndarray) -> tuple[np.ndarray, np
     return mat.view("<u8"), lengths
 
 
-# Strings longer than this hash one-at-a-time instead of through the
-# padded matrix: _pack_strings allocates O(n x longest), so one huge
-# token among many short ones (a base64 blob in a web corpus) must not
-# multiply the whole batch's memory.
+# Strings longer than this leave the batch's padded matrix, whose size
+# is O(n x longest): one huge token among many short ones (a base64 blob
+# in a web corpus) must not multiply the whole batch's memory ...
 _PACK_MAXLEN = 1024
+# ... and hash in length-sorted chunks of at most this many matrix bytes
+# (a longer string alone), each chunk one vectorized pass
+_LONG_CHUNK_BYTES = 1 << 20
 
 
 def _string_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
@@ -146,38 +148,46 @@ def _string_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
     return offs.astype(np.int64), data
 
 
+def _hash_rows(offs: np.ndarray, data: np.ndarray, lengths: np.ndarray,
+               rows: np.ndarray) -> np.ndarray:
+    """xxh64 of the strings ``rows`` through one padded matrix, their bytes
+    compacted by one gather (byte k of string j reads
+    ``data[offs[rows[j]] + k]``)."""
+    r_len = lengths[rows]
+    r_offs = np.zeros(rows.size + 1, dtype=np.int64)
+    np.cumsum(r_len, out=r_offs[1:])
+    shift = np.repeat(offs[rows] - r_offs[:-1], r_len)
+    words, lens = _pack_strings(r_offs, data[shift + np.arange(int(r_offs[-1]), dtype=np.int64)])
+    return xxh64_words(words, lens)
+
+
 def xxh64_strings(arr) -> np.ndarray:
     """Spark-compatible xxhash64 (seed 42) of every element of a pyarrow
     string/large_string array with no nulls, as int64[n] (signed, like
-    the JVM). Over-long strings bypass the padded matrix (see
-    _PACK_MAXLEN) so one blob cannot blow up the batch's memory."""
+    the JVM). Strings over _PACK_MAXLEN bypass the batch's padded matrix
+    and hash in length-sorted chunks of _LONG_CHUNK_BYTES, so a blob
+    cannot blow up the batch's memory nor cost a pass of its own."""
     offs, data = _string_buffers(arr)
     lengths = offs[1:] - offs[:-1]
     n = len(lengths)
-    out = np.empty(n, dtype=np.uint64)
     if n == 0:
-        return out.view(np.int64)
+        return np.empty(0, dtype=np.int64)
     long_rows = np.nonzero(lengths > _PACK_MAXLEN)[0]
-    if long_rows.size:
-        short = np.nonzero(lengths <= _PACK_MAXLEN)[0]
-        if short.size:
-            # compact the short strings into their own buffer: one gather,
-            # byte k of short string j reads data[offs[short[j]] + k]
-            s_len = lengths[short]
-            s_offs = np.zeros(short.size + 1, dtype=np.int64)
-            np.cumsum(s_len, out=s_offs[1:])
-            shift = np.repeat(offs[short] - s_offs[:-1], s_len)
-            s_data = data[shift + np.arange(int(s_offs[-1]), dtype=np.int64)]
-            words, lens = _pack_strings(s_offs, s_data)
-            out[short] = xxh64_words(words, lens)
-        for r in long_rows:
-            seg = data[offs[r] : offs[r + 1]]
-            o1 = np.array([0, len(seg)], dtype=np.int64)
-            w1, l1 = _pack_strings(o1, seg)
-            out[r] = xxh64_words(w1, l1)[0]
-        return out.view(np.int64)
-    words, lens = _pack_strings(offs, data)
-    return xxh64_words(words, lens).view(np.int64)
+    if not long_rows.size:
+        words, lens = _pack_strings(offs, data)
+        return xxh64_words(words, lens).view(np.int64)
+    out = np.empty(n, dtype=np.uint64)
+    short = np.nonzero(lengths <= _PACK_MAXLEN)[0]
+    if short.size:
+        out[short] = _hash_rows(offs, data, lengths, short)
+    by_len = long_rows[np.argsort(lengths[long_rows], kind="stable")]
+    start = 0
+    for end in range(1, by_len.size + 1):
+        # close the chunk before the string that would overflow it
+        if end == by_len.size or (end + 1 - start) * lengths[by_len[end]] > _LONG_CHUNK_BYTES:
+            out[by_len[start:end]] = _hash_rows(offs, data, lengths, by_len[start:end])
+            start = end
+    return out.view(np.int64)
 
 
 def _tokenize(texts):

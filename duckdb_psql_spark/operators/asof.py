@@ -28,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from ..errors import PsqlCompileError
-from ..lexer import depth_map, tokenize
+from ..lexer import depth_map, lex
 
 
 @dataclass
@@ -40,7 +40,7 @@ class _AsofCond:
 
 
 def _parse_on(on_text: str, left_alias: str, right_alias: str) -> _AsofCond:
-    toks = tokenize(on_text)
+    toks = lex(on_text)
     depths = depth_map(toks)
     pieces: list[list] = [[]]
     for t, d in zip(toks, depths):

@@ -44,9 +44,10 @@ Combination identities (G = one output group, k its key):
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from ..lexer import tokenize
+from ..lexer import lex
 
 _AGG_FNS = ("count", "sum", "min", "max")
 
@@ -91,7 +92,7 @@ def _bare_col(text: str, *aliases: str | None) -> str | None:
 
 
 def _split_conjuncts(text: str) -> list[str]:
-    toks = tokenize(text)
+    toks = lex(text)
     parts: list[str] = []
     d = 0
     pos = 0
@@ -110,7 +111,7 @@ def _split_conjuncts(text: str) -> list[str]:
 def _right_only(text: str, right_cols: set[str], r_alias: str | None) -> bool:
     """True when every identifier in ``text`` is a right-side column (or
     an allowed keyword/literal)."""
-    toks = tokenize(text)
+    toks = lex(text)
     i = 0
     n = len(toks)
     while i < n:
@@ -160,7 +161,7 @@ def _right_expr(text: str, right_cols: set[str], r_alias: str | None) -> bool:
     columns. Function calls are allowed (their names are not column
     references); cast type names are allowed after AS; subqueries,
     window frames, and DISTINCT bail."""
-    toks = tokenize(text)
+    toks = lex(text)
     i = 0
     n = len(toks)
     prev_word = None
@@ -201,12 +202,13 @@ def _right_expr(text: str, right_cols: set[str], r_alias: str | None) -> bool:
 def match_eager_agg(
     join_stage,
     agg_stage,
-    left_cols: list[str],
-    right_cols: list[str],
+    left_cols: "Callable[[], list[str]]",
+    right_cols: "Callable[[], list[str]]",
     spec,
     l_alias: str | None,
 ) -> EagerAggPlan | None:
-    """Try to match the pattern; None → compile the stages normally."""
+    """Try to match the pattern; None → compile the stages normally.
+    The sides' columns are read only once the stages' shapes match."""
     how = spec.how_words.lower().split()
     if how not in (["join"], ["inner", "join"], ["left", "join"],
                    ["left", "outer", "join"]):
@@ -234,8 +236,8 @@ def match_eager_agg(
                   agg_stage.sample, agg_stage.setop_tail, agg_stage.ext_verb)
     ) or agg_stage.where:
         return None
-    lc = {c.lower() for c in left_cols}
-    rc = {c.lower() for c in right_cols}
+    lc = {c.lower() for c in left_cols()}
+    rc = {c.lower() for c in right_cols()}
     r_alias = spec.alias
     is_left = how[0] == "left"
 
@@ -274,7 +276,7 @@ def match_eager_agg(
 
     def _parse_agg(item: str) -> tuple[str, str | None, str] | None:
         """`fn(<expr>) as alias` with balanced parens → (fn, expr, alias)."""
-        toks = tokenize(item)
+        toks = lex(item)
         if (
             len(toks) < 5
             or toks[0].kind != "word"

@@ -34,7 +34,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from ..errors import PsqlCompileError, PsqlParseError
-from ..lexer import tokenize
+from ..lexer import lex
 
 
 @dataclass
@@ -68,7 +68,7 @@ class MergeStmt:
 def parse_merge(stmt: str) -> MergeStmt | None:
     """Parse ``MERGE INTO t [[AS] a] USING s [[AS] b] ON cond WHEN …``.
     Returns None when the statement isn't a MERGE (caller falls through)."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     words = [t.lower if t.kind == "word" else None for t in toks]
     if words[:2] != ["merge", "into"]:
         return None
@@ -117,7 +117,7 @@ def parse_merge(stmt: str) -> MergeStmt | None:
         src_end_text = toks[src_end].start
     source_text = stmt[toks[src_start].start : src_end_text].strip()
     if source_alias is None:
-        stoks = tokenize(source_text)
+        stoks = lex(source_text)
         if len(stoks) == 1 and stoks[0].kind in ("word", "qident"):
             source_alias = stoks[0].text.strip('"`')
         else:
@@ -165,7 +165,7 @@ def parse_merge(stmt: str) -> MergeStmt | None:
 
 
 def _parse_clause(text: str) -> MergeClause:
-    toks = tokenize(text)
+    toks = lex(text)
     words = [t.lower if t.kind == "word" else None for t in toks]
     i = 1  # past WHEN
     negated = False

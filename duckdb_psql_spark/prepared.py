@@ -19,12 +19,12 @@ evaluation jobs.
 from __future__ import annotations
 
 from .errors import PsqlCompileError, PsqlParseError
-from .lexer import tokenize
+from .lexer import lex
 
 
 def parse_prepare(stmt: str) -> tuple[str, str] | None:
     """Return (name, body) for ``PREPARE name AS <statement>``, else None."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     if not (toks and toks[0].kind == "word" and toks[0].lower == "prepare"):
         return None
     if len(toks) < 3 or toks[1].kind not in ("word", "qident"):
@@ -39,7 +39,7 @@ def parse_prepare(stmt: str) -> tuple[str, str] | None:
 
 def parse_execute(stmt: str) -> tuple[str, list[str], dict[str, str]] | None:
     """Return (name, positional_args, named_args) for EXECUTE, else None."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     if not (toks and toks[0].kind == "word" and toks[0].lower == "execute"):
         return None
     if len(toks) < 2 or toks[1].kind not in ("word", "qident"):
@@ -59,7 +59,7 @@ def parse_execute(stmt: str) -> tuple[str, list[str], dict[str, str]] | None:
 
 def parse_deallocate(stmt: str) -> str | None:
     """Return the name for ``DEALLOCATE [PREPARE] name``, else None."""
-    toks = tokenize(stmt)
+    toks = lex(stmt)
     if not (toks and toks[0].kind == "word" and toks[0].lower == "deallocate"):
         return None
     i = 1
@@ -79,7 +79,7 @@ def bind(name: str, body: str, pos_args: list[str], named: dict[str, str]) -> st
     precedence. Mixing styles follows DuckDB: ``?`` and ``$N`` share the
     positional list; ``$name`` draws from named arguments.
     """
-    toks = tokenize(body)
+    toks = lex(body)
     out: list[str] = []
     last = 0
     next_q = 0

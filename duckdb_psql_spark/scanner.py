@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from .lexer import Token, depth_map, tokenize
+from .lexer import Token, depth_map, lex
 
 
 @dataclass(frozen=True)
@@ -43,7 +43,7 @@ def first_statement(sql: str) -> str:
     (/root/reference/src/psql_extension.cpp:87-89) and trailing-semicolon
     tolerance (/root/reference/test/sql/psql.test:21-23).
     """
-    toks = tokenize(sql)
+    toks = lex(sql)
     depths = depth_map(toks)
     for t, d in zip(toks, depths):
         if t.kind == "semi" and d == 0:
@@ -57,7 +57,7 @@ def has_psql_tokens(sql: str) -> bool:
     The pass-through predicate (cpp:76-79): when False the statement goes
     verbatim to the host engine (``spark.sql``).
     """
-    toks = tokenize(sql)
+    toks = lex(sql)
     for t in toks:
         if t.kind == "block_open" or t.kind == "block_close":
             return True
@@ -79,7 +79,7 @@ def find_blocks(sql: str) -> list[Block]:
     Matches the reference's lazy regex semantics (cpp:58): the first
     ``|)`` after a ``(|`` closes it; blocks cannot nest (README.md:91).
     """
-    toks = tokenize(sql)
+    toks = lex(sql)
     blocks: list[Block] = []
     open_tok: Token | None = None
     for t in toks:
@@ -95,7 +95,7 @@ def find_blocks(sql: str) -> list[Block]:
 
 def split_stages(sql: str) -> list[str]:
     """Split a pipeline on whitespace-surrounded ``|>`` at paren depth 0."""
-    toks = tokenize(sql)
+    toks = lex(sql)
     depths = depth_map(toks)
     cuts: list[tuple[int, int]] = []  # (start,end) of the pipe token
     for t, d in zip(toks, depths):

@@ -32,7 +32,7 @@ import re
 from dataclasses import dataclass
 
 from .errors import PsqlCompileError
-from .lexer import tokenize
+from .lexer import lex
 
 
 @dataclass
@@ -108,7 +108,7 @@ def rewrite_sequence_calls(
     Returns (rewritten_stmt, {sequence_name: nextval_call_count}).
     Token-aware: strings/comments are never touched.
     """
-    tokens = tokenize(stmt)
+    tokens = lex(stmt)
     call_counts: dict[str, int] = {}
     # first pass: count nextval sites per sequence (the per-site stride)
     sites: list[tuple[int, int, str, str]] = []  # (start, end, kind, seq)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from .errors import PsqlParseError
-from .lexer import Token, depth_map, tokenize
+from .lexer import Token, depth_map, lex
 
 # Words that may begin a join clause (followed, possibly via modifiers, by JOIN).
 _JOIN_MODIFIERS = {
@@ -146,7 +146,7 @@ def _clause_start_at(sql: str, tokens: list[Token], depths: list[int], i: int) -
 
 def parse_stage(sql: str) -> Stage:
     """Parse one stage tail (text after ``|>``) into a clause map."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     depths = depth_map(tokens)
     if not tokens:
         raise PsqlParseError('syntax error at or near ""')
@@ -296,7 +296,7 @@ _READ_FUNCS = {"read_csv", "read_csv_auto", "read_parquet", "parquet_scan",
 
 def parse_head(sql: str) -> Head | None:
     """Parse a ``from <source> …`` head stage; None if not FROM-led."""
-    tokens = tokenize(sql)
+    tokens = lex(sql)
     if not tokens or tokens[0].kind != "word" or tokens[0].lower != "from":
         return None
     if len(tokens) == 1:
@@ -328,7 +328,7 @@ def parse_head(sql: str) -> Head | None:
             and tokens[i + 1].kind == "lparen"
         ):
             j = _match_paren(tokens, i + 1)
-            inner = tokenize(sql[tokens[i + 1].end : tokens[j].start])
+            inner = lex(sql[tokens[i + 1].end : tokens[j].start])
             if inner and inner[0].kind == "string":
                 path = inner[0].text[1:-1].replace("''", "'")
                 return _head_with_tail("stream", path, sql, tokens, j + 1)
@@ -340,7 +340,7 @@ def parse_head(sql: str) -> Head | None:
             and tokens[i + 1].kind == "lparen"
         ):
             j = _match_paren(tokens, i + 1)
-            inner = tokenize(sql[tokens[i + 1].end : tokens[j].start])
+            inner = lex(sql[tokens[i + 1].end : tokens[j].start])
             if inner and inner[0].kind == "string":
                 path = inner[0].text[1:-1].replace("''", "'")
                 args = sql[tokens[i + 1].end : tokens[j].start]

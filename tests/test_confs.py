@@ -101,13 +101,13 @@ def test_confs_written_only_at_allowed_sites():
     assert sites == CONF_WRITERS
 
 
-# the compiler's temp-view registrations: the per-statement binder, the
-# CTE binder and the statement end restoring what a CTE shadowed, and the
-# DDL/DML statements that (re)define a user-named view (DELETE, UPDATE,
-# TRUNCATE and MERGE through the copy-on-write _write_back)
+# the compiler's temp-view registrations: the session-catalog entry that
+# the per-statement binder and the CTE binder both go through, the
+# statement end restoring what a CTE shadowed, and the DDL/DML statements
+# that (re)define a user-named view (DELETE, UPDATE, TRUNCATE and MERGE
+# through the copy-on-write _write_back)
 VIEW_WRITERS = {
-    "Compiler._bind",
-    "Compiler._bind_cte",
+    "Compiler._register_view",
     "Compiler._end_statement",
     "Compiler._compile_statement_locked",
     "Compiler._write_back",
