@@ -491,7 +491,8 @@ class Compiler:
         self._of_rows = jsql.classic.Dataset.ofRows
         # _view_relation's view definition: the CatalogTable that
         # CreateViewCommand stores for a DataFrame's temp view (Spark's
-        # defaults, the analyzed-plan marker), built per name without
+        # defaults for parameters 5-21, with parameter 12, properties,
+        # holding the analyzed-plan marker), built per name without
         # running the command (its QueryExecution costs ~9 ms a view)
         catalog = jsql.catalyst.catalog
         table = catalog.CatalogTable

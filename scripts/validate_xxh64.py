@@ -68,6 +68,18 @@ def main() -> None:
     print(f"random byte strings: {len(rand_strs)} checked, {len(bad)} mismatches")
     assert not bad, [(rand_strs[i], got[i], want[i]) for i in bad[:3]]
 
+    # 1b. strings over _PACK_MAXLEN among short ones: the length-sorted
+    # chunks of xxh64_arrow_strings, against Spark
+    long_strs = [
+        "".join(chr(rng.randrange(1, 128)) for _ in range(rng.randrange(1000, 6000)))
+        for _ in range(60)
+    ] + [s.decode("latin-1") for s in rand_strs]
+    got = [int(x) for x in xxh64_arrow_strings(pa.array(long_strs)).view(np.int64)]
+    want = spark_xxh64(spark, long_strs)
+    bad = [i for i, (g, w) in enumerate(zip(got, want)) if g != w]
+    print(f"long strings (arrow path): {len(long_strs)} checked, {len(bad)} mismatches")
+    assert not bad, [(len(long_strs[i]), got[i], want[i]) for i in bad[:3]]
+
     # 2. every distinct corpus token + every full text
     toks = [
         r.t
